@@ -16,7 +16,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from curw_flo2d_data_manager_spark import queries as _q
+from curw_flo2d_data_manager_spark import queries as _registry
+from curw_flo2d_data_manager_spark.queries import parity_tpch as _q
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -26,8 +27,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _q.queries()
+    return _registry.queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    return _q.oracle_sql()
+    return _registry.oracle_sql()

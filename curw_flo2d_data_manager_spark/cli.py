@@ -136,6 +136,27 @@ def _overwrite_parquet(df, target: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _read_committed_parquet(spark, target: str):
+    """The table last committed at ``target`` by ``_overwrite_parquet``,
+    or None on a true first run. A crash between that function's two
+    renames leaves ``target`` absent and the committed copy at
+    ``<target>.tmp-old``; it is renamed back first, so the next run
+    merges into it instead of taking it for a first run and deleting
+    it in the swap's cleanup."""
+    from pyspark.errors import AnalysisException
+
+    old = target + ".tmp-old"
+    if not os.path.exists(target) and os.path.exists(old):
+        os.rename(old, target)
+    try:
+        return spark.read.parquet(target)
+    except AnalysisException:
+        # first run: no relation at `target`. Any other error must
+        # propagate — swallowing it would silently discard the history
+        # on the overwrite that follows.
+        return None
+
+
 def _load_store(spark, store_dir: str):
     from curw_flo2d_data_manager_spark.store import TimeseriesStore
 
@@ -360,7 +381,6 @@ def cmd_init(args) -> None:
 
 
 def cmd_extract_water_level(args) -> None:
-    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     from curw_flo2d_data_manager_spark.plans.extract import (
@@ -442,14 +462,12 @@ def cmd_extract_water_level(args) -> None:
         forecast = forecast.unionByName(fp_forecast)
 
     target = os.path.join(args.store, "fcst_data")
-    try:
-        existing = spark.read.parquet(target)
-        merged = merge_upsert(existing, forecast, keys=["tms_id", "time", "fgt"])
-    except AnalysisException:
-        # first run: no existing forecast relation at `target`. Any
-        # other error must propagate — swallowing it would silently
-        # discard the forecast history on the overwrite below.
-        merged = forecast
+    existing = _read_committed_parquet(spark, target)
+    merged = (
+        forecast
+        if existing is None
+        else merge_upsert(existing, forecast, keys=["tms_id", "time", "fgt"])
+    )
     _overwrite_parquet(merged, target)
     # run-dim dates: start_date pinned at series creation (reference
     # update_start_date, extract_water_level.py:213-214), fgt advanced
@@ -457,10 +475,7 @@ def cmd_extract_water_level(args) -> None:
     # (legacy fgt-only schema upgraded in place) and full-outer-merges
     # the new payload's per-series aggregate.
     dim_target = os.path.join(args.store, "fcst_latest_fgt")
-    try:
-        run_dim = update_run_dates(spark.read.parquet(dim_target), forecast)
-    except AnalysisException:
-        run_dim = update_run_dates(None, forecast)
+    run_dim = update_run_dates(_read_committed_parquet(spark, dim_target), forecast)
     _overwrite_parquet(run_dim, dim_target)
 
     # K8 run provenance (reference: extract_water_level.py:588-591 —
@@ -482,10 +497,8 @@ def cmd_extract_water_level(args) -> None:
         template_path=args.template,
     )
     rm_target = os.path.join(args.store, "run_metadata")
-    try:
-        rm = insert_run_metadata(spark.read.parquet(rm_target), record)
-    except AnalysisException:
-        rm = record
+    prior = _read_committed_parquet(spark, rm_target)
+    rm = record if prior is None else insert_run_metadata(prior, record)
     _overwrite_parquet(rm, rm_target)
     print(f"upserted forecasts into {target}")
 

@@ -18,8 +18,8 @@ Carve-out discipline (the BPE-encoder precedent, ``operators/bpe.py``):
   bit for bit, and ``tests/test_arrowsig.py`` pins every output column
   against the expression twin on organic + adversarial corpora.
 * Gated **headline** queries keep the pure-expression plans (zero
-  Python nodes); the Arrow engine is opt-in per call site
-  (pipeline smokes, composition gates, operator ``engine=`` params).
+  Python nodes); the Arrow engine is opt-in per call site (the
+  pipeline smokes call ``with_corpus_signals_arrow`` directly).
 * Shingle output is a SET: ``_sh`` comes back sorted-distinct (the
   expression twin is first-occurrence-distinct).  Every consumer
   (minhash, array_intersect/union Jaccard) is order-insensitive;

@@ -154,7 +154,6 @@ def minhash_lsh_pairs(
     jaccard_threshold: float | None = 0.5,
     max_bucket_size: int | None = 2000,
     observation=None,
-    engine: str = "expr",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash + banded LSH,
     optionally verified with exact shingle Jaccard.
@@ -185,45 +184,14 @@ def minhash_lsh_pairs(
     # per-position string allocation, and planted/identical-set
     # semantics are hash-function-independent (identical word arrays →
     # identical hash sets → every band collides).
-    #
-    # ``engine="arrow"`` computes shingles + signature in the round-15
-    # vectorized mapInArrow carve-out (operators/arrowsig.py) —
-    # bit-identical signatures and shingle SETS (pinned in
-    # tests/test_arrowsig.py), so the returned pairs and jaccard
-    # values are unchanged; ``_sh`` comes back sorted instead of
-    # first-occurrence order, which both consumers here (min fold,
-    # array_intersect/union sizes) ignore.  The default stays "expr"
-    # so gated headline plans remain Python-free (§2.12 discipline);
-    # composition gates and the pipeline opt in where the corpus is
-    # large enough for the vectorized batch work to pay for the
-    # boundary.
     base = ensure_min_partitions(df).select(
         F.col(id_col).alias("_id"), text_col
     )
-    if engine == "arrow":
-        from curw_flo2d_data_manager_spark.operators.arrowsig import (
-            with_corpus_signals_arrow,
-        )
-
-        sig_df = with_corpus_signals_arrow(
-            base.select(
-                "_id",
-                F.transform(
-                    words(text_col), lambda x: F.xxhash64(x)
-                ).alias("_hw"),
-            ),
-            hw_col="_hw",
-            sh_col="_sh",
-            sig_col="_sig",
-            num_hashes=num_hashes,
-            shingle_n=shingle_n,
-        )
-    else:
-        sig_df = with_shingle_hashes(
-            base, text_col, "_sh", shingle_n
-        ).select("_id", "_sh").withColumn(
-            "_sig", minhash_signature(F.col("_sh"), num_hashes)
-        )
+    sig_df = with_shingle_hashes(
+        base, text_col, "_sh", shingle_n
+    ).select("_id", "_sh").withColumn(
+        "_sig", minhash_signature(F.col("_sh"), num_hashes)
+    )
     # The signature/shingle relation feeds three plan branches (band
     # join + both verification joins); persist it once instead of
     # recomputing the shingling scan three times. Spills to disk at

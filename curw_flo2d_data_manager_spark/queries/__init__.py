@@ -1,549 +1,19 @@
-"""Query registry package (split from the former single-module queries.py in
-round 11): every top-level name of every submodule is re-exported here, so
-``from curw_flo2d_data_manager_spark import queries as q`` exposes the same
-attribute surface the module always had (REGISTRY, DRIVER_WINDOW, queries,
-oracle_sql, every query function, every *_SQL constant, and the _t/_events
-helpers).
+"""Query registry package: every implemented operator as a (Spark query,
+DuckDB oracle SQL) pair over the driver's synthetic tables.
 
-New queries go in a NEW per-round/per-family module + one import block here
-+ a REGISTRY entry — the single-file append-forever growth pattern ended at
-10.6k lines.
+Queries live in per-family modules (``parity_tpch``, ``corpus_core``,
+``sim_streams``, ...). ``registry.REGISTRY`` is the single registration
+point: one module-qualified ``"name": (module.fn, module.SQL)`` line per
+query, in contractual driver order. This package exports only the
+registry surface; import a query function or SQL constant from the
+module that defines it.
 """
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: F401
-    annotations,
-    Callable,
-    DataFrame,
-    SparkSession,
-    Window,
-    F,
-    _ln_ratio_det_sql,
-    cumulative_fraction,
-    cluster_assign,
-    connected_components,
-    exact_dedup,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    passage_dedup,
-    simhash_near_pairs,
-    gap_fill_cross,
-    ensure_min_partitions,
-    nearest_neighbor_join,
-    resample_sum,
-    cosine_dedup_pairs,
-    cosine_topk,
-    cross_corpus_decontam_pairs,
-    spine_align,
-    LANG_MARKERS,
-    domain_mixture,
-    fingerprint,
-    lang_id,
-    normalize_text,
-    punctuation_ratio,
-    quality_score,
-    regex_token_count,
-    stopword_ratio,
-    tfidf_top_terms,
-    unigram_logprob,
-    whitespace_token_count,
-    words,
-    series_hash_id,
-    right_closed_bucket,
-    decode_image_meta,
-    ivf_topk,
-    outflow_lines,
-    nearest_gauge_grid_ids,
-    rain_lines,
-    raincell_lines,
-    _t,
-    _events,
-)
-from curw_flo2d_data_manager_spark.queries.parity_tpch import (  # noqa: F401
-    q1_pricing_summary,
-    Q1_SQL,
-    q3_shipping_priority,
-    Q3_SQL,
-    q5_local_supplier,
-    Q5_SQL,
-    q6_revenue_change,
-    Q6_SQL,
-    q4_exists_semi,
-    Q4_SQL,
-    q18_having_topk,
-    Q18_SQL,
-    f9_get_or_create,
-    F9_SQL,
-    k7_merge_upsert,
-    K7_SQL,
-    k8_run_metadata,
-    K8_SQL,
-    k8_start_date,
-    K8_START_SQL,
-    q17_small_quantity,
-    Q17_SQL,
-    a_rollup_totals,
-    A_ROLLUP_SQL,
-    a_distinct_counts,
-    A_DISTINCT_SQL,
-    text_top_bigrams,
-    TEXT_BIGRAMS_SQL,
-    text_pii_redact,
-    _text_pii_sql,
-    TEXT_PII_SQL,
-    text_url_extract,
-    TEXT_URL_SQL,
-    sim_label_centroids,
-    SIM_CENTROID_SQL,
-    text_repetition_gates,
-    TEXT_REPETITION_SQL,
-    j_asof_join,
-    J_ASOF_SQL,
-    j_range_join,
-    J_RANGE_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.store_scans import (  # noqa: F401
-    s1_series_range_scan,
-    S1_SQL,
-    s3_first_value_lookup,
-    S3_SQL,
-    s6_max_end_time,
-    S6_SQL,
-    s2_grid_scan_correction,
-    S2_SQL,
-    s4_nearest_gauge_rain,
-    S4_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.joins_parity import (  # noqa: F401
-    j1_calendar_spine,
-    J1_SQL,
-    j2_dim_enrichment,
-    J2_SQL,
-    j5_semi_join,
-    J5_SQL,
-    j8_gap_fill,
-    J8_SQL,
-    j6_nearest_rank1,
-    J6_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.agg_windows import (  # noqa: F401
-    a2_resample_right_closed,
-    A2_SQL,
-    a_rollup_cascade,
-    A_CASCADE_SQL,
-    a4_cumulative_fraction,
-    A4_SQL,
-    w2_elapsed_hours,
-    W2_SQL,
-    w3_fill_down,
-    W3_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.render_scalar import (  # noqa: F401
-    f6_sentinel_cleaning,
-    F6_SQL,
-    x4_json_extract,
-    X4_SQL,
-    x11_series_hash_id,
-    X11_SQL,
-    k1_fixed_width_render,
-    K1_SQL,
-    k3_raincell_render,
-    K3_SQL,
-    k2_outflow_render,
-    K2_SQL,
-    k4_rain_render,
-    K4_SQL,
-    sim_ivf_topk_docs,
-    SIM_IVF_SQL,
-    mm_decode_meta,
-    MM_DECODE_SQL,
-    p1_hychan_roundtrip,
-    P1_SQL,
-    p2_timdep_roundtrip,
-    P2_SQL,
-    k5_chan_render,
-    K5_SQL,
-    _run_replay_stream,
-    stream_resample_events,
-    STREAM_A2_SQL,
-    stream_dedup_events,
-    STREAM_DEDUP_SQL,
-    stream_cumsum_events,
-    STREAM_CUMSUM_SQL,
-    stream_session_events,
-    STREAM_SESSION_SQL,
-    o2_ordered_topk,
-    O2_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.corpus_core import (  # noqa: F401
-    dedup_exact_docs,
-    DEDUP_EXACT_SQL,
-    dedup_fingerprint_docs,
-    DEDUP_FP_SQL,
-    dedup_winnowing_docs,
-    DEDUP_WINNOW_SQL,
-    dedup_winnow_pairs_docs,
-    DEDUP_WINNOW_PAIRS_SQL,
-    dedup_contamination,
-    DEDUP_CONTAM_SQL,
-    dedup_ngram_jaccard_docs,
-    DEDUP_JACCARD_SQL,
-    dedup_minhash_lsh_docs,
-    DEDUP_MINHASH_SQL,
-    dedup_simhash_docs,
-    DEDUP_SIMHASH_SQL,
-    sim_cosine_topk,
-    SIM_TOPK_SQL,
-    sim_cosine_dedup,
-    SIM_DEDUP_SQL,
-    text_token_counts,
-    TEXT_TOKENS_SQL,
-    text_quality,
-    TEXT_QUALITY_SQL,
-    text_lang_id,
-    _lang_score_sql,
-    _text_lang_sql,
-    TEXT_LANG_SQL,
-    mm_binary_meta,
-    MM_BINARY_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.analytics_breadth import (  # noqa: F401
-    q2_min_supplier,
-    Q2_SQL,
-    q7_nation_volume,
-    Q7_SQL,
-    q10_returned_items,
-    Q10_SQL,
-    q12_priority_case,
-    Q12_SQL,
-    q13_order_distribution,
-    Q13_SQL,
-    q14_promo_share,
-    Q14_SQL,
-    q15_top_supplier,
-    Q15_SQL,
-    q16_supplier_cnt,
-    Q16_SQL,
-    q19_disjunctive,
-    Q19_SQL,
-    q22_idle_customers,
-    Q22_SQL,
-    q8_market_share,
-    Q8_SQL,
-    q9_product_profit,
-    Q9_SQL,
-    q11_important_share,
-    Q11_SQL,
-    q20_heavy_suppliers,
-    Q20_SQL,
-    q21_exclusive_failures,
-    Q21_SQL,
-    w_moving_avg,
-    W_MOVAVG_SQL,
-    w_sessionize_events,
-    W_SESSION_SQL,
-    a_cube_counts,
-    A_CUBE_SQL,
-    a_percentiles,
-    A_PCT_SQL,
-    x_pivot_event_types,
-    X_PIVOT_SQL,
-    a_session_window_native,
-    A_SESSION_WINDOW_SQL,
-    u2_set_ops,
-    U2_SET_SQL,
-    x_unpivot_lineitem,
-    X_UNPIVOT_SQL,
-    dedup_latest_version,
-    DEDUP_LATEST_SQL,
-    a_approx_distinct,
-    A_APPROX_SQL,
-    a_approx_percentiles,
-    A_APPROX_PCT_SQL,
-    sim_lsh_pairs,
-    SIM_LSH_SQL,
-    f_hash_sample,
-    F_SAMPLE_SQL,
-    f_stratified_sample,
-    F_STRAT_SQL,
-    f_weighted_sample,
-    F_WEIGHTED_SQL,
-    f_pack_sequences,
-    F_PACK_SQL,
-    dedup_components,
-    DEDUP_COMPONENTS_SQL,
-    dedup_passages,
-    DEDUP_PASSAGES_SQL,
-    text_tfidf_terms,
-    TEXT_TFIDF_SQL,
-    text_domain_mixture,
-    TEXT_MIXTURE_SQL,
-    dedup_cluster_filter,
-    DEDUP_CLUSTER_SQL,
-    text_unigram_logprob,
-    TEXT_UNIGRAM_SQL,
-    text_bigram_logprob,
-    TEXT_BIGRAM_SQL,
-    text_epoch_plan,
-    TEXT_EPOCH_SQL,
-    text_frequent_terms,
-    TEXT_FREQ_SQL,
-    text_chunk_documents,
-    TEXT_CHUNK_SQL,
-    f_split_assign,
-    F_SPLIT_SQL,
-    f_mixture_resample,
-    F_MIXTURE_SQL,
-    f_materialize_mixture,
-    F_MATERIALIZE_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.sim_streams import (  # noqa: F401
-    stream_corpus_dedup,
-    STREAM_CORPUS_SQL,
-    stream_corpus_quality,
-    STREAM_QUALITY_SQL,
-    stream_corpus_neardup,
-    STREAM_NEARDUP_SQL,
-    sim_cross_decontam,
-    SIM_CROSS_SQL,
-    sim_semantic_dedup,
-    SIM_SEMDEDUP_SQL,
-    sim_knn_graph,
-    SIM_KNN_SQL,
-    text_dsir_weights,
-    TEXT_DSIR_SQL,
-    f_length_buckets,
-    F_LENBUCKET_SQL,
-    f_domain_cap,
-    F_DOMAIN_CAP_SQL,
-    f_quantile_norm,
-    F_QUANTILE_NORM_SQL,
-    text_char_entropy,
-    TEXT_ENTROPY_SQL,
-    dedup_bloom_filter,
-    DEDUP_BLOOM_SQL,
-    _pq_codebooks,
-    PQ_CODEBOOKS,
-    sim_pq_adc,
-    _pq_sql,
-    SIM_PQ_SQL,
-    sim_pq_rerank,
-    _pq_rerank_sql,
-    SIM_PQ_RERANK_SQL,
-    stream_corpus_decontam,
-    STREAM_DECONTAM_SQL,
-    text_ccnet_buckets,
-    TEXT_CCNET_SQL,
-    _classifier_weights,
-    CLASSIFIER_WEIGHTS,
-    text_hash_classifier,
-    _classifier_sql,
-    TEXT_CLASSIFIER_SQL,
-    sim_ivfpq,
-    SIM_IVFPQ_SQL,
-    dedup_span_rebuild,
-    DEDUP_SPAN_REBUILD_SQL,
-    dedup_contam_spans,
-    DEDUP_CONTAM_SPANS_SQL,
-    w_hampel_despike,
-    W_HAMPEL_SQL,
-    w_hampel_user,
-    W_HAMPEL_USER_SQL,
-    dedup_repeated_spans,
-    DEDUP_SPANS_SQL,
-    w_linear_interp,
-    W_INTERP_SQL,
-    w_interp_user,
-    W_INTERP_USER_SQL,
-    w_seasonal_baseline,
-    W_SEASONAL_SQL,
-    sim_pagerank,
-    _PR_ITER,
-    SIM_PAGERANK_SQL,
-    text_bm25_topk,
-    TEXT_BM25_SQL,
-    w_ewma,
-    W_EWMA_SQL,
-    sim_kmeans,
-    _kmeans_oracle_sql,
-    SIM_KMEANS_SQL,
-    j_interval_overlap,
-    J_OVERLAP_SQL,
-    w_winsorize,
-    W_WINSOR_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.growth_windows import (  # noqa: F401
-    w_peaks_over_threshold,
-    W_POT_SQL,
-    w_cusum_drift,
-    W_CUSUM_SQL,
-    dedup_normalized,
-    DEDUP_NORM_SQL,
-    dedup_url_canonical,
-    DEDUP_URL_SQL,
-    a_histogram,
-    A_HISTOGRAM_SQL,
-    j_radius_grid,
-    J_RADIUS_SQL,
-    sim_sq_adc,
-    _sq_sql,
-    SIM_SQ_SQL,
-    stream_pot_events,
-    STREAM_POT_SQL,
-    w_rate_of_change,
-    W_RATE_SQL,
-    x_funnel_steps,
-    X_FUNNEL_SQL,
-    f_zscore_norm,
-    F_ZSCORE_SQL,
-    f_robust_scale,
-    F_ROBUST_SQL,
-    a_salted_sum,
-    A_SALTED_SQL,
-    j_salted_join,
-    J_SALTED_SQL,
-    x_zorder_index,
-    _zorder_oracle_sql,
-    X_ZORDER_SQL,
-    stream_hot_terms,
-    STREAM_HOT_SQL,
-    text_zipf_slope,
-    TEXT_ZIPF_SQL,
-    a_histogram_equidepth,
-    A_EQUIDEPTH_SQL,
-    sim_mmr_rerank,
-    _mmr_oracle_sql,
-    SIM_MMR_SQL,
-    w_autocorr,
-    W_AUTOCORR_SQL,
-    w_trend_slope,
-    W_TREND_SQL,
-    text_strip_boilerplate,
-    TEXT_BOILERPLATE_SQL,
-    dedup_containment,
-    DEDUP_CONTAINMENT_SQL,
-    sim_rank_fusion,
-    SIM_RRF_SQL,
-    a_grouping_sets,
-    A_GROUPING_SETS_SQL,
-    a_rolling_actives,
-    A_ROLLING_SQL,
-    j_cooccurrence_pairs,
-    J_COOCCUR_SQL,
-    x_retention_cohorts,
-    X_RETENTION_SQL,
-    x_global_rownum,
-    X_ROWNUM_SQL,
-    sim_label_prop,
-    _label_prop_oracle_sql,
-    SIM_LABEL_PROP_SQL,
-    dedup_fuzzy_names,
-    DEDUP_FUZZY_SQL,
-    a_profile_columns,
-    A_PROFILE_SQL,
-    dedup_suffix_prefix,
-    DEDUP_SUFFIX_SQL,
-    stream_cusum_events,
-    STREAM_CUSUM2_SQL,
-    sim_sparse_cosine,
-    SIM_SPARSE_COSINE_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.growth_graph_ml import (  # noqa: F401
-    text_inverted_index,
-    TEXT_INVERTED_SQL,
-    _part_cooccur_edges,
-    g_triangle_count,
-    G_TRIANGLE_SQL,
-    sketch_countmin,
-    SKETCH_COUNTMIN_SQL,
-    stream_join_attrib,
-    STREAM_ATTRIB_SQL,
-    g_kcore,
-    _gen_kcore_sql,
-    G_KCORE_SQL,
-    sim_bq_hamming,
-    SIM_BQ_SQL,
-    g_clustering_coef,
-    G_CLUSTERING_SQL,
-    text_readability,
-    TEXT_READABILITY_SQL,
-    x_event_transitions,
-    X_TRANSITIONS_SQL,
-    g_pagerank_weighted,
-    _gen_wpr_sql,
-    G_WPR_SQL,
-    ml_train_classifier,
-    _gen_mltrain_sql,
-    ML_TRAIN_SQL,
-    ml_auc_exact,
-    _ML_AUC_TEMPLATE,
-    ml_calibration_bins,
-    _ML_CALIBRATION_TEMPLATE,
-    ML_AUC_SQL,
-    ML_CALIBRATION_SQL,
-    ml_confusion_matrix,
-    _ML_CONFUSION_TEMPLATE,
-    ML_CONFUSION_SQL,
-    sim_gram_matrix,
-    SIM_GRAM_SQL,
-    stream_join_unmatched,
-    STREAM_UNMATCHED_SQL,
-    a_exact_mode,
-    A_MODE_SQL,
-    a_weighted_median,
-    A_WMEDIAN_SQL,
-    a_moments_fixed,
-    A_MOMENTS_SQL,
-    ml_linreg_normal,
-    ML_LINREG_SQL,
-    ml_ks_statistic,
-    ML_KS_SQL,
-    _gain_sql,
-    ml_ndcg,
-    ML_NDCG_SQL,
-    g_link_predict,
-    G_LINKPRED_SQL,
-    text_pmi_bigrams,
-    TEXT_PMI_SQL,
-    w_moving_median,
-    W_MOVMED_SQL,
-    j_point_in_rect,
-    J_RECT_SQL,
-    mm_frame_plan,
-    MM_FRAMEPLAN_SQL,
-    g_bfs_hops,
-    G_BFS_SQL,
-    x_time_to_convert,
-    X_CONVERT_SQL,
-    stream_window_distinct,
-    STREAM_WDIST_SQL,
-    ml_ttest_welch,
-    ML_TTEST_SQL,
-    ml_chi_square,
-    ML_CHISQ_SQL,
-    ml_mutual_info,
-    ML_MI_SQL,
-)
-from curw_flo2d_data_manager_spark.queries.growth_r11b import (  # noqa: F401
-    A_GINI_SQL,
-    G_HITS_SQL,
-    ML_MANNWHITNEY_SQL,
-    ML_MAP_SQL,
-    ML_MRR_SQL,
-    ML_SPEARMAN_SQL,
-    SIM_SPARSE_PREFIX_SQL,
-    TEXT_JS_SQL,
-    a_gini_orders,
-    g_hits,
-    ml_mann_whitney,
-    ml_map,
-    ml_mrr,
-    ml_spearman,
-    sim_sparse_cosine_prefix,
-    text_js_divergence,
-)
-from curw_flo2d_data_manager_spark.queries.registry import (  # noqa: F401
+from curw_flo2d_data_manager_spark.queries.registry import (
     DRIVER_WINDOW,
     REGISTRY,
-    queries,
     oracle_sql,
+    queries,
 )
+
+__all__ = ["DRIVER_WINDOW", "REGISTRY", "oracle_sql", "queries"]

@@ -1,72 +1,13 @@
-"""Query registry: every implemented operator as a (Spark query,
-DuckDB oracle SQL) pair over the driver's synthetic tables.
-
-This is the engine's correctness surface (driver contract in
-``__spark_entry__.py``): each entry exercises one operator family from
-SURVEY §2 (or a beyond-parity training-data operator) against the
-TPC-H-ish tables at an arbitrary scale factor. Column names are
-aliased identically on both sides; floating aggregates are rounded on
-both sides so value-hash comparison is robust to summation order.
-
-Registry shape: ``name -> (spark_fn, oracle_sql | None)``; oracle None
-means the operator is not SQL-expressible (hash-seeded LSH and the
-like) and gets the driver's weaker rows-only check.
-"""
+"""Table readers shared by the query family modules: ``_t`` scans one
+driver table, ``_events`` scans the events table with an optional
+pushed-down time bound."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from curw_flo2d_data_manager_spark.functions.exactmath import (
-    ln_ratio_det_sql as _ln_ratio_det_sql,
-)
-from curw_flo2d_data_manager_spark.operators.cumulative import cumulative_fraction
-from curw_flo2d_data_manager_spark.operators.components import (
-    cluster_assign,
-    connected_components,
-)
-from curw_flo2d_data_manager_spark.operators.dedup import (
-    exact_dedup,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    passage_dedup,
-    simhash_near_pairs,
-)
-from curw_flo2d_data_manager_spark.operators.gapfill import gap_fill_cross
 from curw_flo2d_data_manager_spark.operators.parallelism import ensure_min_partitions
-from curw_flo2d_data_manager_spark.operators.nearest import nearest_neighbor_join
-from curw_flo2d_data_manager_spark.operators.resample import resample_sum
-from curw_flo2d_data_manager_spark.operators.similarity import (
-    cosine_dedup_pairs,
-    cosine_topk,
-    cross_corpus_decontam_pairs,
-)
-from curw_flo2d_data_manager_spark.operators.spine import spine_align
-from curw_flo2d_data_manager_spark.operators.textstats import (
-    LANG_MARKERS,
-    domain_mixture,
-    fingerprint,
-    lang_id,
-    normalize_text,
-    punctuation_ratio,
-    quality_score,
-    regex_token_count,
-    stopword_ratio,
-    tfidf_top_terms,
-    unigram_logprob,
-    whitespace_token_count,
-    words,
-)
-from curw_flo2d_data_manager_spark.functions.ids import series_hash_id
-from curw_flo2d_data_manager_spark.functions.timeutil import right_closed_bucket
-from curw_flo2d_data_manager_spark.operators.multimodal import decode_image_meta
-from curw_flo2d_data_manager_spark.operators.similarity import ivf_topk
-from curw_flo2d_data_manager_spark.plans.outflow import outflow_lines
-from curw_flo2d_data_manager_spark.plans.rain import nearest_gauge_grid_ids, rain_lines
-from curw_flo2d_data_manager_spark.plans.raincell import raincell_lines
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -2,16 +2,12 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    Window,
-    _events,
-    _t,
-    cumulative_fraction,
-    resample_sum,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.operators.cumulative import cumulative_fraction
+from curw_flo2d_data_manager_spark.operators.resample import resample_sum
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 
 # =====================================================================

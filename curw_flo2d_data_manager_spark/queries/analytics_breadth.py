@@ -2,22 +2,24 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    Window,
-    _events,
-    _t,
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.operators.components import (
     cluster_assign,
     connected_components,
-    domain_mixture,
+)
+from curw_flo2d_data_manager_spark.operators.dedup import (
     minhash_lsh_pairs,
     passage_dedup,
+)
+from curw_flo2d_data_manager_spark.operators.textstats import (
+    domain_mixture,
     tfidf_top_terms,
     unigram_logprob,
     whitespace_token_count,
 )
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 
 # =====================================================================

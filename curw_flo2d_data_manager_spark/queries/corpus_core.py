@@ -2,26 +2,30 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    LANG_MARKERS,
-    SparkSession,
-    _t,
-    cosine_dedup_pairs,
-    cosine_topk,
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.operators.dedup import (
     exact_dedup,
-    fingerprint,
-    lang_id,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    simhash_near_pairs,
+)
+from curw_flo2d_data_manager_spark.operators.similarity import (
+    cosine_dedup_pairs,
+    cosine_topk,
+)
+from curw_flo2d_data_manager_spark.operators.textstats import (
+    LANG_MARKERS,
+    fingerprint,
+    lang_id,
     punctuation_ratio,
     regex_token_count,
-    simhash_near_pairs,
     stopword_ratio,
     whitespace_token_count,
     words,
 )
+from curw_flo2d_data_manager_spark.queries._shared import _t
 
 
 # =====================================================================

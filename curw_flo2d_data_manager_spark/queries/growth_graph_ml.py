@@ -2,24 +2,16 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.functions.plan_literals import (
-    literal_rows_df,
-)
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    Window,
-    _events,
-    _ln_ratio_det_sql,
-    _t,
-    cosine_topk,
-    words,
-)
-from curw_flo2d_data_manager_spark.queries.render_scalar import (  # noqa: E501
-    _run_replay_stream,
-)
-from curw_flo2d_data_manager_spark.queries.sim_streams import (  # noqa: E501
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.functions.exactmath import ln_ratio_det_sql
+from curw_flo2d_data_manager_spark.functions.plan_literals import literal_rows_df
+from curw_flo2d_data_manager_spark.operators.similarity import cosine_topk
+from curw_flo2d_data_manager_spark.operators.textstats import words
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
+from curw_flo2d_data_manager_spark.queries.render_scalar import _run_replay_stream
+from curw_flo2d_data_manager_spark.queries.sim_streams import (
     CLASSIFIER_WEIGHTS,
     _classifier_sql,
 )
@@ -1440,7 +1432,7 @@ def _gain_sql(rank_expr: str) -> str:
     round(10⁶·LN2/ln(rank+1)) — deterministic basic-ops log, explicit
     DOUBLE casts so neither engine routes a constant through DECIMAL
     arithmetic."""
-    lnr = _ln_ratio_det_sql(f"({rank_expr}) + 1", "1")
+    lnr = ln_ratio_det_sql(f"({rank_expr}) + 1", "1")
     return (
         "CAST(ROUND(CAST(1000000.0 AS DOUBLE)"
         f" * CAST(0.6931471805599453 AS DOUBLE) / {lnr}) AS BIGINT)"
@@ -1644,11 +1636,11 @@ SELECT term, c_xy, c_x, c_y, pmi_fp, rank
 FROM ranked WHERE rank <= 50
 """
 TEXT_PMI_SQL = (
-    TEXT_PMI_SQL.replace("{LN_CXY}", _ln_ratio_det_sql("c_xy", "1"))
-    .replace("{LN_NU}", _ln_ratio_det_sql("n_uni", "1"))
-    .replace("{LN_NB}", _ln_ratio_det_sql("n_bi", "1"))
-    .replace("{LN_CX}", _ln_ratio_det_sql("c_x", "1"))
-    .replace("{LN_CY}", _ln_ratio_det_sql("c_y", "1"))
+    TEXT_PMI_SQL.replace("{LN_CXY}", ln_ratio_det_sql("c_xy", "1"))
+    .replace("{LN_NU}", ln_ratio_det_sql("n_uni", "1"))
+    .replace("{LN_NB}", ln_ratio_det_sql("n_bi", "1"))
+    .replace("{LN_CX}", ln_ratio_det_sql("c_x", "1"))
+    .replace("{LN_CY}", ln_ratio_det_sql("c_y", "1"))
 )
 
 
@@ -2173,9 +2165,9 @@ SELECT n, COUNT(*) AS n_cells,
 FROM terms GROUP BY n
 """
 ML_MI_SQL = ML_MI_SQL.replace(
-    "{LN_POS}", _ln_ratio_det_sql("cell.cxy * tot.n", "xm.cx * ym.cy")
+    "{LN_POS}", ln_ratio_det_sql("cell.cxy * tot.n", "xm.cx * ym.cy")
 ).replace(
-    "{LN_NEG}", _ln_ratio_det_sql("xm.cx * ym.cy", "cell.cxy * tot.n")
+    "{LN_NEG}", ln_ratio_det_sql("xm.cx * ym.cy", "cell.cxy * tot.n")
 )
 
 

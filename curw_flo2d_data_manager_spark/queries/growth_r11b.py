@@ -6,15 +6,12 @@ logs) so the DuckDB oracles compare without float-summation slack."""
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (
-    DataFrame,
-    F,
-    SparkSession,
-    _events,
-    _ln_ratio_det_sql,
-    _t,
-    cosine_topk,
-)
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.functions.exactmath import ln_ratio_det_sql
+from curw_flo2d_data_manager_spark.operators.similarity import cosine_topk
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 _REL_RUN_SQL = """
 WITH q AS (
@@ -307,13 +304,13 @@ def _js_sql() -> str:
     den = "(c_d * n_c + c_c * n_d)"
     ln_p = (
         f"(CASE WHEN (2 * c_d * n_c) >= {den} "
-        f"THEN {_ln_ratio_det_sql(f'2 * c_d * n_c', den)} "
-        f"ELSE -{_ln_ratio_det_sql(den, f'2 * c_d * n_c')} END)"
+        f"THEN {ln_ratio_det_sql(f'2 * c_d * n_c', den)} "
+        f"ELSE -{ln_ratio_det_sql(den, f'2 * c_d * n_c')} END)"
     )
     ln_q = (
         f"(CASE WHEN (2 * c_c * n_d) >= {den} "
-        f"THEN {_ln_ratio_det_sql(f'2 * c_c * n_d', den)} "
-        f"ELSE -{_ln_ratio_det_sql(den, f'2 * c_c * n_d')} END)"
+        f"THEN {ln_ratio_det_sql(f'2 * c_c * n_d', den)} "
+        f"ELSE -{ln_ratio_det_sql(den, f'2 * c_c * n_d')} END)"
     )
     return f"""
 WITH w AS (

@@ -6,6 +6,9 @@ DuckDB oracles compare bit-for-bit."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 from curw_flo2d_data_manager_spark.operators.bpe import (
     bpe_piece_count_sql,
     bpe_token_counts,
@@ -15,12 +18,7 @@ from curw_flo2d_data_manager_spark.operators.markup import (
     strip_html_post_sql,
     strip_html_pre_sql,
 )
-from curw_flo2d_data_manager_spark.queries._shared import (
-    DataFrame,
-    F,
-    SparkSession,
-    _t,
-)
+from curw_flo2d_data_manager_spark.queries._shared import _t
 
 # The normalized whitespace-word split, spelled exactly like
 # corpus_core's TEXT_TOKENS_SQL so word boundaries agree with the

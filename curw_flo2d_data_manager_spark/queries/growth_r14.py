@@ -22,6 +22,9 @@ this round's operator rewrites.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 from curw_flo2d_data_manager_spark.operators.dedup import with_shingle_hashes
 from curw_flo2d_data_manager_spark.operators.markup import (
     strip_html,
@@ -34,12 +37,7 @@ from curw_flo2d_data_manager_spark.operators.textstats import (
     lang_scores,
     whitespace_token_count,
 )
-from curw_flo2d_data_manager_spark.queries._shared import (
-    DataFrame,
-    F,
-    SparkSession,
-    _t,
-)
+from curw_flo2d_data_manager_spark.queries._shared import _t
 
 _WORDS_SQL = (
     "CASE WHEN trim(regexp_replace(lower(text),"

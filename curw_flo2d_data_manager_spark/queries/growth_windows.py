@@ -2,21 +2,15 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    Window,
-    _events,
-    _ln_ratio_det_sql,
-    _t,
-    cosine_topk,
-    exact_dedup,
-    words,
-)
-from curw_flo2d_data_manager_spark.queries.render_scalar import (  # noqa: E501
-    _run_replay_stream,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.functions.exactmath import ln_ratio_det_sql
+from curw_flo2d_data_manager_spark.operators.dedup import exact_dedup
+from curw_flo2d_data_manager_spark.operators.similarity import cosine_topk
+from curw_flo2d_data_manager_spark.operators.textstats import words
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
+from curw_flo2d_data_manager_spark.queries.render_scalar import _run_replay_stream
 
 
 def w_peaks_over_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1386,10 +1380,7 @@ def sim_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Σ 1/(60 + rank)`` with absent-candidate terms 0. Fusion joins
     run on the bounded RESULT relations (5 queries × 20 rows each);
     the corpus appears only inside the two rankers."""
-    from curw_flo2d_data_manager_spark.operators.similarity import (
-        dot,
-        rrf_fuse,
-    )
+    from curw_flo2d_data_manager_spark.operators.similarity import rrf_fuse
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
@@ -2034,7 +2025,7 @@ ORDER BY id_a, id_b
 # basic-ops log, the exact SQL twin of the Spark-side expression in
 # operators/textstats.py::sparse_cosine_pairs.
 SIM_SPARSE_COSINE_SQL = SIM_SPARSE_COSINE_SQL.replace(
-    "{LN_RATIO_NDF}", _ln_ratio_det_sql("n.n_docs + 1", "d.df + 1")
+    "{LN_RATIO_NDF}", ln_ratio_det_sql("n.n_docs + 1", "d.df + 1")
 )
 
 

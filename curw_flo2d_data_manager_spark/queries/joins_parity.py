@@ -2,16 +2,12 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    Window,
-    _events,
-    _t,
-    gap_fill_cross,
-    spine_align,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.operators.gapfill import gap_fill_cross
+from curw_flo2d_data_manager_spark.operators.spine import spine_align
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 
 # =====================================================================

@@ -2,15 +2,12 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    _events,
-    _t,
-    series_hash_id,
-    words,
-)
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.functions.ids import series_hash_id
+from curw_flo2d_data_manager_spark.operators.textstats import words
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 
 # =====================================================================

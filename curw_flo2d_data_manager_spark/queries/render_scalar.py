@@ -2,23 +2,17 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.functions.plan_literals import (
-    literal_rows_df,
-)
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    Window,
-    _events,
-    _t,
-    decode_image_meta,
-    ivf_topk,
-    outflow_lines,
-    rain_lines,
-    raincell_lines,
-    series_hash_id,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.functions.ids import series_hash_id
+from curw_flo2d_data_manager_spark.functions.plan_literals import literal_rows_df
+from curw_flo2d_data_manager_spark.operators.multimodal import decode_image_meta
+from curw_flo2d_data_manager_spark.operators.similarity import ivf_topk
+from curw_flo2d_data_manager_spark.plans.outflow import outflow_lines
+from curw_flo2d_data_manager_spark.plans.rain import rain_lines
+from curw_flo2d_data_manager_spark.plans.raincell import raincell_lines
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 from curw_flo2d_data_manager_spark.queries.agg_windows import A2_SQL
 
 

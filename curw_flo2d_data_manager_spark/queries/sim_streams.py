@@ -2,15 +2,14 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    _events,
-    _t,
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.operators.similarity import (
     cross_corpus_decontam_pairs,
-    unigram_logprob,
 )
+from curw_flo2d_data_manager_spark.operators.textstats import unigram_logprob
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 
 def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,15 +2,11 @@
 
 from __future__ import annotations
 
-from curw_flo2d_data_manager_spark.queries._shared import (  # noqa: E501
-    DataFrame,
-    F,
-    SparkSession,
-    _events,
-    _t,
-    nearest_gauge_grid_ids,
-    rain_lines,
-)
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark.plans.rain import nearest_gauge_grid_ids, rain_lines
+from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 
 # =====================================================================

@@ -223,6 +223,64 @@ def test_extract_discharge_variable(spark, tmp_path):
     assert [r.value for r in got] == [55.5, 66.6]  # column 4, not elevation
 
 
+def test_extract_recovers_history_after_interrupted_swap(spark, tmp_path, monkeypatch):
+    """A crash between the two renames of the fcst_data swap leaves the
+    table absent and its history at ``fcst_data.tmp-old``. Re-running
+    the extract must merge into that history, not take the missing
+    table for a first run and delete the history in the swap cleanup."""
+    store = str(tmp_path / "store")
+    hychan = tmp_path / "HYCHAN.OUT"
+    hychan.write_text(
+        "     CHANNEL HYDROGRAPH FOR ELEMENT NO:   330\n"
+        "   TIME   ELEV   DEPTH   VEL   Q\n"
+        "   0.00   10.0   1.0   0.1   55.5\n"
+        "   0.25   10.1   1.1   0.2   66.6\n"
+    )
+    spark.createDataFrame(
+        [("330", 7, 6.9, 79.8)],
+        "element_no string, station_id long, latitude double, longitude double",
+    ).write.parquet(os.path.join(store, "stations"))
+    target = os.path.join(store, "fcst_data")
+
+    def extract(fgt):
+        main([
+            "extract-water-level", "-m", "flo2d_150_v2",
+            "--hychan", str(hychan), "--base_time", "2024-01-01 00:00:00",
+            "--store", store, "--fgt", fgt,
+        ])
+
+    extract("2024-01-01 06:00:00")
+    assert spark.read.parquet(target).count() == 2
+
+    real_rename = os.rename
+    crashed = []
+
+    def rename_crashing_once(src, dst):
+        if src == target + ".tmp-swap" and not crashed:
+            crashed.append(src)
+            raise OSError("injected crash between the swap renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename_crashing_once)
+    with pytest.raises(OSError, match="injected crash"):
+        extract("2024-01-02 06:00:00")
+    assert not os.path.exists(target)
+    assert os.path.exists(target + ".tmp-old")
+    monkeypatch.undo()
+
+    extract("2024-01-02 06:00:00")
+    got = spark.read.parquet(target)
+    assert sorted(
+        (str(r.fgt), str(r.time), r.value) for r in got.collect()
+    ) == [
+        ("2024-01-01 06:00:00", "2024-01-01 00:00:00", 10.0),
+        ("2024-01-01 06:00:00", "2024-01-01 00:15:00", 10.1),
+        ("2024-01-02 06:00:00", "2024-01-01 00:00:00", 10.0),
+        ("2024-01-02 06:00:00", "2024-01-01 00:15:00", 10.1),
+    ]
+    assert not os.path.exists(target + ".tmp-old")
+
+
 def test_extract_utc_offset_shifts_series_and_cut(spark, tmp_path):
     """--utc_offset "+05:30" shifts BOTH the series timestamps and the
     extract cut by the offset (reference extract_water_level.py:80-106

@@ -7,6 +7,14 @@ on the actual explain output so a refactor can't silently lose them.
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark import queries as q
+from curw_flo2d_data_manager_spark.queries._shared import _events
+from curw_flo2d_data_manager_spark.queries.analytics_breadth import a_approx_distinct
+from curw_flo2d_data_manager_spark.queries.corpus_core import dedup_winnow_pairs_docs
+from curw_flo2d_data_manager_spark.queries.parity_tpch import (
+    q1_pricing_summary,
+    q5_local_supplier,
+    q6_revenue_change,
+)
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -19,7 +27,7 @@ def test_events_range_predicate_reaches_parquet_scan(spark, sf_dir):
     """The nanos→timestamp conversion hides `ts` from pushdown, so
     `_events` must filter the RAW long first — row-group pruning is
     the difference between a day's scan and a full-table scan."""
-    df = q._events(
+    df = _events(
         spark, sf_dir, start="2024-01-02 00:00:00", end="2024-01-03 00:00:00"
     )
     plan = plan_of(df)
@@ -28,7 +36,7 @@ def test_events_range_predicate_reaches_parquet_scan(spark, sf_dir):
 
 
 def test_q6_pushdown_and_column_pruning(spark, sf_dir):
-    plan = plan_of(q.q6_revenue_change(spark, sf_dir))
+    plan = plan_of(q6_revenue_change(spark, sf_dir))
     # shipdate/discount/quantity predicates reach the scan
     assert "PushedFilters" in plan
     assert "l_shipdate" in plan.split("PushedFilters")[1].split("\n")[0]
@@ -39,14 +47,14 @@ def test_q6_pushdown_and_column_pruning(spark, sf_dir):
 
 
 def test_q5_broadcasts_dimension_joins(spark, sf_dir):
-    plan = plan_of(q.q5_local_supplier(spark, sf_dir))
+    plan = plan_of(q5_local_supplier(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
 
 
 def test_q1_aggregates_before_shuffle(spark, sf_dir):
     """Partial (map-side) aggregation must appear under the exchange —
     the shuffle carries 6 group rows per partition, not 600k rows."""
-    plan = plan_of(q.q1_pricing_summary(spark, sf_dir), mode="simple")
+    plan = plan_of(q1_pricing_summary(spark, sf_dir), mode="simple")
     first_agg = plan.index("HashAggregate")
     assert "Exchange" in plan[:first_agg] or "Exchange" in plan, plan
     # final & partial pair exist
@@ -59,10 +67,10 @@ def test_approx_distinct_within_tolerance(spark, sf_dir):
     oracle recomputes exact_users and pins within_5pct=1, so the hash
     check IS the accuracy assertion. Here: the flag really is 1 for
     every group and the exact counts match an independent recompute."""
-    rows = q.a_approx_distinct(spark, sf_dir).collect()
+    rows = a_approx_distinct(spark, sf_dir).collect()
     exact = {
         r["event_type"]: r["n"]
-        for r in q._events(spark, sf_dir)
+        for r in _events(spark, sf_dir)
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n"))
         .collect()
@@ -165,7 +173,7 @@ def test_winnow_pairs_is_hash_join_no_python(spark, sf_dir):
     """The winnowing pair join is a shuffled equi-join on the
     fingerprint value — never a cartesian/BNLJ — and the whole
     fingerprint pipeline stays JVM-side."""
-    plan = plan_of(q.dedup_winnow_pairs_docs(spark, sf_dir), mode="simple")
+    plan = plan_of(dedup_winnow_pairs_docs(spark, sf_dir), mode="simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -399,7 +407,7 @@ def test_pq_assign_is_narrow_and_adc_ships_codes_not_vectors(spark, sf_dir):
         pq_adc_topk,
         pq_assign,
     )
-    from curw_flo2d_data_manager_spark.queries import PQ_CODEBOOKS
+    from curw_flo2d_data_manager_spark.queries.sim_streams import PQ_CODEBOOKS
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     assign_plan = plan_of(pq_assign(emb, PQ_CODEBOOKS))
@@ -472,7 +480,7 @@ def test_hash_classifier_broadcasts_weights_and_partial_aggregates(spark, sf_dir
     from curw_flo2d_data_manager_spark.operators.textstats import (
         hash_classifier_score,
     )
-    from curw_flo2d_data_manager_spark.queries import CLASSIFIER_WEIGHTS
+    from curw_flo2d_data_manager_spark.queries.sim_streams import CLASSIFIER_WEIGHTS
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -519,7 +527,7 @@ def test_seasonal_baseline_broadcasts_climatology_no_fact_shuffle(
         seasonal_baseline,
     )
 
-    ev = q._events(spark, sf_dir)
+    ev = _events(spark, sf_dir)
     plan = plan_of(
         seasonal_baseline(ev, ["event_type"], F.hour("ts"), "value"),
         mode="simple",
@@ -543,7 +551,7 @@ def test_linear_interpolate_no_quadratic_frame(spark, sf_dir):
         linear_interpolate,
     )
 
-    ev = q._events(spark, sf_dir)
+    ev = _events(spark, sf_dir)
     plan = plan_of(
         linear_interpolate(ev, ["event_type"], "ts", "value"), mode="simple"
     )

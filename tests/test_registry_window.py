@@ -12,7 +12,14 @@ This test pins the round-13 window so a registry edit can never
 silently drop an intended gate: REQUIRED_IN_WINDOW must be edited in
 lockstep with any registry reorder."""
 
-from curw_flo2d_data_manager_spark.queries import DRIVER_WINDOW, REGISTRY
+import hashlib
+
+from curw_flo2d_data_manager_spark.queries import (
+    DRIVER_WINDOW,
+    REGISTRY,
+    oracle_sql,
+    queries,
+)
 
 # Round-14 window: keys must sit at registry position < DRIVER_WINDOW.
 REQUIRED_IN_WINDOW = {
@@ -73,3 +80,23 @@ def test_every_entry_has_an_oracle_except_documented():
     # nothing in the registry is rows-only any more.
     rows_only = [name for name, (_, sql) in REGISTRY.items() if sql is None]
     assert rows_only == []
+
+
+# sha256 over every entry, in REGISTRY order, of its name, the defining
+# module and qualified name of its Spark function, and its oracle SQL.
+# A registry refactor must leave this unchanged; a deliberate registry
+# edit updates it in the same change.
+REGISTRY_DIGEST = "89c52d4fad6321518c3369ba0825db4ab8c138d4e26e680978a5f49b1cf37d0c"
+
+
+def test_registry_identity_is_pinned():
+    h = hashlib.sha256()
+    for name, (fn, sql) in REGISTRY.items():
+        h.update(f"{name}|{fn.__module__}.{fn.__qualname__}|{sql}\n".encode())
+    assert len(REGISTRY) == 224
+    assert DRIVER_WINDOW == 50
+    assert h.hexdigest() == REGISTRY_DIGEST
+    assert list(queries()) == list(REGISTRY)
+    assert oracle_sql() == {
+        name: sql for name, (_, sql) in REGISTRY.items() if sql is not None
+    }

@@ -29,6 +29,8 @@ import os
 import sys
 from datetime import datetime
 
+from curw_flo2d_data_manager_spark import commit
+
 DATE_FMT = "%Y-%m-%d %H:%M:%S"
 
 # The 17 FLO-2D input files archived for event simulations
@@ -54,13 +56,15 @@ def archive_templates(
     import tarfile
 
     names = file_names if file_names is not None else TEMPLATE_FILES
-    out = os.path.join(source_dir, f"{out_name}.tar.gz")
-    with tarfile.open(out, "w:gz") as tar:
-        for n in names:
-            pth = os.path.join(source_dir, n)
-            if os.path.exists(pth):
-                tar.add(pth, arcname=n)
-    return out
+
+    def pack(tmp: str) -> None:
+        with tarfile.open(tmp, "w:gz") as tar:
+            for n in names:
+                pth = os.path.join(source_dir, n)
+                if os.path.exists(pth):
+                    tar.add(pth, arcname=n)
+
+    return commit.replace(os.path.join(source_dir, f"{out_name}.tar.gz"), pack)
 
 
 def cmd_archive_templates(args) -> None:
@@ -83,9 +87,17 @@ def merge_run_manifest(out_path: str, metadata: dict) -> str:
     except (FileNotFoundError, json.JSONDecodeError):
         pass
     merged.update(metadata)
-    with open(manifest_path, "w") as f:
-        json.dump(merged, f)
-    return manifest_path
+    return commit.replace(manifest_path, _json_writer(merged))
+
+
+def _json_writer(obj):
+    """A ``commit.replace`` writer that dumps ``obj`` as JSON."""
+
+    def dump(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+
+    return dump
 
 
 # ------------------------------------------------------------ validation
@@ -115,54 +127,15 @@ def _skip_existing(path: str) -> bool:
 
 # ------------------------------------------------------------- commands
 def _overwrite_parquet(df, target: str) -> None:
-    """Write-new-then-swap: materialize to a sibling temp dir, then
-    swap it over ``target`` via renames. Overwriting a parquet dir
-    that the same plan is reading (even behind ``cache()``) risks
-    recomputing from a half-deleted source if cached blocks are
-    evicted mid-write; the swap keeps the old data intact until the
-    new copy is fully on disk. The swap is two renames, not atomic:
-    ``target`` is briefly absent between them (same caveat as
-    ``TimeseriesStore.compact_data`` — fine for the cron-sequenced
-    jobs this CLI serves, not for concurrent readers)."""
-    import shutil
-
-    tmp, old = target + ".tmp-swap", target + ".tmp-old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(target):
-        os.rename(target, old)
-    os.rename(tmp, target)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _read_committed_parquet(spark, target: str):
-    """The table last committed at ``target`` by ``_overwrite_parquet``,
-    or None on a true first run. A crash between that function's two
-    renames leaves ``target`` absent and the committed copy at
-    ``<target>.tmp-old``; it is renamed back first, so the next run
-    merges into it instead of taking it for a first run and deleting
-    it in the swap's cleanup."""
-    from pyspark.errors import AnalysisException
-
-    old = target + ".tmp-old"
-    if not os.path.exists(target) and os.path.exists(old):
-        os.rename(old, target)
-    try:
-        return spark.read.parquet(target)
-    except AnalysisException:
-        # first run: no relation at `target`. Any other error must
-        # propagate — swallowing it would silently discard the history
-        # on the overwrite that follows.
-        return None
+    """Commit ``df`` as the parquet table at ``target``; the old copy
+    stays intact while the same plan may still be reading it."""
+    commit.replace(target, df.write.parquet)
 
 
 def _load_store(spark, store_dir: str):
     from curw_flo2d_data_manager_spark.store import TimeseriesStore
 
-    run = spark.read.parquet(os.path.join(store_dir, "run"))
-    data = spark.read.parquet(os.path.join(store_dir, "data"))
-    return TimeseriesStore(run, data)
+    return TimeseriesStore.open(spark, store_dir)
 
 
 def cmd_gen_inflow(args) -> None:
@@ -367,12 +340,14 @@ def cmd_init(args) -> None:
     )
     src_path = os.path.join(args.store, "sources")
     sta_path = os.path.join(args.store, "stations_dim")
-    try:
-        ex_src = spark.read.parquet(src_path)
-        ex_sta = spark.read.parquet(sta_path)
-    except Exception:
-        ex_src, ex_sta = src.limit(0), stations.limit(0)
-    m_src, m_sta = register_dims(ex_src, ex_sta, src, stations)
+    ex_src = commit.read_parquet(spark, src_path)
+    ex_sta = commit.read_parquet(spark, sta_path)
+    m_src, m_sta = register_dims(
+        src.limit(0) if ex_src is None else ex_src,
+        stations.limit(0) if ex_sta is None else ex_sta,
+        src,
+        stations,
+    )
     for df, path in ((m_src, src_path), (m_sta, sta_path)):
         _overwrite_parquet(df, path)
     n_sta = spark.read.parquet(sta_path).count()
@@ -462,7 +437,7 @@ def cmd_extract_water_level(args) -> None:
         forecast = forecast.unionByName(fp_forecast)
 
     target = os.path.join(args.store, "fcst_data")
-    existing = _read_committed_parquet(spark, target)
+    existing = commit.read_parquet(spark, target)
     merged = (
         forecast
         if existing is None
@@ -475,7 +450,7 @@ def cmd_extract_water_level(args) -> None:
     # (legacy fgt-only schema upgraded in place) and full-outer-merges
     # the new payload's per-series aggregate.
     dim_target = os.path.join(args.store, "fcst_latest_fgt")
-    run_dim = update_run_dates(_read_committed_parquet(spark, dim_target), forecast)
+    run_dim = update_run_dates(commit.read_parquet(spark, dim_target), forecast)
     _overwrite_parquet(run_dim, dim_target)
 
     # K8 run provenance (reference: extract_water_level.py:588-591 —
@@ -497,7 +472,7 @@ def cmd_extract_water_level(args) -> None:
         template_path=args.template,
     )
     rm_target = os.path.join(args.store, "run_metadata")
-    prior = _read_committed_parquet(spark, rm_target)
+    prior = commit.read_parquet(spark, rm_target)
     rm = record if prior is None else insert_run_metadata(prior, record)
     _overwrite_parquet(rm, rm_target)
     print(f"upserted forecasts into {target}")
@@ -762,6 +737,8 @@ def cmd_build_ann_index(args) -> None:
                 meta = _json.load(f)
         except FileNotFoundError:
             raise SystemExit(f"--append needs an existing index at {args.output}")
+        for p in (asg_path, codes_path):
+            commit.recover(p)
         assigned = ivf_assign(
             df, meta["centers"], id_col=args.id_col, vec_col=args.vec_col
         )
@@ -803,8 +780,7 @@ def cmd_build_ann_index(args) -> None:
         codes.write.mode("overwrite").partitionBy("cluster").parquet(codes_path)
     assignments.unpersist()
     os.makedirs(args.output, exist_ok=True)
-    with open(meta_path, "w") as f:
-        _json.dump(meta, f)
+    commit.replace(meta_path, _json_writer(meta))
     print(
         f"build-ann-index: {n} vectors, {n_clusters} clusters"
         + (f", PQ {args.pq_m}x{args.pq_ksub}" if args.pq else "")
@@ -824,17 +800,14 @@ def cmd_compact_ann_index(args) -> None:
     ``--skew_threshold`` (or ``--force``), RE-TRAINS the quantizer on
     the index's current contents (same bounded-sample recipe as the
     initial build), re-assigns every vector in one scan, re-codes PQ
-    against freshly trained codebooks — all STAGED to sibling paths —
-    then commits with adjacent renames + the meta rewrite. A crash
-    during the expensive compute leaves the live index untouched; the
-    short commit window itself is not atomic (versioned directories +
-    a pointer file are the full fix at scale). Centers, cluster count,
-    and counts in index_meta.json are refreshed. Recall is invariant: compaction
+    against freshly trained codebooks, then commits ``assignments/``,
+    ``codes/`` and ``index_meta.json`` together through
+    ``commit.replace_all``. Centers, cluster count, and counts in
+    index_meta.json are refreshed. Recall is invariant: compaction
     changes WHERE vectors sit, never which vectors exist — gated by
     the planted-copy recall test in tests/test_cli.py.
     """
     import json as _json
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -855,7 +828,7 @@ def cmd_compact_ann_index(args) -> None:
     except FileNotFoundError:
         raise SystemExit(f"no index_meta.json under {args.index}")
 
-    asg = spark.read.parquet(asg_path)
+    asg = _read_ann_table(spark, args.index, "assignments")
     sizes = {
         r["cluster"]: r["n"]
         for r in asg.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -879,44 +852,25 @@ def cmd_compact_ann_index(args) -> None:
         vecs, n_clusters=n_clusters,
         id_col=meta["id_col"], vec_col=meta["vec_col"],
     )
-    # STAGE everything first (all the expensive compute writes to
-    # sibling paths), then commit with a few adjacent filesystem ops —
-    # a crash during the retrain/re-code leaves the live index
-    # untouched. The commit itself (two renames + the meta write) is
-    # still not atomic; at real scale put each compaction in a
-    # versioned directory and flip a pointer file instead.
-    tmp_asg = asg_path + ".compacting"
-    assignments.write.mode("overwrite").partitionBy("cluster").parquet(tmp_asg)
-    tmp_codes = None
+    # persisted: PQ training and both writes share one re-assignment
+    assignments = assignments.persist()
+    pairs = [(asg_path, assignments.write.partitionBy("cluster").parquet)]
     if meta.get("pq"):
-        fresh = spark.read.parquet(tmp_asg)
         codebooks = train_pq_codebooks(
-            fresh, m=meta["pq"]["m"], ksub=meta["pq"]["ksub"],
+            assignments, m=meta["pq"]["m"], ksub=meta["pq"]["ksub"],
             id_col="corpus_id", vec_col="embedding",
         )
         codes = pq_assign(
-            fresh, codebooks, id_col="corpus_id", vec_col="embedding"
-        ).join(fresh.select("corpus_id", "cluster"), "corpus_id")
-        tmp_codes = codes_path + ".compacting"
-        codes.write.mode("overwrite").partitionBy("cluster").parquet(tmp_codes)
+            assignments, codebooks, id_col="corpus_id", vec_col="embedding"
+        ).join(assignments.select("corpus_id", "cluster"), "corpus_id")
+        pairs.append((codes_path, codes.write.partitionBy("cluster").parquet))
         meta["pq"]["codebooks"] = codebooks
-
     meta.update(centers=centers, n_clusters=n_clusters, n_vectors=n_total)
-    # Stage the new meta BEFORE touching the live dirs so the commit
-    # sequence is rename/rename/replace with no fs writes in between;
-    # os.replace is atomic, so the only crash window left is "new
-    # assignments + old meta", which _check_ann_meta_consistency in
-    # query/stats detects and reports loudly.
-    tmp_meta = meta_path + ".compacting"
-    with open(tmp_meta, "w") as f:
-        _json.dump(meta, f)
-    shutil.rmtree(asg_path)
-    os.rename(tmp_asg, asg_path)
-    if tmp_codes is not None:
-        if os.path.exists(codes_path):
-            shutil.rmtree(codes_path)
-        os.rename(tmp_codes, codes_path)
-    os.replace(tmp_meta, meta_path)
+    pairs.append((meta_path, _json_writer(meta)))
+    try:
+        commit.replace_all(pairs)
+    finally:
+        assignments.unpersist()
     new_sizes = {
         r["cluster"]: r["n"]
         for r in spark.read.parquet(asg_path)
@@ -928,6 +882,14 @@ def cmd_compact_ann_index(args) -> None:
         f"compact-ann-index: {n_total} vectors re-quantized into "
         f"{n_clusters} cells; balance {balance:.2f}x -> {new_balance:.2f}x ideal"
     )
+
+
+def _read_ann_table(spark, index: str, name: str):
+    """One relation of a persisted ANN index (``assignments``/``codes``),
+    after undoing any interrupted compaction swap."""
+    path = os.path.join(index, name)
+    commit.recover(path)
+    return spark.read.parquet(path)
 
 
 def _check_ann_meta_consistency(meta, assignments, index_path) -> None:
@@ -967,7 +929,7 @@ def cmd_ann_index_stats(args) -> None:
             meta = _json.load(f)
     except FileNotFoundError:
         raise SystemExit(f"no index_meta.json under {args.index}")
-    asg = spark.read.parquet(os.path.join(args.index, "assignments"))
+    asg = _read_ann_table(spark, args.index, "assignments")
     sizes = {
         r["cluster"]: r["n"]
         for r in asg.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -990,8 +952,7 @@ def cmd_ann_index_stats(args) -> None:
           f"(balance {biggest / ideal:.2f}x ideal)" if ideal else "  empty index")
     print(f"  empty cells {empty}")
     if meta.get("pq"):
-        codes = spark.read.parquet(os.path.join(args.index, "codes"))
-        n_codes = codes.count()
+        n_codes = _read_ann_table(spark, args.index, "codes").count()
         status = "OK" if n_codes == n_total else "MISMATCH"
         print(f"  pq codes {n_codes} ({status} vs {n_total} vectors)")
         if n_codes != n_total:
@@ -1023,7 +984,7 @@ def cmd_query_ann_index(args) -> None:
             meta = _json.load(f)
     except FileNotFoundError:
         raise SystemExit(f"no index_meta.json under {args.index}")
-    assignments = spark.read.parquet(os.path.join(args.index, "assignments"))
+    assignments = _read_ann_table(spark, args.index, "assignments")
     _check_ann_meta_consistency(meta, assignments, args.index)
     queries = spark.read.parquet(args.queries)
     qid, qvec = args.query_id_col, args.query_vec_col or meta["vec_col"]
@@ -1032,7 +993,7 @@ def cmd_query_ann_index(args) -> None:
             raise SystemExit(f"column {col!r} not in queries ({queries.columns})")
 
     if meta.get("pq") and not args.exact:
-        codes = spark.read.parquet(os.path.join(args.index, "codes"))
+        codes = _read_ann_table(spark, args.index, "codes")
         hits = ivfpq_query(
             assignments, meta["centers"], queries, meta["pq"]["codebooks"],
             k=args.k, nprobe=args.nprobe, candidate_mult=args.candidate_mult,

@@ -81,12 +81,6 @@ def extract_hychan_forecast(
     )
 
 
-def latest_fgt(forecast: DataFrame) -> DataFrame:
-    """Per-series latest forecast-generated time (K8 companion —
-    reference ``update_latest_fgt``, extract_water_level.py:216-217)."""
-    return forecast.groupBy("tms_id").agg(F.max("fgt").alias("fgt"))
-
-
 def update_run_dates(
     existing: DataFrame | None,
     forecast: DataFrame,

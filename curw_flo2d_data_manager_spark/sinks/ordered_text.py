@@ -2,17 +2,13 @@
 
 FLO-2D input files are order-sensitive text (K1–K5): the row order IS
 part of the format. A global sort + single output file is inherently
-anti-Spark, so it is isolated here, in exactly one utility, with two
-modes:
-
-* ``single`` (default): ``orderBy(keys)`` → write sorted part files →
-  driver-side ordered concat to the final path. The sort runs fully
-  distributed (range-partitioned exchange); only the final byte-concat
-  is sequential, and it is pure streaming IO. This is how a 45M-line
-  RAINCELL.DAT (BASELINE.md derived target) still renders with every
-  executor busy.
-* ``parts``: keep the sorted part files + a manifest listing them in
-  order (for consumers that can read a manifest, no concat cost).
+anti-Spark, so it is isolated here, in exactly one utility:
+``orderBy(keys)`` → write sorted part files → driver-side ordered
+concat, committed to the final path through ``commit.replace``. The
+sort runs fully distributed (range-partitioned exchange); only the
+final byte-concat is sequential, and it is pure streaming IO. This is
+how a 45M-line RAINCELL.DAT (BASELINE.md derived target) still renders
+with every executor busy.
 """
 
 from __future__ import annotations
@@ -24,6 +20,8 @@ import tempfile
 
 from pyspark.sql import Column, DataFrame
 
+from curw_flo2d_data_manager_spark import commit
+
 
 def write_ordered_text(
     df: DataFrame,
@@ -32,7 +30,6 @@ def write_ordered_text(
     line_col: str = "line",
     header_lines: list[str] | None = None,
     footer_lines: list[str] | None = None,
-    mode: str = "single",
     final_newline: bool = True,
 ) -> str:
     """Render ``df[line_col]`` sorted by ``sort_cols`` to ``path``.
@@ -44,7 +41,7 @@ def write_ordered_text(
     with the reference's ``'\\n'.join(...)`` writers (gen_chan.py:43-45
     and every input script's ``write_to_file``), which never terminate
     the last line.
-    Returns the written path (file or manifest dir).
+    A failure at any point leaves ``path`` as it was. Returns ``path``.
     """
     tmp = tempfile.mkdtemp(prefix="ordered_text_", dir=os.path.dirname(path) or ".")
     out_dir = os.path.join(tmp, "parts")
@@ -53,63 +50,22 @@ def write_ordered_text(
         # spark writes part files whose lexicographic name order equals
         # the range-partition order of the global sort.
         parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))
-        if mode == "parts":
-            os.makedirs(path, exist_ok=True)
-            manifest = []
-            for i, p in enumerate(parts):
-                dst = os.path.join(path, f"part-{i:05d}.txt")
-                shutil.move(p, dst)
-                manifest.append(os.path.basename(dst))
-            with open(os.path.join(path, "_MANIFEST"), "w") as f:
-                f.write("\n".join(manifest) + "\n")
-            return path
-        with open(path, "w") as out:
-            for h in header_lines or []:
-                out.write(h + "\n")
-            for p in parts:
-                with open(p) as src:
-                    shutil.copyfileobj(src, out)
-            for t in footer_lines or []:
-                out.write(t + "\n")
-        if not final_newline:
-            with open(path, "rb+") as out:
-                out.seek(0, os.SEEK_END)
-                if out.tell() and out.seek(out.tell() - 1) is not None:
-                    if out.read(1) == b"\n":
-                        out.truncate(out.tell() - 1)
-        return path
+
+        def concat(dst: str) -> None:
+            with open(dst, "w") as out:
+                out.writelines(h + "\n" for h in header_lines or [])
+                for p in parts:
+                    with open(p) as src:
+                        shutil.copyfileobj(src, out)
+                out.writelines(t + "\n" for t in footer_lines or [])
+            if not final_newline:
+                with open(dst, "rb+") as out:
+                    end = out.seek(0, os.SEEK_END)
+                    if end:
+                        out.seek(end - 1)
+                        if out.read(1) == b"\n":
+                            out.truncate(end - 1)
+
+        return commit.replace(path, concat)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def iter_ordered_parts(path: str):
-    """Stream the lines of a ``mode="parts"`` output in global order.
-
-    Reads ``_MANIFEST`` (part files listed in range-partition order)
-    and yields lines across them exactly as the ``single`` mode's
-    concatenated file would — the consumer-side contract of the
-    manifest escape hatch, so downstream tooling never has to know
-    which mode produced the output. Pure streaming (one open file at
-    a time), so a 45M-line parts directory iterates in constant
-    memory.
-    """
-    with open(os.path.join(path, "_MANIFEST")) as mf:
-        names = [ln.strip() for ln in mf if ln.strip()]
-    for name in names:
-        with open(os.path.join(path, name)) as part:
-            yield from (line.rstrip("\n") for line in part)
-
-
-def concat_ordered_parts(path: str, out_path: str) -> str:
-    """Materialize a ``mode="parts"`` directory into the equivalent
-    ``single`` file (byte-streaming copy in manifest order) — for
-    consumers that ultimately need the one file but want the render
-    job itself to skip the concat (e.g. render on the cluster in
-    ``parts`` mode, concat lazily on the consuming host)."""
-    with open(os.path.join(path, "_MANIFEST")) as mf:
-        names = [ln.strip() for ln in mf if ln.strip()]
-    with open(out_path, "w") as out:
-        for name in names:
-            with open(os.path.join(path, name)) as part:
-                shutil.copyfileobj(part, out)
-    return out_path

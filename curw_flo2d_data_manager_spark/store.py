@@ -23,8 +23,12 @@ At 100 TB the fact table is laid out ``PARTITIONED BY (date)`` with
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from curw_flo2d_data_manager_spark import commit
 
 
 class TimeseriesStore:
@@ -200,17 +204,11 @@ class TimeseriesStore:
         per-file open costs dominate the scan. This rewrites each
         selected partition to ``ceil(bytes/target)`` files, restoring
         the canonical in-file sort — the Parquet equivalent of the
-        reference MySQL's implicit index maintenance. Writes go
-        partition-by-partition through a write-new-then-swap rename,
-        so a reader never observes a PARTIALLY-compacted partition —
-        but the swap itself is two renames (POSIX has no atomic
-        directory exchange without renameat2), so there is a brief
-        window in which the partition directory is absent and a
-        concurrent lister misses or fails on that partition. Run
-        compaction when no job is listing the store (the reference's
-        cron layout guarantees this); if truly concurrent readers
-        matter, point them at a manifest/symlink that flips after the
-        swap instead of the directory tree.
+        reference MySQL's implicit index maintenance. Each partition
+        is committed through ``commit.replace``, so a reader never
+        observes a partially-compacted one; run compaction when no job
+        is listing the store (the reference's cron layout guarantees
+        this).
 
         Defaults fit the ``date=``-partitioned fact layout sorted by
         ``(id, time)``; the streaming digest ledger compacts with
@@ -220,9 +218,8 @@ class TimeseriesStore:
         Returns the number of partitions compacted.
         """
         import math
-        import os
-        import shutil
 
+        _recover_partitions(path)
         part_dirs = sorted(
             d for d in os.listdir(path)
             if d.startswith(partition_prefix)
@@ -232,7 +229,6 @@ class TimeseriesStore:
             keep = {f"{partition_prefix}{d}" for d in dates}
             part_dirs = [d for d in part_dirs if d in keep]
 
-        n_done = 0
         for d in part_dirs:
             pdir = os.path.join(path, d)
             size = sum(
@@ -242,26 +238,30 @@ class TimeseriesStore:
             )
             n_files = max(1, math.ceil(size / target_file_bytes))
             df = spark.read.parquet(pdir)
-            tmp = pdir + ".compact-tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            (
-                df.repartition(n_files)
-                .sortWithinPartitions(*sort_cols)
-                .write.mode("overwrite")
-                .parquet(tmp)
+            commit.replace(
+                pdir,
+                df.repartition(n_files).sortWithinPartitions(*sort_cols).write.parquet,
             )
-            old = pdir + ".compact-old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(pdir, old)
-            os.rename(tmp, pdir)
-            shutil.rmtree(old, ignore_errors=True)
-            n_done += 1
-        return n_done
+        return len(part_dirs)
 
     @classmethod
     def open(cls, spark, root: str) -> "TimeseriesStore":
         """Open a store written under ``root`` (``run/`` + ``data/``)."""
+        _recover_partitions(f"{root}/data")
         return cls(
             run=spark.read.parquet(f"{root}/run"),
             data=spark.read.parquet(f"{root}/data"),
         )
+
+
+def _recover_partitions(path: str) -> None:
+    """Undo interrupted partition swaps under ``path``: partition
+    discovery would read a leftover ``date=X.tmp-old`` or
+    ``date=X.tmp-swap`` directory as one more partition value."""
+
+    if not os.path.isdir(path):
+        return
+    for d in os.listdir(path):
+        for suffix in (commit.SWAP, commit.OLD):
+            if d.endswith(suffix):
+                commit.recover(os.path.join(path, d.removesuffix(suffix)))

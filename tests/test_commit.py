@@ -1,0 +1,339 @@
+"""``commit`` — the one path by which new content becomes visible.
+
+Each fault-injection case below interrupts one commit site of the CLI
+or the store at its worst moment (mid-concat, mid-``json.dump``, or
+between a directory swap's two renames) and checks that the target is
+left fully old, and that the next run converges to the uninterrupted
+result.
+"""
+
+import ast
+import json
+import os
+import shutil
+from datetime import datetime, timedelta
+from pathlib import Path
+
+import pytest
+
+from curw_flo2d_data_manager_spark.cli import main, merge_run_manifest
+
+PACKAGE_DIR = Path(__file__).resolve().parent.parent / "curw_flo2d_data_manager_spark"
+
+
+def _rename_crashing(monkeypatch, should_crash):
+    """Patch ``os.rename`` to raise once, on the first call for which
+    ``should_crash(src, dst)`` holds."""
+    real_rename = os.rename
+    crashed = []
+
+    def rename(src, dst):
+        if not crashed and should_crash(src, dst):
+            crashed.append(src)
+            raise OSError("injected crash between the swap renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
+# ------------------------------------------------------------------ guard
+def rename_calls(source: str) -> list[int]:
+    """Lines that call ``os.rename``/``os.replace`` or import them from
+    ``os``."""
+    names = {"rename", "replace"}
+    hits = []
+    for node in ast.walk(ast.parse(source)):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr in names
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        ):
+            hits.append(node.lineno)
+        elif isinstance(node, ast.ImportFrom) and node.module == "os":
+            hits += [node.lineno for a in node.names if a.name in names]
+    return hits
+
+
+def test_only_commit_module_renames():
+    offenders = {
+        str(p.relative_to(PACKAGE_DIR)): lines
+        for p in sorted(PACKAGE_DIR.rglob("*.py"))
+        if p.name != "commit.py" and (lines := rename_calls(p.read_text()))
+    }
+    assert not offenders, (
+        f"os.rename/os.replace outside commit.py (file:lines): {offenders}"
+    )
+
+
+def test_guard_sees_attribute_and_from_imports():
+    src = (
+        "import os\n"
+        "from os import replace\n"
+        "os.rename('a', 'b')\n"
+        "s.replace('x', 'y')\n"
+    )
+    assert rename_calls(src) == [2, 3]
+
+
+# -------------------------------------------------------- commit sites
+def test_gen_raincell_crash_mid_concat_leaves_no_file(spark, tmp_path, monkeypatch):
+    """A crash while the .DAT is being concatenated must leave nothing
+    at ``--out``; otherwise the skip-if-exists gate keeps the truncated
+    file forever. The re-run must then write the uninterrupted bytes."""
+    store = str(tmp_path / "store")
+    t0 = datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [
+            (c, t0 + timedelta(minutes=15 * (s + 1)), 0.25 * s + 0.001 * c)
+            for s in range(4)
+            for c in (11, 12, 13)
+        ],
+        "cell_id int, time timestamp, value double",
+    ).write.parquet(os.path.join(store, "raincell"))
+
+    def gen(out_dir):
+        os.makedirs(out_dir, exist_ok=True)
+        out = os.path.join(out_dir, "RAINCELL.DAT")
+        main([
+            "gen-raincell", "-m", "flo2d_150_v2",
+            "-s", "2024-01-01 00:00:00", "-e", "2024-01-01 01:00:00",
+            "--store", store, "--out", out,
+        ])
+        return out
+
+    want = open(gen(str(tmp_path / "clean")), "rb").read()
+
+    real_copy = shutil.copyfileobj
+
+    def copy_crashing(src, dst, *a, **k):
+        if "RAINCELL" in getattr(dst, "name", ""):
+            dst.write(src.read(8))
+            raise OSError("injected crash mid-concat")
+        return real_copy(src, dst, *a, **k)
+
+    run_dir = str(tmp_path / "run")
+    monkeypatch.setattr(shutil, "copyfileobj", copy_crashing)
+    with pytest.raises(OSError, match="injected crash"):
+        gen(run_dir)
+    monkeypatch.undo()
+    assert os.listdir(run_dir) == []
+
+    assert open(gen(run_dir), "rb").read() == want
+
+
+def test_compact_store_recovers_partition_after_interrupted_swap(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between a partition swap's renames leaves ``date=X``
+    absent. Opening the store must restore it (with the temp copy a
+    hard kill mid-write leaves behind, which partition discovery would
+    read as one more ``date`` value), and the next compaction must
+    finish, with the same rows and no temp partition directory left."""
+    from curw_flo2d_data_manager_spark.store import TimeseriesStore
+
+    store = str(tmp_path / "store")
+    spark.createDataFrame(
+        [("s1", "m", "flo2d", "g1")], "id string, method string, model string, grid_id string"
+    ).write.parquet(os.path.join(store, "run"))
+    path = os.path.join(store, "data")
+    for k in range(4):
+        TimeseriesStore.write_data(
+            spark.createDataFrame(
+                [("s1", datetime(2024, 1, 1 + k % 2, k), float(k))],
+                "id string, time timestamp, value double",
+            ),
+            path,
+            mode="append",
+        )
+
+    def rows(df=None):
+        return sorted(
+            (r["id"], str(r["time"]), r["value"])
+            for r in (df or spark.read.parquet(path)).collect()
+        )
+
+    want_rows, want_dirs = rows(), sorted(os.listdir(path))
+    assert "date=2024-01-01" in want_dirs
+
+    day = os.path.join(path, "date=2024-01-01")
+    _rename_crashing(monkeypatch, lambda src, dst: dst == day)
+    with pytest.raises(OSError, match="injected crash"):
+        main(["compact-store", "--path", path, "--target_mb", "128"])
+    monkeypatch.undo()
+    assert not os.path.exists(day)
+    other = os.path.join(path, "date=2024-01-02")
+    shutil.copytree(other, other + ".tmp-swap")
+
+    data = TimeseriesStore.open(spark, store).data
+    assert dict(data.dtypes)["date"] == "date"
+    assert sorted(os.listdir(path)) == want_dirs
+    assert rows(data) == want_rows
+
+    main(["compact-store", "--path", path, "--target_mb", "128"])
+    assert sorted(os.listdir(path)) == want_dirs
+    assert rows() == want_rows
+
+
+def test_compact_ann_index_crash_keeps_query_results(spark, tmp_path, monkeypatch, capsys):
+    """A crash between the renames that swap in the re-quantized
+    ``assignments/`` must leave the index queryable with the hits it
+    gave before the compaction started."""
+    import math
+    import random
+
+    rng = random.Random(5)
+    rows = [
+        (i, [float(math.cos(0.3 * (i % 7) * (d + 1)) + rng.random()) for d in range(8)])
+        for i in range(200)
+    ]
+    src = str(tmp_path / "emb.parquet")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(src)
+    qsrc = str(tmp_path / "queries.parquet")
+    spark.createDataFrame(
+        [(9004, rows[4][1]), (9042, rows[42][1])], "vec_id long, embedding array<float>"
+    ).write.parquet(qsrc)
+    idx = str(tmp_path / "ann_index")
+    main(["build-ann-index", "--input", src, "--output", idx, "--clusters", "6"])
+
+    def hits(name):
+        out = str(tmp_path / name)
+        main([
+            "query-ann-index", "--index", idx, "--queries", qsrc,
+            "--output", out, "--k", "3", "--nprobe", "2",
+        ])
+        return sorted(
+            (r["query_id"], r["corpus_id"], r["rank"])
+            for r in spark.read.parquet(out).collect()
+        )
+
+    want = hits("before.parquet")
+    assert {(q, c) for q, c, rank in want if rank == 1} == {(9004, 4), (9042, 42)}
+
+    asg_path = os.path.join(idx, "assignments")
+    _rename_crashing(monkeypatch, lambda src, dst: dst == asg_path)
+    with pytest.raises(OSError, match="injected crash"):
+        main(["compact-ann-index", "--index", idx, "--force", "--clusters", "4"])
+    monkeypatch.undo()
+    assert not os.path.exists(asg_path)
+
+    assert hits("after.parquet") == want
+    assert sorted(os.listdir(idx)) == ["assignments", "index_meta.json"]
+    capsys.readouterr()
+
+
+def test_compact_ann_index_pq_failure_in_codes_write_keeps_index(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A failure while the re-coded PQ ``codes/`` are being written must
+    leave the whole index old — ``assignments/`` included, so the
+    centers, codebooks and codes stay consistent. The cluster count is
+    unchanged, so the stale-meta check could not catch a half-committed
+    index: the hits themselves must match."""
+    import math
+    import random
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    rng = random.Random(7)
+    rows = [
+        (i, [float(math.sin(0.4 * (i % 9) * (d + 1)) + rng.random()) for d in range(8)])
+        for i in range(200)
+    ]
+    src = str(tmp_path / "emb.parquet")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(src)
+    qsrc = str(tmp_path / "queries.parquet")
+    spark.createDataFrame(
+        [(9004, rows[4][1]), (9042, rows[42][1])], "vec_id long, embedding array<float>"
+    ).write.parquet(qsrc)
+    idx = str(tmp_path / "ann_index")
+    main([
+        "build-ann-index", "--input", src, "--output", idx,
+        "--clusters", "6", "--pq", "--pq-m", "4", "--pq-ksub", "8",
+    ])
+
+    def hits(name):
+        out = str(tmp_path / name)
+        main([
+            "query-ann-index", "--index", idx, "--queries", qsrc,
+            "--output", out, "--k", "3", "--nprobe", "2",
+        ])
+        return sorted(
+            (r["query_id"], r["corpus_id"], r["rank"])
+            for r in spark.read.parquet(out).collect()
+        )
+
+    def snapshot():
+        return {
+            name: sorted(map(tuple, spark.read.parquet(os.path.join(idx, name)).collect()))
+            for name in ("assignments", "codes")
+        } | {"meta": open(os.path.join(idx, "index_meta.json")).read()}
+
+    want, want_index = hits("before.parquet"), snapshot()
+    assert {(q, c) for q, c, rank in want if rank == 1} == {(9004, 4), (9042, 42)}
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        if path.endswith(os.path.join("ann_index", "codes.tmp-swap")):
+            real_parquet(self, path, *a, **k)
+            raise OSError("injected failure inside the codes write")
+        return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError, match="injected failure"):
+        main(["compact-ann-index", "--index", idx, "--force", "--clusters", "6"])
+    monkeypatch.undo()
+
+    assert sorted(os.listdir(idx)) == ["assignments", "codes", "index_meta.json"]
+    assert snapshot() == want_index
+    assert hits("after.parquet") == want
+    capsys.readouterr()
+
+
+def test_merge_run_manifest_crash_keeps_previous(tmp_path, monkeypatch):
+    out = str(tmp_path / "INFLOW.DAT")
+    manifest = merge_run_manifest(out, {"inflow": {"model": "a"}})
+    before = open(manifest).read()
+
+    def dump_crashing(obj, f, *a, **k):
+        f.write('{"partial')
+        raise OSError("injected crash inside json.dump")
+
+    monkeypatch.setattr(json, "dump", dump_crashing)
+    with pytest.raises(OSError, match="injected crash"):
+        merge_run_manifest(out, {"raincell": {"model": "b"}})
+    monkeypatch.undo()
+    assert open(manifest).read() == before
+    assert os.listdir(tmp_path) == ["run_meta.json"]
+
+
+def test_init_keeps_registered_stations_after_interrupted_swap(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the renames of the ``stations_dim`` swap must not
+    make the re-run take the table for a first run: the stations of the
+    first registration survive the second one."""
+    store = str(tmp_path / "store")
+    grid = tmp_path / "grid.csv"
+    grid.write_text("Grid_ID,X,Y\n1,79.80,6.90\n2,79.81,6.91\n3,79.82,6.92\n")
+
+    def init(cells):
+        station_map = tmp_path / "map.json"
+        station_map.write_text(json.dumps({"CHANNEL_CELL_MAP": cells}))
+        main([
+            "init", "-m", "flo2d_150_v2", "--store", store,
+            "--grid_csv", str(grid), "--station_map", str(station_map),
+        ])
+
+    init({"1": "Alpha"})
+    sta_path = os.path.join(store, "stations_dim")
+    _rename_crashing(monkeypatch, lambda src, dst: src == sta_path + ".tmp-swap")
+    with pytest.raises(OSError, match="injected crash"):
+        init({"2": "Beta"})
+    monkeypatch.undo()
+    assert not os.path.exists(sta_path)
+
+    init({"2": "Beta"})
+    names = sorted(r["name"] for r in spark.read.parquet(sta_path).collect())
+    assert names == ["1_Alpha", "2_Beta"]

@@ -26,15 +26,6 @@ def test_write_ordered_text_large_order(spark, tmp_path):
     assert lines == [str(i) for i in range(n)]
 
 
-def test_write_ordered_text_parts_manifest(spark, tmp_path):
-    df = spark.createDataFrame([(i, f"l{i}") for i in range(100)], "rank int, line string")
-    out = str(tmp_path / "parts_out")
-    write_ordered_text(df, out, ["rank"], mode="parts")
-    manifest = open(f"{out}/_MANIFEST").read().split()
-    text = "".join(open(f"{out}/{p}").read() for p in manifest)
-    assert text.splitlines() == [f"l{i}" for i in range(100)]
-
-
 def test_merge_upsert(spark):
     existing = spark.createDataFrame(
         [("a", 1, 10.0), ("b", 1, 20.0)], "id string, t int, v double"
@@ -53,36 +44,6 @@ def test_merge_upsert_idempotent(spark):
     once = merge_upsert(existing, incoming, ["id", "t"])
     twice = merge_upsert(once, incoming, ["id", "t"])
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
-
-
-def test_parts_manifest_readers_match_single_mode(spark, tmp_path):
-    """iter_ordered_parts / concat_ordered_parts must reproduce the
-    single-mode file exactly — the consumer-side contract that makes
-    the parts escape hatch transparent."""
-    from pyspark.sql import functions as F
-
-    from curw_flo2d_data_manager_spark.sinks.ordered_text import (
-        concat_ordered_parts,
-        iter_ordered_parts,
-        write_ordered_text,
-    )
-
-    df = spark.range(500).select(
-        F.lit(0).alias("block_rank"),
-        F.col("id").alias("intra_rank"),
-        F.format_string("line %05d", F.col("id")).alias("line"),
-    ).repartition(7)
-
-    single = str(tmp_path / "OUT.DAT")
-    write_ordered_text(df, single, sort_cols=["block_rank", "intra_rank"])
-    parts = str(tmp_path / "OUT.parts")
-    write_ordered_text(df, parts, sort_cols=["block_rank", "intra_rank"], mode="parts")
-
-    want = open(single).read().splitlines()
-    assert list(iter_ordered_parts(parts)) == want
-
-    merged = concat_ordered_parts(parts, str(tmp_path / "MERGED.DAT"))
-    assert open(merged).read() == open(single).read()
 
 
 def test_upsert_sql_rejects_unsafe_identifiers():

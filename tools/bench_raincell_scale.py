@@ -1,24 +1,22 @@
 """Scale smoke for the RAINCELL pipeline (BASELINE.md derived target).
 
 Renders a full-size RAINCELL.DAT — 39,526 grid cells × N timesteps —
-as ONE Spark job through the ordered-text sink, the workload for which
-the reference makes N sequential stored-procedure round-trips
-(gen_raincell.py:129-142). Renders BOTH sink modes (round-3 verdict
-item 3): ``single`` (distributed sort + driver-side streaming concat
-to one file) and ``parts`` (sorted part files + ordered manifest, no
-concat — the manifest escape hatch for consumers that can read one).
-Prints one JSON line with per-mode timings and line counts.
+as ONE Spark job through the ordered-text sink (distributed sort +
+driver-side streaming concat to one file), the workload for which the
+reference makes N sequential stored-procedure round-trips
+(gen_raincell.py:129-142). Prints one JSON line with the timing and
+line count.
 
-Usage: python tools/bench_raincell_scale.py [steps] [modes]
+Usage: python tools/bench_raincell_scale.py [steps]
 (default 288 — one day at 5 minutes ≈ 11.4M data lines; 1152 ≈ the
-45.5M-line 4-day target. modes = comma list from {single,parts},
-default both).
+45.5M-line 4-day target).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -61,109 +59,24 @@ def main() -> None:
     lines = raincell_lines(spark, grid, "flo2d_250", start, end)  # 5-min model
     build_s = time.monotonic() - t0
 
-    modes = (sys.argv[2] if len(sys.argv) > 2 else "single,parts").split(",")
     expected = 1 + steps * (N_CELLS + 1)
+    tmp = tempfile.mkdtemp(prefix="raincell_scale_")
+    out = os.path.join(tmp, "RAINCELL.DAT")
+    t0 = time.monotonic()
+    write_ordered_text(lines, out, sort_cols=["block_rank", "intra_rank"])
+    render_s = time.monotonic() - t0
+    n_lines = sum(1 for _ in open(out))
+    shutil.rmtree(tmp, ignore_errors=True)
     result = {
         "metric": "raincell_scale_render",
         "steps": steps,
         "cells": N_CELLS,
         "expected_lines": expected,
         "plan_build_sec": round(build_s, 2),
+        "single_render_sec": round(render_s, 2),
+        "single_lines_per_sec": int(n_lines / render_s),
+        "single_ok": n_lines == expected,
     }
-    tmp = tempfile.mkdtemp(prefix="raincell_scale_")
-    import glob
-    import shutil
-
-    for mode in modes:
-        out = os.path.join(tmp, "RAINCELL.DAT" if mode == "single" else "RAINCELL.parts")
-        t0 = time.monotonic()
-        write_ordered_text(
-            lines, out, sort_cols=["block_rank", "intra_rank"], mode=mode
-        )
-        render_s = time.monotonic() - t0
-        if mode == "single":
-            n_lines = sum(1 for _ in open(out))
-        else:
-            # ONE buffered byte pass over the parts (455M lines of
-            # python line iteration is MINUTES; newline counting on
-            # 1 MiB chunks runs at ~GB/s): count + per-part first/last
-            # lines together, in MANIFEST order.
-            def _scan_part(p):
-                cnt = 0
-                head = b""
-                tail = b""
-                with open(p, "rb") as fh:
-                    while True:
-                        chunk = fh.read(1 << 20)
-                        if not chunk:
-                            break
-                        if b"\n" not in head:
-                            # contiguous prefix until the first line
-                            # boundary — slicing a fixed window from
-                            # every chunk would stitch non-adjacent
-                            # byte ranges together
-                            head += chunk
-                        cnt += chunk.count(b"\n")
-                        keep = 1 << 16
-                        tail = (tail + chunk)[-keep:] if len(chunk) < keep else chunk[-keep:]
-                if not head:
-                    return 0, None, None
-                if not tail.endswith(b"\n"):
-                    cnt += 1  # final unterminated line
-                first = head.split(b"\n", 1)[0].decode()
-                # last LINE, blank-preserving: RAINCELL blocks end in a
-                # blank separator, so a file ending "…19.123\n\n" has
-                # last line '' — rstrip-all-newlines would wrongly
-                # report the previous line
-                segs = tail.split(b"\n")
-                last = (segs[-2] if tail.endswith(b"\n") else segs[-1]).decode()
-                return cnt, first, last
-
-            with open(os.path.join(out, "_MANIFEST")) as mf:
-                names = [ln.strip() for ln in mf if ln.strip()]
-            bounds = []  # (global_rn, expected_line)
-            offset = 0
-            for name in names:
-                cnt, first, last = _scan_part(os.path.join(out, name))
-                if cnt:
-                    bounds.append((offset + 1, first))
-                    bounds.append((offset + cnt, last))
-                offset += cnt
-            n_lines = offset
-        result[f"{mode}_render_sec"] = round(render_s, 2)
-        result[f"{mode}_lines_per_sec"] = int(n_lines / render_s)
-        result[f"{mode}_ok"] = n_lines == expected
-        if mode == "parts":
-            result["parts_files"] = len(names)
-            # Byte-verify global order across parts (round-8 verdict
-            # item 4, UNTIMED — verification is itself a big job):
-            # check the globally-sorted relation holds exactly each
-            # part's first/last line at the parts' cumulative boundary
-            # offsets. A mis-ranged part, a mis-ordered manifest, or
-            # an intra-part sort slip all break a boundary.
-            from curw_flo2d_data_manager_spark.operators.rownum import (
-                global_row_number,
-            )
-
-            rns = {rn for rn, _ in bounds}
-            # distributed global numbering — no SinglePartition sort
-            # of the 455M-line relation just to verify it
-            got = {
-                r["rn"]: r["line"]
-                for r in global_row_number(
-                    lines, ["block_rank", "intra_rank"], out_col="rn"
-                )
-                .filter(F.col("rn").isin(list(rns)))
-                .select("rn", "line")
-                .collect()
-            }
-            result["parts_boundary_checks"] = len(bounds)
-            result["parts_boundaries_ok"] = all(
-                got.get(rn) == line for rn, line in bounds
-            )
-            result["parts_manifest_total_ok"] = offset == expected
-        shutil.rmtree(out, ignore_errors=True) if os.path.isdir(out) else os.remove(out)
-    shutil.rmtree(tmp, ignore_errors=True)
     print(json.dumps(result))
 
 

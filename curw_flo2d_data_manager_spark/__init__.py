@@ -16,8 +16,8 @@ the FLO-2D flood model), re-expressed Spark-first:
 Everything is built on public PySpark APIs only.
 """
 
-from curw_flo2d_data_manager_spark.session import get_spark, load_tables
+from curw_flo2d_data_manager_spark.session import get_spark
 from curw_flo2d_data_manager_spark.store import TimeseriesStore
 
-__all__ = ["get_spark", "load_tables", "TimeseriesStore"]
+__all__ = ["get_spark", "TimeseriesStore"]
 __version__ = "0.1.0"

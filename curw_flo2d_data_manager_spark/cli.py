@@ -194,8 +194,8 @@ def cmd_gen_rain(args) -> None:
     spark = get_spark(app_name="gen-rain")
     store = _load_store(spark, args.store)
     if is_10m:
-        stations = spark.read.parquet(
-            args.obs_stations or os.path.join(args.store, "obs_stations")
+        stations = commit.table(
+            spark, args.obs_stations or os.path.join(args.store, "obs_stations")
         )
         grid_ids = nearest_gauge_grid_ids(spark, stations, lat, lon)
         # the reference hardcodes method='MME' when resolving the
@@ -236,7 +236,7 @@ def cmd_gen_raincell(args) -> None:
     validate_grid_time(args.end_time, spec.timestep_min)
     start = max(args.start_time, RAINCELL_MIN_START)  # hard floor (:110)
     spark = get_spark(app_name="gen-raincell")
-    rain = spark.read.parquet(os.path.join(args.store, "raincell"))
+    rain = commit.table(spark, os.path.join(args.store, "raincell"))
     lines = raincell_lines(spark, rain, args.model, start, args.end_time)
     write_ordered_text(lines, args.out, sort_cols=["block_rank", "intra_rank"])
     merge_run_manifest(
@@ -303,8 +303,8 @@ def cmd_gen_chan(args) -> None:
         ],
         "pair_idx long, up_cell string, up_default string, dwn_cell string, dwn_default string",
     )
-    ics = spark.read.parquet(os.path.join(args.store, "initial_conditions"))
-    obs = spark.read.parquet(os.path.join(args.store, "obs"))
+    ics = commit.table(spark, os.path.join(args.store, "initial_conditions"))
+    obs = commit.table(spark, os.path.join(args.store, "obs"))
     lines = chan_lines(pairs, ics, obs, args.model, args.start_time)
     head = open(args.head).read().splitlines() if args.head else None
     tail = open(args.tail).read().splitlines() if args.tail else None
@@ -350,8 +350,8 @@ def cmd_init(args) -> None:
     )
     for df, path in ((m_src, src_path), (m_sta, sta_path)):
         _overwrite_parquet(df, path)
-    n_sta = spark.read.parquet(sta_path).count()
-    n_src = spark.read.parquet(src_path).count()
+    n_sta = commit.table(spark, sta_path).count()
+    n_src = commit.table(spark, src_path).count()
     print(f"registered {n_sta} stations, {n_src} sources")
 
 
@@ -383,7 +383,7 @@ def cmd_extract_water_level(args) -> None:
         fgt = mtime.strftime(DATE_FMT)
     col = {"WaterLevel": "water_level", "Discharge": "discharge"}[args.variable]
     parsed = parse_hychan(spark, args.hychan, base_time=args.base_time, variable=col)
-    stations = spark.read.parquet(os.path.join(args.store, "stations"))
+    stations = commit.table(spark, os.path.join(args.store, "stations"))
 
     # Reference utcOffset semantics (extract_water_level.py:80-106
     # getUTCOffset + :176-191): pattern-or-default parse, then BOTH
@@ -423,7 +423,7 @@ def cmd_extract_water_level(args) -> None:
         # −999 in the upsert payload (:575-577 appends MISSING_VALUE
         # straight into the series pushed to the DB).
         fp_sta = (
-            spark.read.parquet(args.flood_stations)
+            commit.table(spark, args.flood_stations)
             if args.flood_stations
             else stations
         )
@@ -873,7 +873,7 @@ def cmd_compact_ann_index(args) -> None:
         assignments.unpersist()
     new_sizes = {
         r["cluster"]: r["n"]
-        for r in spark.read.parquet(asg_path)
+        for r in commit.table(spark, asg_path)
         .groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     new_ideal = n_total / n_clusters if n_clusters else 0.0
@@ -889,7 +889,7 @@ def _read_ann_table(spark, index: str, name: str):
     after undoing any interrupted compaction swap."""
     path = os.path.join(index, name)
     commit.recover(path)
-    return spark.read.parquet(path)
+    return commit.table(spark, path)
 
 
 def _check_ann_meta_consistency(meta, assignments, index_path) -> None:

@@ -12,16 +12,41 @@ committed copy at ``.tmp-old``, which ``recover`` renames back. Every
 reader of a swapped directory recovers it first. ``replace_all``
 writes every temp copy of several targets before the first swap.
 
+``table(spark, path)`` is the read half: the only way the package
+resolves a committed parquet path to a DataFrame. It remembers each
+path's inferred schema per session, so a re-read skips Spark's
+schema-inference job; the file listing stays fresh and no data is
+cached. ``replace_all`` forgets every schema at or under a target it
+swaps.
+
 Single writer per target, and no ``recover`` during a commit of that
 target: the CLI's cron-sequenced commands touch a path one at a time.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
+import stat
+import threading
 
 SWAP, OLD = ".tmp-swap", ".tmp-old"
+
+# Parquet reader confs that change the schema Spark infers from the
+# same files (``queries._events`` turns the first on).
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# (application id, absolute path) -> {conf values: (signature, schema)}
+_schemas: dict = {}
+_schemas_lock = threading.Lock()
 
 
 def _remove(path: str) -> None:
@@ -55,6 +80,7 @@ def replace_all(pairs) -> None:
                 with open(target + SWAP, "rb") as f:
                     os.fsync(f.fileno())
         for target in targets:
+            _forget(target)
             tmp, old = target + SWAP, target + OLD
             if not os.path.isdir(tmp):
                 os.replace(tmp, target)
@@ -85,4 +111,44 @@ def read_parquet(spark, target: str):
     recover(target)
     if not os.path.exists(target):
         return None
-    return spark.read.parquet(target)
+    return table(spark, target)
+
+
+def _signature(path: str) -> bytes:
+    """Digest of ``st_ino``/``st_mtime_ns``/``st_size`` of ``path`` and
+    of every directory and file under it: an added partition or file,
+    a swap and a rewrite all change it."""
+    h = hashlib.blake2b(digest_size=16)
+    todo = [path]
+    while todo:
+        p = todo.pop()
+        st = os.stat(p)
+        h.update(f"{p}\0{st.st_ino}\0{st.st_mtime_ns}\0{st.st_size}\n".encode())
+        if stat.S_ISDIR(st.st_mode):
+            todo.extend(sorted(e.path for e in os.scandir(p)))
+    return h.digest()
+
+
+def _forget(target: str) -> None:
+    root = os.path.abspath(target)
+    with _schemas_lock:
+        for key in [k for k in _schemas if k[1] == root or k[1].startswith(root + os.sep)]:
+            del _schemas[key]
+
+
+def table(spark, path: str):
+    """The parquet table at ``path``. The first read in a session
+    infers the schema (``spark.read.parquet``); a re-read of unchanged
+    files under the same inference confs passes that schema back, so
+    Spark lists the files afresh but runs no inference job."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+    confs = tuple(spark.conf.get(k, None) for k in _INFER_CONFS)
+    sig = _signature(path)
+    with _schemas_lock:
+        hit = _schemas.get(key, {}).get(confs)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    with _schemas_lock:
+        _schemas.setdefault(key, {})[confs] = (sig, df.schema)
+    return df

@@ -1,19 +1,21 @@
 """Table readers shared by the query family modules: ``_t`` scans one
 driver table, ``_events`` scans the events table with an optional
-pushed-down time bound."""
+pushed-down time bound. Both resolve the table through
+``commit.table``, so a session infers each table's schema once."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from curw_flo2d_data_manager_spark import commit
 from curw_flo2d_data_manager_spark.operators.parallelism import ensure_min_partitions
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _events(spark, sf_dir)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = commit.table(spark, f"{sf_dir}/{name}.parquet")
     if name in ("documents", "embeddings"):
         # Small single-file inputs otherwise scan on one core; the
         # guard is a no-op on properly-split big inputs.
@@ -49,7 +51,7 @@ def _events(
     from pyspark.sql.types import LongType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = commit.table(spark, f"{sf_dir}/events.parquet")
     ts_type = df.schema["ts"].dataType
 
     if isinstance(ts_type, LongType):  # legacy INT64(NANOS) layout

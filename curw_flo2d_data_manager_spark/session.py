@@ -91,6 +91,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", DEFAULT_TZ)
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # queries._events needs INT64 TIMESTAMP(NANOS) read as long;
+        # set from the start, so the parquet schemas commit.table
+        # remembers (keyed by this conf) stay valid all session
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local mode: driver heap IS the whole executor pool —
         # derived from host memory (1/4 of MemTotal clamped to
         # [8g, 24g]; see _default_driver_memory). The 128 GiB build
@@ -123,28 +127,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the driver's synthetic parquet tables as temp views.
-
-    Returns a dict name → DataFrame. Views let operators be written in
-    either DataFrame or ``spark.sql`` form against the same session.
-    """
-    all_names = (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for name in names or all_names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

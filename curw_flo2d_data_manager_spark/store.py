@@ -237,7 +237,7 @@ class TimeseriesStore:
                 if not f.startswith(("_", "."))
             )
             n_files = max(1, math.ceil(size / target_file_bytes))
-            df = spark.read.parquet(pdir)
+            df = commit.table(spark, pdir)
             commit.replace(
                 pdir,
                 df.repartition(n_files).sortWithinPartitions(*sort_cols).write.parquet,
@@ -249,8 +249,8 @@ class TimeseriesStore:
         """Open a store written under ``root`` (``run/`` + ``data/``)."""
         _recover_partitions(f"{root}/data")
         return cls(
-            run=spark.read.parquet(f"{root}/run"),
-            data=spark.read.parquet(f"{root}/data"),
+            run=commit.table(spark, f"{root}/run"),
+            data=commit.table(spark, f"{root}/data"),
         )
 
 

@@ -17,3 +17,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def jobs_fired(spark):
+    """``jobs_fired(fn)`` runs ``fn()`` under a fresh job group and
+    returns ``(fn(), number of Spark jobs it started)``."""
+    import itertools
+
+    sc = spark.sparkContext
+    tags = itertools.count()
+
+    def run(fn):
+        tag = f"jobs-fired-{next(tags)}"
+        sc.setJobGroup(tag, tag)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    return run

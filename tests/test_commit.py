@@ -4,18 +4,21 @@ Each fault-injection case below interrupts one commit site of the CLI
 or the store at its worst moment (mid-concat, mid-``json.dump``, or
 between a directory swap's two renames) and checks that the target is
 left fully old, and that the next run converges to the uninterrupted
-result.
+result. The read-half cases check that ``commit.table`` gives what
+``spark.read.parquet`` gives, and re-resolves a path after any change.
 """
 
 import ast
 import json
 import os
 import shutil
+from collections import Counter
 from datetime import datetime, timedelta
 from pathlib import Path
 
 import pytest
 
+from curw_flo2d_data_manager_spark import commit
 from curw_flo2d_data_manager_spark.cli import main, merge_run_manifest
 
 PACKAGE_DIR = Path(__file__).resolve().parent.parent / "curw_flo2d_data_manager_spark"
@@ -337,3 +340,138 @@ def test_init_keeps_registered_stations_after_interrupted_swap(
     init({"2": "Beta"})
     names = sorted(r["name"] for r in spark.read.parquet(sta_path).collect())
     assert names == ["1_Alpha", "2_Beta"]
+
+
+# ------------------------------------------------------------ read half
+SF_TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
+
+def _multiset(df):
+    return Counter(repr(tuple(r)) for r in df.collect())
+
+
+def _small_store(spark, root):
+    from curw_flo2d_data_manager_spark.store import TimeseriesStore
+
+    spark.createDataFrame(
+        [("s1", "m", "flo2d", "g1"), ("s2", "m", "flo2d", "g2")],
+        "id string, method string, model string, grid_id string",
+    ).write.parquet(os.path.join(root, "run"))
+    TimeseriesStore.write_data(
+        spark.createDataFrame(
+            [(f"s{1 + k % 2}", datetime(2024, 1, 1 + k % 3, k), float(k)) for k in range(12)],
+            "id string, time timestamp, value double",
+        ),
+        os.path.join(root, "data"),
+    )
+
+
+def test_table_matches_spark_read(spark, sf_dir, tmp_path, jobs_fired):
+    """A re-read through the catalog (no inference job) gives the
+    schema and rows ``spark.read.parquet`` gives, for every driver
+    table and a store; the store's ``date`` stays a pruned date."""
+    from curw_flo2d_data_manager_spark.store import TimeseriesStore
+
+    store = str(tmp_path / "store")
+    _small_store(spark, store)
+    paths = [f"{sf_dir}/{name}.parquet" for name in SF_TABLES]
+    paths += [os.path.join(store, "run"), os.path.join(store, "data")]
+    for path in paths:
+        commit.table(spark, path)
+        got, jobs = jobs_fired(lambda: commit.table(spark, path))
+        assert jobs == 0, path
+        want = spark.read.parquet(path)
+        assert got.schema == want.schema, path
+        assert _multiset(got) == _multiset(want), path
+
+    data, jobs = jobs_fired(lambda: TimeseriesStore.open(spark, store).data)
+    assert jobs == 0
+    assert dict(data.dtypes)["date"] == "date"
+    q = TimeseriesStore(run=None, data=data).get_timeseries(
+        "s1", "2024-01-02 00:00:00", "2024-01-02 23:59:59"
+    )
+    assert "PartitionFilters: [isnotnull(date" in q._jdf.queryExecution().executedPlan().toString()
+    assert [r.value for r in q.collect()] == [4.0, 10.0]
+
+
+def test_replace_drops_remembered_schema(spark, tmp_path):
+    """``commit.replace`` forgets every schema at or under its target,
+    so the next read sees the new column."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path)
+    spark.range(2).write.parquet(os.path.join(path, "nested"))
+    df = commit.table(spark, path)
+    commit.table(spark, os.path.join(path, "nested"))
+    commit.replace(path, df.withColumn("extra", F.lit(1)).write.parquet)
+    assert not [k for k in commit._schemas if k[1].startswith(os.path.abspath(path))]
+    got = commit.table(spark, path)
+    assert got.columns == ["id", "extra"]
+    assert sorted(r.id for r in got.collect()) == list(range(5))
+
+
+def test_table_sees_out_of_band_changes(spark, tmp_path):
+    """A partition directory added behind the catalog's back, or a
+    file rewritten in place, changes the stat signature."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = str(tmp_path / "store")
+    _small_store(spark, store)
+    data = os.path.join(store, "data")
+    commit.table(spark, data)
+    new_day = os.path.join(data, "date=2024-01-09")
+    os.makedirs(new_day)
+    pq.write_table(
+        pa.table({"id": ["s9"], "time": pa.array([datetime(2024, 1, 9)], pa.timestamp("us")),
+                  "value": [9.0]}),
+        os.path.join(new_day, "part-0.parquet"),
+    )
+    got = commit.table(spark, data)
+    assert dict(got.dtypes)["date"] == "date"
+    assert got.filter("id = 's9'").select("date").collect()[0][0].isoformat() == "2024-01-09"
+
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    pq.write_table(pa.table({"a": [1, 2]}), os.path.join(path, "part-0.parquet"))
+    assert commit.table(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), os.path.join(path, "part-0.parquet"))
+    got = commit.table(spark, path)
+    assert got.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_table_keys_on_nanos_as_long(spark, tmp_path, jobs_fired):
+    """Each ``nanosAsLong`` setting resolves its own schema: INT64
+    TIMESTAMP(NANOS) reads as long only while the flag is on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import LongType
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    ns, us = str(tmp_path / "ns.parquet"), str(tmp_path / "us.parquet")
+    nanos = 1_700_000_000_123_456_789
+    for path, unit, value in ((ns, "ns", nanos), (us, "us", nanos // 1000)):
+        pq.write_table(pa.table({"ts": pa.array([value], pa.timestamp(unit))}), path)
+    try:
+        for flag in ("true", "false"):
+            spark.conf.set(conf, flag)
+            assert dict(commit.table(spark, us).dtypes)["ts"] == "timestamp_ntz"
+        key = (spark.sparkContext.applicationId, os.path.abspath(us))
+        assert len(commit._schemas[key]) == 2
+
+        spark.conf.set(conf, "true")
+        assert isinstance(commit.table(spark, ns).schema["ts"].dataType, LongType)
+        spark.conf.set(conf, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            commit.table(spark, ns)
+        spark.conf.set(conf, "true")
+        got, jobs = jobs_fired(lambda: commit.table(spark, ns))
+        assert jobs == 0 and got.collect()[0].ts == nanos
+    finally:
+        spark.conf.set(conf, "true")

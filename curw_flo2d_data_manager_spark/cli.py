@@ -365,7 +365,7 @@ def cmd_extract_water_level(args) -> None:
         update_run_dates,
     )
     from curw_flo2d_data_manager_spark.session import get_spark
-    from curw_flo2d_data_manager_spark.sinks.upsert import merge_upsert
+    from curw_flo2d_data_manager_spark.sinks.upsert import upsert_files
     from curw_flo2d_data_manager_spark.sources.hychan import parse_hychan
     from curw_flo2d_data_manager_spark.sources.timdep import parse_timdep
 
@@ -436,22 +436,28 @@ def cmd_extract_water_level(args) -> None:
         )
         forecast = forecast.unionByName(fp_forecast)
 
+    # The merge key (tms_id, time, fgt) pins fgt, so the cycle can only
+    # collide with stored rows at its own fgt: the forecast is parsed
+    # and written once, next to the untouched history files, and the
+    # run dim is derived from the written rows.
     target = os.path.join(args.store, "fcst_data")
-    existing = commit.read_parquet(spark, target)
-    merged = (
-        forecast
-        if existing is None
-        else merge_upsert(existing, forecast, keys=["tms_id", "time", "fgt"])
-    )
-    _overwrite_parquet(merged, target)
+    written = []
+
+    def write_forecast(tmp):
+        at_fgt = F.col("fgt") == F.lit(fgt).cast("timestamp")
+        keys = ["tms_id", "time", "fgt"]
+        written.append(upsert_files(spark, target, tmp, forecast, keys, at_fgt))
+
     # run-dim dates: start_date pinned at series creation (reference
     # update_start_date, extract_water_level.py:213-214), fgt advanced
     # every run (update_latest_fgt, :216-217). Reads the prior dim
     # (legacy fgt-only schema upgraded in place) and full-outer-merges
     # the new payload's per-series aggregate.
     dim_target = os.path.join(args.store, "fcst_latest_fgt")
-    run_dim = update_run_dates(commit.read_parquet(spark, dim_target), forecast)
-    _overwrite_parquet(run_dim, dim_target)
+    prior_dim = commit.read_parquet(spark, dim_target)
+
+    def write_run_dim(tmp):
+        update_run_dates(prior_dim, written[0]).write.parquet(tmp)
 
     # K8 run provenance (reference: extract_water_level.py:588-591 —
     # run_meta.json blob next to the output file + template path).
@@ -474,7 +480,12 @@ def cmd_extract_water_level(args) -> None:
     rm_target = os.path.join(args.store, "run_metadata")
     prior = commit.read_parquet(spark, rm_target)
     rm = record if prior is None else insert_run_metadata(prior, record)
-    _overwrite_parquet(rm, rm_target)
+    # one commit: every temp copy exists before the first swap
+    commit.replace_all([
+        (target, write_forecast),
+        (dim_target, write_run_dim),
+        (rm_target, rm.write.parquet),
+    ])
     print(f"upserted forecasts into {target}")
 
 

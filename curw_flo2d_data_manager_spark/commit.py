@@ -11,6 +11,9 @@ atomic directory exchange, so a crash between them leaves the
 committed copy at ``.tmp-old``, which ``recover`` renames back. Every
 reader of a swapped directory recovers it first. ``replace_all``
 writes every temp copy of several targets before the first swap.
+``carry_over`` hard-links a flat table's unchanged data files into
+its temp copy, so a commit that changes a few files rewrites only
+those.
 
 ``table(spark, path)`` is the read half: the only way the package
 resolves a committed parquet path to a DataFrame. It remembers each
@@ -93,6 +96,30 @@ def replace_all(pairs) -> None:
         for target in targets:
             _remove(target + SWAP)
         raise
+
+
+def data_files(path: str) -> list[str]:
+    """Names of the data files directly under the table directory
+    ``path``: everything Spark lists, i.e. not ``_``/``.``-prefixed
+    (``_SUCCESS``, ``.crc`` checksums)."""
+    return sorted(e.name for e in os.scandir(path) if not e.name.startswith(("_", ".")))
+
+
+def carry_over(target: str, tmp: str, drop=()) -> None:
+    """Hard-link every data file of the flat table ``target``, except
+    the names in ``drop``, into its temp copy ``tmp``, each with its
+    ``.<name>.crc`` checksum sibling. Parquet files are never
+    rewritten in place, so the swap publishes the same bytes under
+    the new copy."""
+    os.makedirs(tmp, exist_ok=True)
+    for name in set(data_files(target)) - set(drop):
+        src = os.path.join(target, name)
+        if os.path.isdir(src):
+            raise ValueError(f"{src} is a directory: carry_over takes flat tables only")
+        os.link(src, os.path.join(tmp, name))
+        crc = f".{name}.crc"
+        if os.path.exists(os.path.join(target, crc)):
+            os.link(os.path.join(target, crc), os.path.join(tmp, crc))
 
 
 def replace(target: str, write) -> str:

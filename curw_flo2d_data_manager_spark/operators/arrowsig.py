@@ -83,7 +83,9 @@ _MARKER_HASHES, _MARKER_MATRIX = _marker_tables()
 def _list_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(values int64, per-row lengths, null mask) for a list<int64>
     Arrow array — via compute kernels so slicing/offsets are always
-    honored."""
+    honored. A NULL element has no int64 value (``to_numpy`` would
+    turn it into a NaN and the cast into a garbage hash), so it
+    raises."""
     import pyarrow.compute as pc
 
     nulls = pc.is_null(col).to_numpy(zero_copy_only=False)
@@ -92,7 +94,10 @@ def _list_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         .to_numpy(zero_copy_only=False)
         .astype(np.int64)
     )
-    flat = pc.list_flatten(col).to_numpy(zero_copy_only=False).astype(np.int64)
+    values = pc.list_flatten(col)
+    if values.null_count:
+        raise ValueError(f"{values.null_count} NULL element(s) in a word-hash array")
+    flat = values.to_numpy(zero_copy_only=False).astype(np.int64)
     return flat, lens, nulls
 
 
@@ -100,17 +105,16 @@ def _shingle_and_sig(
     flat_u: np.ndarray,
     lens: np.ndarray,
     num_hashes: int,
-    shingle_n: int = 3,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Vectorized twin of ``dedup.shingle_hashes_from_word_hashes`` +
-    ``dedup.minhash_signature`` over a flattened word-hash batch.
+    ``dedup.minhash_signature`` over a flattened word-hash batch, for
+    3-word shingles (the only production value, checked on the driver
+    by ``with_corpus_signals_arrow``).
 
     Returns (distinct-sorted shingle values, per-row shingle counts,
-    (n_rows, num_hashes) signature matrix).  ``shingle_n`` is fixed at
-    3 (the only production value); the chain below hard-codes the
-    3-step hash like the expression twin's ``xxhash64(hw[i], hw[i+1],
-    hw[i+2])``."""
-    assert shingle_n == 3, "vectorized twin implements the production n=3"
+    (n_rows, num_hashes) signature matrix).  The chain below hard-codes
+    the 3-step hash like the expression twin's ``xxhash64(hw[i],
+    hw[i+1], hw[i+2])``."""
     n = len(lens)
     total = int(lens.sum())
     starts = np.zeros(n + 1, dtype=np.int64)
@@ -235,15 +239,21 @@ def with_corpus_signals_arrow(
     (``lang_col``) — all from an already-materialized per-word-hash
     array column ``hw_col`` (``transform(words(text), xxhash64)``).
 
-    Bit-identical to the expression twins (see module docstring);
-    NULL ``hw_col`` rows yield NULL shingles/signature and
-    ``lang_default`` for the language, matching the expression
-    semantics on NULL text.
+    Bit-identical to the expression twins (see module docstring).
+    A NULL ``hw_col`` row behaves like an empty array, as in the
+    expression twin: one seed-42 gram and its signature, with
+    ``lang_default`` for the language.
+
+    ``shingle_n`` must be 3, the only width the vectorized twin
+    implements; anything else raises ``ValueError`` here, on the
+    driver.
 
     Only the columns the caller selected ride the boundary (guide
     §4.1) — project before calling.  ``drop_hw`` drops the word-hash
     array from the output (it is usually only needed as the carrier).
     """
+    if shingle_n != 3:
+        raise ValueError(f"shingle_n={shingle_n!r}: the Arrow twin implements only shingle_n=3")
     in_schema = df.schema
     hw_idx = in_schema.names.index(hw_col)
     out_fields = [f for f in in_schema.fields if not (drop_hw and f.name == hw_col)]
@@ -275,7 +285,7 @@ def with_corpus_signals_arrow(
                     # greatest(…, 1) → one all-NULL gram = seed 42),
                     # so no null-row handling is needed here.
                     d_vals, d_lens, sig = _shingle_and_sig(
-                        flat.view(np.uint64), lens, num_hashes, shingle_n
+                        flat.view(np.uint64), lens, num_hashes
                     )
                     if want_sh:
                         off = np.zeros(n + 1, dtype=np.int64)

@@ -9,6 +9,11 @@ upsert=True). Spark's JDBC writer has no upsert, so the engine offers:
   new rows replace old rows with the same key (last-writer-wins),
   implemented as key-anti-join + union; deterministic and idempotent
   (re-running the same extraction is a no-op delta).
+* :func:`upsert_files` — ``merge_upsert`` applied to a stored flat
+  table file by file: only the files that can hold a colliding row
+  are merged and rewritten, every other file is carried over
+  unchanged (``commit.carry_over``), the way the reference's upsert
+  touches only the new cycle's rows.
 * :func:`jdbc_upsert_partition` — a ``foreachPartition`` writer that
   batches ``INSERT … ON DUPLICATE KEY UPDATE`` through any DB-API
   connection factory (for real curw_fcst deployments).
@@ -16,11 +21,16 @@ upsert=True). Spark's JDBC writer has no upsert, so the engine offers:
 
 from __future__ import annotations
 
+import os
 import re
 from collections.abc import Callable, Iterator
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from curw_flo2d_data_manager_spark import commit
 
 # SQL identifiers are interpolated (not parameterized) into the upsert
 # statement, so restrict them to the portable unquoted form; anything
@@ -53,6 +63,74 @@ def merge_upsert(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> D
     inc = incoming.dropDuplicates(keys)
     kept = existing.join(inc.select(*keys), keys, "left_anti")
     return kept.unionByName(inc)
+
+
+def require_schema(incoming: DataFrame, schema: StructType) -> None:
+    """Check that ``incoming`` has exactly the columns of ``schema``,
+    in any order. A column present on one side only, or of another
+    type, raises ``ValueError`` naming it: appending such rows would
+    leave files of two schemas in one table, and a silent cast would
+    hide a changed payload."""
+    have = {f.name: f.dataType for f in incoming.schema}
+    for f in schema:
+        if f.name not in have:
+            raise ValueError(f"column {f.name!r} of the table is missing from the payload")
+        if have[f.name] != f.dataType:
+            raise ValueError(
+                f"column {f.name!r} is {have[f.name].simpleString()} in the payload "
+                f"but {f.dataType.simpleString()} in the table"
+            )
+    extra = [c for c in have if c not in schema.names]
+    if extra:
+        raise ValueError(f"payload column {extra[0]!r} is not in the table")
+
+
+def files_holding(table: DataFrame, where: Column) -> list[str]:
+    """Names of the files of the flat parquet scan ``table`` that hold
+    at least one row satisfying ``where``. Only the filtered columns
+    are read, and parquet row-group statistics skip the row groups
+    that cannot match."""
+    paths = table.where(where).select(F.col("_metadata.file_path")).distinct().collect()
+    return sorted(os.path.basename(unquote(urlparse(p).path)) for (p,) in paths)
+
+
+def upsert_files(
+    spark, target: str, tmp: str, incoming: DataFrame, keys: list[str], where: Column
+) -> DataFrame:
+    """Write into ``tmp``, the temp copy of the flat parquet table
+    ``target``, that table with ``incoming`` merged in on ``keys``.
+
+    ``where`` must hold for every incoming row and pin one key column
+    (the extract's ``fgt``), so only a stored row that satisfies it
+    can share a key with an incoming row. The files holding such rows
+    go through ``merge_upsert`` with ``incoming`` and are written
+    anew, together with it, in the table's schema
+    (``require_schema``); every other file is hard-linked in
+    unchanged. With no table at ``target`` the merge runs against
+    nothing, so ``incoming`` is written with duplicate keys
+    collapsed, as every later run does.
+
+    Returns the rows of the new files that satisfy ``where``, read
+    back from ``tmp``: a caller derives from them without running
+    ``incoming``'s plan again. The scan is valid until ``tmp`` is
+    swapped in.
+    """
+    existing = commit.read_parquet(spark, target)
+    if existing is None:
+        schema, hits = incoming.schema, []
+    else:
+        require_schema(incoming, existing.schema)
+        schema, hits = existing.schema, files_holding(existing, where)
+    prior = (
+        spark.read.schema(schema).parquet(*(os.path.join(target, n) for n in hits))
+        if hits
+        else spark.createDataFrame([], schema)
+    )
+    merge_upsert(prior, incoming, keys).select(*schema.names).write.parquet(tmp)
+    new = [os.path.join(tmp, n) for n in commit.data_files(tmp)]
+    if existing is not None:
+        commit.carry_over(target, tmp, drop=hits)
+    return spark.read.schema(schema).parquet(*new).where(where)
 
 
 def _upsert_sql(

@@ -140,3 +140,39 @@ def test_corpus_signals_passthrough_and_schema(spark):
     assert len(rows[1]["_sig"]) == 4
     # empty doc: the all-NULL gram == seed 42, like the expression twin
     assert rows[2]["_sh"] == [42]
+
+
+def _hw_rows(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, _hw array<bigint>")
+
+
+def test_corpus_signals_null_row_behaves_like_empty(spark):
+    """A NULL word-hash array gives what an empty one gives: the single
+    seed-42 gram, its real signature, and the default language."""
+    out = with_corpus_signals_arrow(
+        _hw_rows(spark, [(1, None), (2, [])]),
+        hw_col="_hw", sh_col="_sh", sig_col="_sig", lang_col="lang",
+        num_hashes=4, lang_default="xx",
+    )
+    rows = {r["doc_id"]: r for r in out.collect()}
+    assert rows[1]["_sh"] == rows[2]["_sh"] == [42]
+    assert rows[1]["_sig"] == rows[2]["_sig"] and len(rows[1]["_sig"]) == 4
+    assert rows[1]["lang"] == rows[2]["lang"] == "xx"
+
+
+def test_corpus_signals_rejects_other_shingle_width_on_driver(spark):
+    """The width is checked when the plan is built, not as an assertion
+    inside a task."""
+    with pytest.raises(ValueError, match="shingle_n=2"):
+        with_corpus_signals_arrow(_hw_rows(spark, [(1, [1, 2, 3])]), shingle_n=2)
+
+
+def test_list_to_flat_rejects_null_elements():
+    import pyarrow as pa
+
+    from curw_flo2d_data_manager_spark.operators.arrowsig import _list_to_flat
+
+    flat, lens, nulls = _list_to_flat(pa.array([[1, 2], None, []], pa.list_(pa.int64())))
+    assert (flat.tolist(), lens.tolist(), nulls.tolist()) == ([1, 2], [2, 0, 0], [False, True, False])
+    with pytest.raises(ValueError, match="1 NULL element"):
+        _list_to_flat(pa.array([[1, None, 3]], pa.list_(pa.int64())))

@@ -281,6 +281,80 @@ def test_extract_recovers_history_after_interrupted_swap(spark, tmp_path, monkey
     assert not os.path.exists(target + ".tmp-old")
 
 
+def test_extract_rerun_rewrites_only_files_at_its_fgt(forecast_store):
+    """The merge key pins ``fgt``, so re-running a cycle rewrites only
+    the files that hold its ``fgt``: every other file keeps its inode,
+    and the table's rows are unchanged."""
+    fs = forecast_store()
+    fs.history("part-old.parquet", ["2023-12-30 06:00:00", "2023-12-31 06:00:00"])
+    fs.extract("2024-01-01 06:00:00")
+    fs.extract("2024-01-02 06:00:00")
+    files, rows = fs.inodes(), fs.rows()
+    at_second = {
+        os.path.basename(r.f)
+        for r in fs.spark.read.parquet(fs.fcst)
+        .where("fgt = '2024-01-02 06:00:00'")
+        .selectExpr("_metadata.file_path AS f")
+        .collect()
+    }
+    assert at_second and len(files) >= 3
+
+    fs.extract("2024-01-02 06:00:00")
+    after = fs.inodes()
+    assert fs.rows() == rows
+    assert {n: i for n, i in after.items() if n in files} == {
+        n: i for n, i in files.items() if n not in at_second
+    }
+
+
+def test_extract_keeps_older_rows_in_a_mixed_file(forecast_store):
+    """A file that holds the run's ``fgt`` next to older cycles is
+    merged, not dropped: its older rows survive, and its rows at the
+    run's ``fgt`` take the new values."""
+    fs = forecast_store()
+    fs.history("part-mixed.parquet", ["2023-12-31 06:00:00", "2024-01-01 06:00:00"])
+    fs.history("part-old.parquet", ["2023-12-30 06:00:00"])
+    old = fs.inodes()["part-old.parquet"]
+
+    fs.extract("2024-01-01 06:00:00")
+    got = sorted((str(r.fgt), str(r.time), r.value) for r in fs.spark.read.parquet(fs.fcst).collect())
+    assert got == [
+        ("2023-12-30 06:00:00", "2024-01-01 00:00:00", 100.0),
+        ("2023-12-30 06:00:00", "2024-01-01 00:15:00", 100.0),
+        ("2023-12-31 06:00:00", "2024-01-01 00:00:00", 100.0),
+        ("2023-12-31 06:00:00", "2024-01-01 00:15:00", 100.0),
+        ("2024-01-01 06:00:00", "2024-01-01 00:00:00", 10.0),
+        ("2024-01-01 06:00:00", "2024-01-01 00:15:00", 10.1),
+    ]
+    assert "part-mixed.parquet" not in fs.inodes()
+    assert fs.inodes()["part-old.parquet"] == old
+
+
+@pytest.mark.parametrize(
+    "change, column",
+    [
+        (lambda t: t.drop(["station_id"]), "station_id"),
+        (lambda t: t.append_column("source", t.column("tms_id")), "source"),
+        (lambda t: t.set_column(3, "value", t.column("value").cast("float32")), "value"),
+    ],
+    ids=["payload-column-not-in-table", "table-column-not-in-payload", "other-type"],
+)
+def test_extract_rejects_payload_schema_mismatch(forecast_store, change, column):
+    """A payload that does not have exactly the table's columns and
+    types fails on the driver, naming the column, and leaves the table
+    as it was: no file of a second schema is ever added."""
+    import pyarrow.parquet as pq
+
+    fs = forecast_store()
+    os.makedirs(fs.fcst)
+    pq.write_table(change(fs.history_table(["2023-12-31 06:00:00"])), os.path.join(fs.fcst, "part-0.parquet"))
+    before = fs.inodes()
+    with pytest.raises(ValueError, match=repr(column)):
+        fs.extract("2024-01-01 06:00:00")
+    assert fs.inodes() == before
+    assert sorted(os.listdir(fs.store)) == ["fcst_data", "stations"]
+
+
 def test_extract_utc_offset_shifts_series_and_cut(spark, tmp_path):
     """--utc_offset "+05:30" shifts BOTH the series timestamps and the
     extract cut by the offset (reference extract_water_level.py:80-106

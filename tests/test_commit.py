@@ -41,9 +41,9 @@ def _rename_crashing(monkeypatch, should_crash):
 
 # ------------------------------------------------------------------ guard
 def rename_calls(source: str) -> list[int]:
-    """Lines that call ``os.rename``/``os.replace`` or import them from
-    ``os``."""
-    names = {"rename", "replace"}
+    """Lines that call ``os.rename``/``os.replace``/``os.link`` or import
+    them from ``os``: the calls that lay out a table's files."""
+    names = {"rename", "replace", "link"}
     hits = []
     for node in ast.walk(ast.parse(source)):
         if (
@@ -65,7 +65,7 @@ def test_only_commit_module_renames():
         if p.name != "commit.py" and (lines := rename_calls(p.read_text()))
     }
     assert not offenders, (
-        f"os.rename/os.replace outside commit.py (file:lines): {offenders}"
+        f"os.rename/os.replace/os.link outside commit.py (file:lines): {offenders}"
     )
 
 
@@ -76,6 +76,11 @@ def test_guard_sees_attribute_and_from_imports():
         "os.rename('a', 'b')\n"
         "s.replace('x', 'y')\n"
     )
+    assert rename_calls(src) == [2, 3]
+
+
+def test_guard_sees_os_link():
+    src = "import os\nfrom os import link as ln\nos.link('a', 'b')\nos.path.join('a')\n"
     assert rename_calls(src) == [2, 3]
 
 
@@ -292,6 +297,47 @@ def test_compact_ann_index_pq_failure_in_codes_write_keeps_index(
     assert snapshot() == want_index
     assert hits("after.parquet") == want
     capsys.readouterr()
+
+
+def test_extract_crash_in_run_dim_write_keeps_all_three_tables(forecast_store, monkeypatch):
+    """The extract commits ``fcst_data``, ``fcst_latest_fgt`` and
+    ``run_metadata`` together. A crash inside the run-dim write, when
+    ``fcst_data``'s temp copy (new cycle plus hard-linked history) is
+    already complete, must leave all three tables old with no temp copy
+    behind, and the re-run must give the rows of an uninterrupted run."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    tables = ("fcst_data", "fcst_latest_fgt", "run_metadata")
+    fs = forecast_store()
+    fs.history("part-old.parquet", ["2023-12-31 06:00:00"])
+    fs.extract("2024-01-01 06:00:00")
+    before = {t: (fs.inodes(t), fs.rows(t)) for t in tables}
+
+    clean = forecast_store("clean")
+    clean.history("part-old.parquet", ["2023-12-31 06:00:00"])
+    for fgt in ("2024-01-01 06:00:00", "2024-01-02 06:00:00"):
+        clean.extract(fgt)
+
+    real_parquet = DataFrameWriter.parquet
+    swap = commit.SWAP
+
+    def parquet(self, path, *a, **k):
+        if path.endswith("fcst_latest_fgt" + swap):
+            assert "part-old.parquet" in os.listdir(fs.fcst + swap)
+            real_parquet(self, path, *a, **k)
+            raise OSError("injected crash inside the run-dim write")
+        return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError, match="injected crash"):
+        fs.extract("2024-01-02 06:00:00")
+    monkeypatch.undo()
+
+    assert {t: (fs.inodes(t), fs.rows(t)) for t in tables} == before
+    assert sorted(os.listdir(fs.store)) == sorted(tables + ("stations",))
+
+    fs.extract("2024-01-02 06:00:00")
+    assert {t: fs.rows(t) for t in tables} == {t: clean.rows(t) for t in tables}
 
 
 def test_merge_run_manifest_crash_keeps_previous(tmp_path, monkeypatch):

@@ -1,4 +1,5 @@
-"""Job budget: Spark jobs fired while building plans, before any action.
+"""Job budget: Spark jobs fired while building plans, before any action,
+and by one forecast extract.
 
 Every parquet table a query reads is resolved through
 ``commit.table``, which infers each table's schema once per session.
@@ -6,6 +7,10 @@ So a second pass of building the 31 headline queries, and re-opening
 an unchanged store, must fire no Spark job at all. A job there is a
 schema-inference read, or an eager action, that runs again every time
 the query is built.
+
+An extract upserts one cycle, which can only collide with stored rows
+at its own ``fgt``. Its jobs must not grow with the history, and no
+history file without a row at that ``fgt`` may be rewritten.
 """
 
 from types import SimpleNamespace
@@ -72,3 +77,43 @@ def test_second_partition_guard_fires_no_job(spark, sf_dir, jobs_fired):
     twice, jobs = jobs_fired(lambda: ensure_min_partitions(ensure_min_partitions(scan)))
     assert jobs == 0
     assert twice.rdd.getNumPartitions() == target
+
+
+# Jobs of one extract at fixture size: the pruned file lookup, the
+# payload write (the parse's shuffles included), the run dim and the
+# run record. A change that lowers the count lowers this ceiling.
+EXTRACT_JOBS = 25
+
+
+def extract_history_gate(forecast_store, jobs_fired, cycles: int):
+    """Jobs fired by one extract into a store holding ``cycles`` earlier
+    cycles, one file each, and the history files it rewrote (inode
+    changed or file gone)."""
+    fs = forecast_store(f"history-{cycles}")
+    for k in range(cycles):
+        fs.history(f"part-{k:03d}.parquet", [f"2023-12-{k + 1:02d} 06:00:00"])
+    before = fs.inodes()
+    _, jobs = jobs_fired(lambda: fs.extract("2024-01-01 06:00:00"))
+    after = fs.inodes()
+    return jobs, sorted(n for n, ino in before.items() if after.get(n) != ino)
+
+
+def test_extract_jobs_do_not_grow_with_history(forecast_store, jobs_fired):
+    short = extract_history_gate(forecast_store, jobs_fired, 2)
+    long = extract_history_gate(forecast_store, jobs_fired, 8)
+    assert short[1] == long[1] == []
+    assert short[0] == long[0] <= EXTRACT_JOBS
+
+
+def test_extract_gate_fails_on_whole_table_merge(forecast_store, jobs_fired, monkeypatch):
+    """Merging every history file, as a whole-table ``merge_upsert``
+    does, rewrites files the cycle cannot collide with, and the gate
+    above sees it."""
+    from pyspark.sql import functions as F
+
+    from curw_flo2d_data_manager_spark.sinks import upsert
+
+    every_file = upsert.files_holding
+    monkeypatch.setattr(upsert, "files_holding", lambda table, where: every_file(table, F.lit(True)))
+    _, rewritten = extract_history_gate(forecast_store, jobs_fired, 2)
+    assert rewritten == ["part-000.parquet", "part-001.parquet"]

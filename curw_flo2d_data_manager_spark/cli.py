@@ -19,6 +19,10 @@ Shared behaviors replicated from the reference:
   gen_raincell.py:246);
 * a ``run_meta.json`` manifest merged read-modify-write next to every
   generated file (K6 — gen_raincell.py:17-32).
+
+``main`` builds the one Spark session. Every output is committed
+through ``commit``, so a failed run leaves the previous output in
+place, and every parquet input is read through it (``_read_input``).
 """
 
 from __future__ import annotations
@@ -67,7 +71,7 @@ def archive_templates(
     return commit.replace(os.path.join(source_dir, f"{out_name}.tar.gz"), pack)
 
 
-def cmd_archive_templates(args) -> None:
+def cmd_archive_templates(spark, args) -> None:
     out = archive_templates(args.source_dir, out_name=args.name)
     print(out)
 
@@ -125,11 +129,34 @@ def _skip_existing(path: str) -> bool:
     return False
 
 
-# ------------------------------------------------------------- commands
-def _overwrite_parquet(df, target: str) -> None:
-    """Commit ``df`` as the parquet table at ``target``; the old copy
-    stays intact while the same plan may still be reading it."""
-    commit.replace(target, df.write.parquet)
+# ------------------------------------------------------------ inputs/outputs
+def _read_input(spark, path: str, flag: str, cols=()):
+    """The parquet table committed at ``path``, given as ``flag``: read
+    through ``commit``, so a stage whose upstream output was interrupted
+    between its two renames reads the recovered copy. A missing table
+    or a missing column in ``cols`` fails on the driver."""
+    df = commit.read_parquet(spark, path)
+    if df is None:
+        raise SystemExit(f"{flag} {path}: no parquet table there")
+    for col in cols:
+        if col not in df.columns:
+            raise SystemExit(f"{flag}: column {col!r} not in input ({df.columns})")
+    return df
+
+
+def _overwrite_parquet(df, target: str):
+    """Commit ``df`` as the parquet table at ``target`` and return the
+    committed table; the old copy stays intact while the same plan may
+    still be reading it."""
+    return _overwrite_parquets({target: df})[target]
+
+
+def _overwrite_parquets(tables: dict) -> dict:
+    """Commit each ``{target: df}`` as a parquet table with one
+    ``commit.replace_all`` (every temp copy is written before the first
+    swap) and return the committed tables by target."""
+    commit.replace_all([(target, df.write.parquet) for target, df in tables.items()])
+    return {target: commit.table(df.sparkSession, target) for target, df in tables.items()}
 
 
 def _load_store(spark, store_dir: str):
@@ -138,42 +165,44 @@ def _load_store(spark, store_dir: str):
     return TimeseriesStore.open(spark, store_dir)
 
 
-def cmd_gen_inflow(args) -> None:
-    from curw_flo2d_data_manager_spark.plans.inflow import inflow_lines
-    from curw_flo2d_data_manager_spark.plans.models import MODELS
-    from curw_flo2d_data_manager_spark.session import get_spark
+# ------------------------------------------------------------- commands
+def _validate_window(args, timestep_min: int) -> None:
+    validate_grid_time(args.start_time, timestep_min)
+    validate_grid_time(args.end_time, timestep_min)
+
+
+def _write_dat(lines, args, kind: str, **frame) -> None:
+    """Render ``lines`` into ``args.out`` (``frame`` passes the
+    verbatim ``header_lines``/``footer_lines``) and merge the run into
+    the ``run_meta.json`` manifest beside it."""
     from curw_flo2d_data_manager_spark.sinks.ordered_text import write_ordered_text
 
-    if _skip_existing(args.out):
-        return
-    spec = MODELS[args.model]
-    validate_grid_time(args.start_time, spec.timestep_min)
-    validate_grid_time(args.end_time, spec.timestep_min)
-    spark = get_spark(app_name="gen-inflow")
+    write_ordered_text(lines, args.out, sort_cols=["block_rank", "intra_rank"], **frame)
+    merge_run_manifest(args.out, {kind: {"model": args.model, "sim_tag": args.sim_tag}})
+    print(f"wrote {args.out}")
+
+
+def cmd_gen_inflow(spark, args) -> None:
+    from curw_flo2d_data_manager_spark.plans.inflow import inflow_lines
+    from curw_flo2d_data_manager_spark.plans.models import MODELS
+
+    _validate_window(args, MODELS[args.model].timestep_min)
     store = _load_store(spark, args.store)
     ts = store.get_timeseries_by_meta(
         args.method, args.model, args.grid_id, args.start_time, args.end_time
     )
-    lines = inflow_lines(ts, args.model, obs_wl=args.obs_wl)
-    write_ordered_text(lines, args.out, sort_cols=["block_rank", "intra_rank"])
-    merge_run_manifest(args.out, {"inflow": {"model": args.model, "sim_tag": args.sim_tag}})
-    print(f"wrote {args.out}")
+    _write_dat(inflow_lines(ts, args.model, obs_wl=args.obs_wl), args, "inflow")
 
 
-def cmd_gen_rain(args) -> None:
+def cmd_gen_rain(spark, args) -> None:
     from curw_flo2d_data_manager_spark.plans.models import FLO2D_10_PATTERN
     from curw_flo2d_data_manager_spark.plans.rain import (
         nearest_gauge_grid_ids,
         rain_lines,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
-    from curw_flo2d_data_manager_spark.sinks.ordered_text import write_ordered_text
 
-    if _skip_existing(args.out):
-        return
     # flo2d_10 models share the 5-minute grid (gen_rain.py:98-101)
-    validate_grid_time(args.start_time, 5)
-    validate_grid_time(args.end_time, 5)
+    _validate_window(args, 5)
     is_10m = bool(FLO2D_10_PATTERN.match(args.model))
     lat, lon = args.lat, args.lon
     if is_10m and (lat is None or lon is None):
@@ -191,7 +220,6 @@ def cmd_gen_rain(args) -> None:
         lat, lon = float(cfg["lat"]), float(cfg["lon"])
     if not is_10m and args.grid_id is None:
         raise SystemExit("grid_id of the desired timeseries is not specified")
-    spark = get_spark(app_name="gen-rain")
     store = _load_store(spark, args.store)
     if is_10m:
         stations = commit.table(
@@ -217,47 +245,26 @@ def cmd_gen_rain(args) -> None:
         ts = store.get_timeseries_by_meta(
             args.method, args.model, args.grid_id, args.start_time, args.end_time
         )
-    lines = rain_lines(spark, ts, args.model, args.start_time, args.end_time)
-    write_ordered_text(lines, args.out, sort_cols=["block_rank", "intra_rank"])
-    merge_run_manifest(args.out, {"rain": {"model": args.model, "sim_tag": args.sim_tag}})
-    print(f"wrote {args.out}")
+    _write_dat(rain_lines(spark, ts, args.model, args.start_time, args.end_time), args, "rain")
 
 
-def cmd_gen_raincell(args) -> None:
+def cmd_gen_raincell(spark, args) -> None:
     from curw_flo2d_data_manager_spark.plans.models import MODELS, RAINCELL_MIN_START
     from curw_flo2d_data_manager_spark.plans.raincell import raincell_lines
-    from curw_flo2d_data_manager_spark.session import get_spark
-    from curw_flo2d_data_manager_spark.sinks.ordered_text import write_ordered_text
 
-    if _skip_existing(args.out):
-        return
-    spec = MODELS[args.model]
-    validate_grid_time(args.start_time, spec.timestep_min)
-    validate_grid_time(args.end_time, spec.timestep_min)
+    _validate_window(args, MODELS[args.model].timestep_min)
     start = max(args.start_time, RAINCELL_MIN_START)  # hard floor (:110)
-    spark = get_spark(app_name="gen-raincell")
     rain = commit.table(spark, os.path.join(args.store, "raincell"))
-    lines = raincell_lines(spark, rain, args.model, start, args.end_time)
-    write_ordered_text(lines, args.out, sort_cols=["block_rank", "intra_rank"])
-    merge_run_manifest(
-        args.out, {"raincell": {"model": args.model, "sim_tag": args.sim_tag}}
-    )
-    print(f"wrote {args.out}")
+    _write_dat(raincell_lines(spark, rain, args.model, start, args.end_time), args, "raincell")
 
 
-def cmd_gen_outflow(args) -> None:
-    from curw_flo2d_data_manager_spark.plans.models import MODELS
-    from curw_flo2d_data_manager_spark.plans.outflow import outflow_lines
-    from curw_flo2d_data_manager_spark.session import get_spark
-    from curw_flo2d_data_manager_spark.sinks.ordered_text import write_ordered_text
+def cmd_gen_outflow(spark, args) -> None:
     from pyspark.sql import functions as F
 
-    if _skip_existing(args.out):
-        return
-    spec = MODELS[args.model]
-    validate_grid_time(args.start_time, spec.timestep_min)
-    validate_grid_time(args.end_time, spec.timestep_min)
-    spark = get_spark(app_name="gen-outflow")
+    from curw_flo2d_data_manager_spark.plans.models import MODELS
+    from curw_flo2d_data_manager_spark.plans.outflow import outflow_lines
+
+    _validate_window(args, MODELS[args.model].timestep_min)
     store = _load_store(spark, args.store)
 
     # tide-node fan-out as one plan: the node→grid_id config map joins
@@ -274,25 +281,12 @@ def cmd_gen_outflow(args) -> None:
         .filter(F.col("time").between(F.lit(args.start_time), F.lit(args.end_time)))
         .select("node", "time", "value")
     )
-    tail_lines = (
-        open(args.tail).read().splitlines() if args.tail else None
-    )
-    lines = outflow_lines(tide, args.model)
-    write_ordered_text(
-        lines, args.out, sort_cols=["block_rank", "intra_rank"], footer_lines=tail_lines
-    )
-    merge_run_manifest(args.out, {"outflow": {"model": args.model, "sim_tag": args.sim_tag}})
-    print(f"wrote {args.out}")
+    tail = open(args.tail).read().splitlines() if args.tail else None
+    _write_dat(outflow_lines(tide, args.model), args, "outflow", footer_lines=tail)
 
 
-def cmd_gen_chan(args) -> None:
+def cmd_gen_chan(spark, args) -> None:
     from curw_flo2d_data_manager_spark.plans.chan import chan_lines
-    from curw_flo2d_data_manager_spark.session import get_spark
-    from curw_flo2d_data_manager_spark.sinks.ordered_text import write_ordered_text
-
-    if _skip_existing(args.out):
-        return
-    spark = get_spark(app_name="gen-chan")
 
     # body template pairs (P3 asset): '<cell> <default>' line pairs
     body = [ln.split() for ln in open(args.body).read().splitlines() if ln.strip()]
@@ -308,23 +302,16 @@ def cmd_gen_chan(args) -> None:
     lines = chan_lines(pairs, ics, obs, args.model, args.start_time)
     head = open(args.head).read().splitlines() if args.head else None
     tail = open(args.tail).read().splitlines() if args.tail else None
-    write_ordered_text(
-        lines, args.out, sort_cols=["block_rank", "intra_rank"],
-        header_lines=head, footer_lines=tail,
-    )
-    merge_run_manifest(args.out, {"chan": {"model": args.model, "sim_tag": args.sim_tag}})
-    print(f"wrote {args.out}")
+    _write_dat(lines, args, "chan", header_lines=head, footer_lines=tail)
 
 
-def cmd_init(args) -> None:
+def cmd_init(spark, args) -> None:
     from curw_flo2d_data_manager_spark.plans.init_dims import (
         read_grid_csv,
         register_dims,
         stations_from_cell_maps,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="init")
     params = json.loads(open(args.station_map).read())
     grid = read_grid_csv(spark, args.grid_csv)
     stations = stations_from_cell_maps(
@@ -348,35 +335,32 @@ def cmd_init(args) -> None:
         src,
         stations,
     )
-    for df, path in ((m_src, src_path), (m_sta, sta_path)):
-        _overwrite_parquet(df, path)
-    n_sta = commit.table(spark, sta_path).count()
-    n_src = commit.table(spark, src_path).count()
+    n_src = _overwrite_parquet(m_src, src_path).count()
+    n_sta = _overwrite_parquet(m_sta, sta_path).count()
     print(f"registered {n_sta} stations, {n_src} sources")
 
 
-def cmd_extract_water_level(args) -> None:
+def cmd_extract_water_level(spark, args) -> None:
+    from datetime import timedelta, timezone
+
     from pyspark.sql import functions as F
 
+    from curw_flo2d_data_manager_spark.functions.timeutil import parse_utc_offset
     from curw_flo2d_data_manager_spark.plans.extract import (
         extract_hychan_forecast,
         insert_run_metadata,
         run_metadata_record,
         update_run_dates,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
     from curw_flo2d_data_manager_spark.sinks.upsert import upsert_files
     from curw_flo2d_data_manager_spark.sources.hychan import parse_hychan
     from curw_flo2d_data_manager_spark.sources.timdep import parse_timdep
 
-    spark = get_spark(app_name="extract-water-level")
     # fgt = output-file mtime in Sri Lanka time, UTC+5:30
     # (reference: extract_water_level.py:53-60 get_file_last_modified_time)
     if args.fgt:
         fgt = args.fgt
     else:
-        from datetime import timedelta, timezone
-
         mtime = datetime.fromtimestamp(
             os.path.getmtime(args.hychan), tz=timezone.utc
         ) + timedelta(hours=5, minutes=30)
@@ -388,15 +372,9 @@ def cmd_extract_water_level(args) -> None:
     # Reference utcOffset semantics (extract_water_level.py:80-106
     # getUTCOffset + :176-191): pattern-or-default parse, then BOTH
     # the series timestamps and the extract cut shift by the offset.
-    from curw_flo2d_data_manager_spark.functions.timeutil import (
-        parse_utc_offset,
-    )
-
     utc_offset_minutes = parse_utc_offset(args.utc_offset, default=True)
     extract_cut = args.extract_cut
     if utc_offset_minutes and extract_cut is not None:
-        from datetime import timedelta
-
         extract_cut = (
             datetime.strptime(extract_cut, DATE_FMT)
             + timedelta(minutes=utc_offset_minutes)
@@ -489,11 +467,9 @@ def cmd_extract_water_level(args) -> None:
     print(f"upserted forecasts into {target}")
 
 
-def cmd_compact_store(args) -> None:
-    from curw_flo2d_data_manager_spark.session import get_spark
+def cmd_compact_store(spark, args) -> None:
     from curw_flo2d_data_manager_spark.store import TimeseriesStore
 
-    spark = get_spark(app_name="compact-store")
     n = TimeseriesStore.compact_data(
         spark,
         args.path,
@@ -503,7 +479,7 @@ def cmd_compact_store(args) -> None:
     print(f"compacted {n} partitions under {args.path}")
 
 
-def cmd_dedup_corpus(args) -> None:
+def cmd_dedup_corpus(spark, args) -> None:
     """Corpus dedup as a job: pairs (by the chosen method) → connected
     components → keep-one-per-cluster, written back as parquet. With
     ``--keep-only`` the output is the deduplicated corpus itself;
@@ -515,20 +491,15 @@ def cmd_dedup_corpus(args) -> None:
 
     from curw_flo2d_data_manager_spark.operators.components import cluster_assign
     from curw_flo2d_data_manager_spark.operators.dedup import (
+        containment_pairs,
         minhash_lsh_pairs,
         passage_dedup_rebuild,
         release_caches,
         simhash_near_pairs,
         winnow_pairs,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="dedup-corpus")
-    df = spark.read.parquet(args.input)
-    for col in (args.id_col, args.text_col):
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
-
+    df = _read_input(spark, args.input, "--input", (args.id_col, args.text_col))
     if args.method == "passage":
         rebuilt = passage_dedup_rebuild(
             df, args.id_col, args.text_col, passage_words=args.passage_words
@@ -550,23 +521,10 @@ def cmd_dedup_corpus(args) -> None:
         )
         if args.keep_only:
             out = out.filter(F.col("n_kept") > 0).select(*df.columns)
-        out.write.mode("overwrite").parquet(args.output)
-        release_caches()
-        kept = spark.read.parquet(args.output).count()
-        print(
-            f"dedup-corpus[passage]: {df.count()} rows in, {kept} rows out "
-            f"-> {args.output}"
-        )
-        return
-
-    if args.method == "containment":
+    elif args.method == "containment":
         # DIRECTED semantics, unlike the cluster methods: the contained
         # (smaller) doc is the duplicate, its container survives — no
         # components pass, just "was this doc ever the id_small side"
-        from curw_flo2d_data_manager_spark.operators.dedup import (
-            containment_pairs,
-        )
-
         cpairs = containment_pairs(
             df, args.id_col, args.text_col, threshold=args.threshold
         )
@@ -598,58 +556,50 @@ def cmd_dedup_corpus(args) -> None:
         )
         if args.keep_only:
             out = out.filter(~F.col("contained")).select(*df.columns)
-        out.write.mode("overwrite").parquet(args.output)
-        release_caches()
-        kept = spark.read.parquet(args.output).count()
-        print(
-            f"dedup-corpus[containment]: {df.count()} rows in, "
-            f"{kept} rows out -> {args.output}"
-        )
-        return
+    else:
+        if args.method == "exact":
+            # identical normalized text → same digest; pairs = (group
+            # min, member), so components are exactly the digest groups
+            from curw_flo2d_data_manager_spark.operators.textstats import normalize_text
 
-    if args.method == "exact":
-        # identical normalized text → same digest; pairs = (group min,
-        # member), so components are exactly the digest groups
-        from curw_flo2d_data_manager_spark.operators.textstats import normalize_text
-
-        digest = df.select(
-            F.col(args.id_col).alias("_id"),
-            F.sha2(normalize_text(args.text_col), 256).alias("_k"),
-        )
-        winners = digest.groupBy("_k").agg(F.min("_id").alias("id_a"))
-        pairs = (
-            digest.join(winners, "_k")
-            .filter(F.col("_id") != F.col("id_a"))
-            .select("id_a", F.col("_id").alias("id_b"))
-        )
-    elif args.method == "minhash":
-        pairs = minhash_lsh_pairs(
-            df, args.id_col, args.text_col, jaccard_threshold=args.threshold
-        ).select("id_a", "id_b")
-    elif args.method == "winnow":
-        # passage-level near-copies: shared MOSS winnowing fingerprints
-        # catch quotation/plagiarism overlap that whole-document
-        # signatures dilute away
-        pairs = winnow_pairs(
-            df, args.id_col, args.text_col, min_shared=args.min_shared
-        ).select("id_a", "id_b")
-    else:  # simhash
-        pairs = simhash_near_pairs(
-            df, args.id_col, args.text_col, max_hamming=args.max_hamming
-        ).select("id_a", "id_b")
-
-    decisions = cluster_assign(df, pairs, args.id_col)
-    out = df.join(decisions, args.id_col)
-    if args.keep_only:
-        out = out.filter(F.col("keep")).select(*df.columns)
-    out.write.mode("overwrite").parquet(args.output)
+            digest = df.select(
+                F.col(args.id_col).alias("_id"),
+                F.sha2(normalize_text(args.text_col), 256).alias("_k"),
+            )
+            winners = digest.groupBy("_k").agg(F.min("_id").alias("id_a"))
+            pairs = (
+                digest.join(winners, "_k")
+                .filter(F.col("_id") != F.col("id_a"))
+                .select("id_a", F.col("_id").alias("id_b"))
+            )
+        elif args.method == "minhash":
+            pairs = minhash_lsh_pairs(
+                df, args.id_col, args.text_col, jaccard_threshold=args.threshold
+            ).select("id_a", "id_b")
+        elif args.method == "winnow":
+            # passage-level near-copies: shared MOSS winnowing
+            # fingerprints catch quotation/plagiarism overlap that
+            # whole-document signatures dilute away
+            pairs = winnow_pairs(
+                df, args.id_col, args.text_col, min_shared=args.min_shared
+            ).select("id_a", "id_b")
+        else:  # simhash
+            pairs = simhash_near_pairs(
+                df, args.id_col, args.text_col, max_hamming=args.max_hamming
+            ).select("id_a", "id_b")
+        decisions = cluster_assign(df, pairs, args.id_col)
+        out = df.join(decisions, args.id_col)
+        if args.keep_only:
+            out = out.filter(F.col("keep")).select(*df.columns)
+    committed = _overwrite_parquet(out, args.output)
     release_caches()
-    kept = spark.read.parquet(args.output).count()
-    total = df.count()
-    print(f"dedup-corpus[{args.method}]: {total} rows in, {kept} rows out -> {args.output}")
+    print(
+        f"dedup-corpus[{args.method}]: {df.count()} rows in, "
+        f"{committed.count()} rows out -> {args.output}"
+    )
 
 
-def cmd_dedup_embeddings(args) -> None:
+def cmd_dedup_embeddings(spark, args) -> None:
     """Semantic (embedding-space) corpus dedup as a job: IVF KMeans
     cluster assignment → within-cluster cosine pairs → greedy
     smallest-id keep, written back as parquet (annotated with
@@ -662,13 +612,8 @@ def cmd_dedup_embeddings(args) -> None:
         build_ivf_index,
         semantic_dedup_assigned,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="dedup-embeddings")
-    df = spark.read.parquet(args.input)
-    for col in (args.id_col, args.vec_col):
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
+    df = _read_input(spark, args.input, "--input", (args.id_col, args.vec_col))
     stale = [c for c in ("semdedup_cluster", "semdedup_keep") if c in df.columns]
     if stale:
         # re-running over annotated (non --keep_only) output: drop the
@@ -697,16 +642,50 @@ def cmd_dedup_embeddings(args) -> None:
     out = df.join(dec, args.id_col)
     if args.keep_only:
         out = out.filter(F.col("semdedup_keep")).select(*df.columns)
-    out.write.mode("overwrite").parquet(args.output)
-    assigned.unpersist()
-    kept = spark.read.parquet(args.output).count()
+    try:
+        committed = _overwrite_parquet(out, args.output)
+    finally:
+        assigned.unpersist()
     print(
-        f"dedup-embeddings: {n} rows in, {kept} rows out "
+        f"dedup-embeddings: {n} rows in, {committed.count()} rows out "
         f"({n_clusters} clusters, cosine >= {args.threshold}) -> {args.output}"
     )
 
 
-def cmd_build_ann_index(args) -> None:
+def _cell_sizes(assignments) -> dict:
+    """Rows per cluster of an ANN index's assignments: one aggregation
+    over the partition column, the vectors are never read."""
+    from pyspark.sql import functions as F
+
+    counts = assignments.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
+    return {r["cluster"]: r["n"] for r in counts.collect()}
+
+
+def _read_ann_meta(index: str) -> dict:
+    try:
+        with open(os.path.join(index, "index_meta.json")) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        raise SystemExit(f"no index_meta.json under {index}") from None
+
+
+def _commit_ann_index(index: str, assignments, codes, meta: dict) -> None:
+    """Commit ``assignments/``, ``codes/`` (unless None) and
+    ``index_meta.json`` of the ANN index at ``index`` with one
+    ``commit.replace_all``: a failure anywhere leaves the whole index
+    old. Unpersists ``assignments`` afterwards."""
+    pairs = [(os.path.join(index, "assignments"), assignments.write.partitionBy("cluster").parquet)]
+    if codes is not None:
+        pairs.append((os.path.join(index, "codes"), codes.write.partitionBy("cluster").parquet))
+    pairs.append((os.path.join(index, "index_meta.json"), _json_writer(meta)))
+    os.makedirs(index, exist_ok=True)
+    try:
+        commit.replace_all(pairs)
+    finally:
+        assignments.unpersist()
+
+
+def cmd_build_ann_index(spark, args) -> None:
     """Build (or append to) a persisted ANN index — the 100-TB
     retrieval layout as one command. ``--output`` gets:
 
@@ -719,35 +698,24 @@ def cmd_build_ann_index(args) -> None:
       same partitioning: the 8-byte-code relation ADC ranks against
       without touching vectors.
 
+    A build commits all three together (``_commit_ann_index``).
     ``--append`` assigns a NEW batch against the STORED quantizer
     (no retrain — ``ivf_assign``) and appends to both relations;
     re-train only when drift unbalances the cells.
     """
-    import json as _json
-
     from curw_flo2d_data_manager_spark.operators.similarity import (
         build_ivf_index,
         ivf_assign,
         pq_assign,
         train_pq_codebooks,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="build-ann-index")
-    df = spark.read.parquet(args.input)
-    for col in (args.id_col, args.vec_col):
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
-    meta_path = os.path.join(args.output, "index_meta.json")
+    df = _read_input(spark, args.input, "--input", (args.id_col, args.vec_col))
     asg_path = os.path.join(args.output, "assignments")
     codes_path = os.path.join(args.output, "codes")
 
     if args.append:
-        try:
-            with open(meta_path) as f:
-                meta = _json.load(f)
-        except FileNotFoundError:
-            raise SystemExit(f"--append needs an existing index at {args.output}")
+        meta = _read_ann_meta(args.output)
         for p in (asg_path, codes_path):
             commit.recover(p)
         assigned = ivf_assign(
@@ -770,7 +738,6 @@ def cmd_build_ann_index(args) -> None:
         df, n_clusters=n_clusters, id_col=args.id_col, vec_col=args.vec_col
     )
     assignments = assignments.persist()
-    assignments.write.mode("overwrite").partitionBy("cluster").parquet(asg_path)
     meta = {
         "n_clusters": n_clusters,
         "n_vectors": n,
@@ -779,6 +746,7 @@ def cmd_build_ann_index(args) -> None:
         "centers": centers,
         "pq": None,
     }
+    codes = None
     if args.pq:
         codebooks = train_pq_codebooks(
             df, m=args.pq_m, ksub=args.pq_ksub,
@@ -788,10 +756,7 @@ def cmd_build_ann_index(args) -> None:
         codes = pq_assign(
             assignments, codebooks, id_col="corpus_id", vec_col="embedding"
         ).join(assignments.select("corpus_id", "cluster"), "corpus_id")
-        codes.write.mode("overwrite").partitionBy("cluster").parquet(codes_path)
-    assignments.unpersist()
-    os.makedirs(args.output, exist_ok=True)
-    commit.replace(meta_path, _json_writer(meta))
+    _commit_ann_index(args.output, assignments, codes, meta)
     print(
         f"build-ann-index: {n} vectors, {n_clusters} clusters"
         + (f", PQ {args.pq_m}x{args.pq_ksub}" if args.pq else "")
@@ -799,7 +764,7 @@ def cmd_build_ann_index(args) -> None:
     )
 
 
-def cmd_compact_ann_index(args) -> None:
+def cmd_compact_ann_index(spark, args) -> None:
     """Rebalance a persisted ANN index after ``--append`` drift: every
     appended batch is assigned against the ORIGINAL quantizer, so a
     shifted ingest distribution piles rows into a few cells (probe
@@ -818,8 +783,6 @@ def cmd_compact_ann_index(args) -> None:
     changes WHERE vectors sit, never which vectors exist — gated by
     the planted-copy recall test in tests/test_cli.py.
     """
-    import json as _json
-
     from pyspark.sql import functions as F
 
     from curw_flo2d_data_manager_spark.operators.similarity import (
@@ -827,23 +790,10 @@ def cmd_compact_ann_index(args) -> None:
         pq_assign,
         train_pq_codebooks,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="compact-ann-index")
-    meta_path = os.path.join(args.index, "index_meta.json")
-    asg_path = os.path.join(args.index, "assignments")
-    codes_path = os.path.join(args.index, "codes")
-    try:
-        with open(meta_path) as f:
-            meta = _json.load(f)
-    except FileNotFoundError:
-        raise SystemExit(f"no index_meta.json under {args.index}")
-
-    asg = _read_ann_table(spark, args.index, "assignments")
-    sizes = {
-        r["cluster"]: r["n"]
-        for r in asg.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    meta = _read_ann_meta(args.index)
+    asg = _read_input(spark, os.path.join(args.index, "assignments"), "--index")
+    sizes = _cell_sizes(asg)
     n_total = sum(sizes.values())
     ideal = n_total / meta["n_clusters"] if meta["n_clusters"] else 0.0
     balance = (max(sizes.values(), default=0) / ideal) if ideal else 0.0
@@ -865,7 +815,7 @@ def cmd_compact_ann_index(args) -> None:
     )
     # persisted: PQ training and both writes share one re-assignment
     assignments = assignments.persist()
-    pairs = [(asg_path, assignments.write.partitionBy("cluster").parquet)]
+    codes = None
     if meta.get("pq"):
         codebooks = train_pq_codebooks(
             assignments, m=meta["pq"]["m"], ksub=meta["pq"]["ksub"],
@@ -874,19 +824,10 @@ def cmd_compact_ann_index(args) -> None:
         codes = pq_assign(
             assignments, codebooks, id_col="corpus_id", vec_col="embedding"
         ).join(assignments.select("corpus_id", "cluster"), "corpus_id")
-        pairs.append((codes_path, codes.write.partitionBy("cluster").parquet))
         meta["pq"]["codebooks"] = codebooks
     meta.update(centers=centers, n_clusters=n_clusters, n_vectors=n_total)
-    pairs.append((meta_path, _json_writer(meta)))
-    try:
-        commit.replace_all(pairs)
-    finally:
-        assignments.unpersist()
-    new_sizes = {
-        r["cluster"]: r["n"]
-        for r in commit.table(spark, asg_path)
-        .groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    _commit_ann_index(args.index, assignments, codes, meta)
+    new_sizes = _cell_sizes(commit.table(spark, os.path.join(args.index, "assignments")))
     new_ideal = n_total / n_clusters if n_clusters else 0.0
     new_balance = (max(new_sizes.values(), default=0) / new_ideal) if new_ideal else 0.0
     print(
@@ -895,24 +836,11 @@ def cmd_compact_ann_index(args) -> None:
     )
 
 
-def _read_ann_table(spark, index: str, name: str):
-    """One relation of a persisted ANN index (``assignments``/``codes``),
-    after undoing any interrupted compaction swap."""
-    path = os.path.join(index, name)
-    commit.recover(path)
-    return commit.table(spark, path)
-
-
-def _check_ann_meta_consistency(meta, assignments, index_path) -> None:
-    """Fail loudly when assignments reference cluster ids outside
-    ``meta['centers']`` — the signature of an interrupted compaction
-    (new assignments committed, stale meta left behind; see
-    cmd_compact_ann_index's commit sequence). Reads only the cluster
-    partition column, so the check is a directory-listing agg."""
-    from pyspark.sql import functions as F
-
+def _check_ann_meta_consistency(meta, top, index_path) -> None:
+    """Fail loudly when ``top``, the largest cluster id in the
+    assignments, is outside ``meta['centers']`` — the signature of an
+    index whose tables and meta were not committed together."""
     n_centers = len(meta.get("centers") or [])
-    top = assignments.agg(F.max("cluster").alias("m")).collect()[0]["m"]
     if top is not None and n_centers and top >= n_centers:
         raise SystemExit(
             f"assignments under {index_path} reference cluster id {top} but "
@@ -921,38 +849,16 @@ def _check_ann_meta_consistency(meta, assignments, index_path) -> None:
         )
 
 
-def cmd_ann_index_stats(args) -> None:
+def cmd_ann_index_stats(spark, args) -> None:
     """Operating report for a persisted ANN index: per-cell row
     counts, balance factor (max cell / ideal even split — the number
     that says when to re-train the quantizer), empty-cell count, and
     codes-relation consistency when PQ codes exist. One aggregation
     over the cluster partition column — the vectors themselves are
     never read (column pruning)."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from curw_flo2d_data_manager_spark.session import get_spark
-
-    spark = get_spark(app_name="ann-index-stats")
-    try:
-        with open(os.path.join(args.index, "index_meta.json")) as f:
-            meta = _json.load(f)
-    except FileNotFoundError:
-        raise SystemExit(f"no index_meta.json under {args.index}")
-    asg = _read_ann_table(spark, args.index, "assignments")
-    sizes = {
-        r["cluster"]: r["n"]
-        for r in asg.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_centers = len(meta.get("centers") or [])
-    if sizes and n_centers and max(sizes) >= n_centers:
-        raise SystemExit(
-            f"assignments under {args.index} reference cluster id "
-            f"{max(sizes)} but index_meta.json has only {n_centers} centers "
-            f"— likely an interrupted compaction; re-run "
-            f"compact-ann-index --force"
-        )
+    meta = _read_ann_meta(args.index)
+    sizes = _cell_sizes(_read_input(spark, os.path.join(args.index, "assignments"), "--index"))
+    _check_ann_meta_consistency(meta, max(sizes, default=None), args.index)
     n_total = sum(sizes.values())
     n_cells = meta["n_clusters"]
     ideal = n_total / n_cells if n_cells else 0
@@ -963,7 +869,7 @@ def cmd_ann_index_stats(args) -> None:
           f"(balance {biggest / ideal:.2f}x ideal)" if ideal else "  empty index")
     print(f"  empty cells {empty}")
     if meta.get("pq"):
-        n_codes = _read_ann_table(spark, args.index, "codes").count()
+        n_codes = _read_input(spark, os.path.join(args.index, "codes"), "--index").count()
         status = "OK" if n_codes == n_total else "MISMATCH"
         print(f"  pq codes {n_codes} ({status} vs {n_total} vectors)")
         if n_codes != n_total:
@@ -972,39 +878,31 @@ def cmd_ann_index_stats(args) -> None:
             )
 
 
-def cmd_query_ann_index(args) -> None:
+def cmd_query_ann_index(spark, args) -> None:
     """Query a persisted ANN index: IVF partition-pruned probe +
     exact-cosine rerank, or — when the index carries PQ codes and
     ``--exact`` is not given — the full IVF-PQ stack (probe → ADC
     over 8-byte codes → exact rerank of the short candidate list).
     Writes (query_id, corpus_id, cosine, rank) parquet and prints the
     per-query top hit."""
-    import json as _json
+    from pyspark.sql import functions as F
 
     from curw_flo2d_data_manager_spark.operators.similarity import (
         ivf_query,
         ivfpq_query,
+        mmr_rerank,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    from pyspark.sql import functions as F
-
-    spark = get_spark(app_name="query-ann-index")
-    try:
-        with open(os.path.join(args.index, "index_meta.json")) as f:
-            meta = _json.load(f)
-    except FileNotFoundError:
-        raise SystemExit(f"no index_meta.json under {args.index}")
-    assignments = _read_ann_table(spark, args.index, "assignments")
-    _check_ann_meta_consistency(meta, assignments, args.index)
-    queries = spark.read.parquet(args.queries)
+    meta = _read_ann_meta(args.index)
+    assignments = _read_input(spark, os.path.join(args.index, "assignments"), "--index")
+    # reads only the cluster partition column: a directory-listing agg
+    top = assignments.agg(F.max("cluster")).first()[0]
+    _check_ann_meta_consistency(meta, top, args.index)
     qid, qvec = args.query_id_col, args.query_vec_col or meta["vec_col"]
-    for col in (qid, qvec):
-        if col not in queries.columns:
-            raise SystemExit(f"column {col!r} not in queries ({queries.columns})")
+    queries = _read_input(spark, args.queries, "--queries", (qid, qvec))
 
     if meta.get("pq") and not args.exact:
-        codes = _read_ann_table(spark, args.index, "codes")
+        codes = _read_input(spark, os.path.join(args.index, "codes"), "--index")
         hits = ivfpq_query(
             assignments, meta["centers"], queries, meta["pq"]["codebooks"],
             k=args.k, nprobe=args.nprobe, candidate_mult=args.candidate_mult,
@@ -1021,10 +919,6 @@ def cmd_query_ann_index(args) -> None:
         # MMR pass over the RESULT relation: re-rank the top-k down to
         # --diversify diverse hits (corpus vectors come back from the
         # index's own assignments — the corpus itself never re-enters)
-        from curw_flo2d_data_manager_spark.operators.similarity import (
-            mmr_rerank,
-        )
-
         if args.diversify > args.k:
             raise SystemExit(
                 f"--diversify {args.diversify} exceeds --k {args.k}"
@@ -1042,8 +936,7 @@ def cmd_query_ann_index(args) -> None:
     else:
         score_col = "cosine"
     if args.output:
-        hits.write.mode("overwrite").parquet(args.output)
-        hits = spark.read.parquet(args.output)
+        hits = _overwrite_parquet(hits, args.output)
     top = hits.filter(F.col("rank") == 1).orderBy("query_id").collect()
     for r in top:
         print(
@@ -1057,21 +950,17 @@ def cmd_query_ann_index(args) -> None:
     )
 
 
-def cmd_chunk_corpus(args) -> None:
+def cmd_chunk_corpus(spark, args) -> None:
     """Chunk long documents into fixed word windows (the pre-packing
     step) and, with --pack, assign each chunk a packing bin against a
     token budget — together the physical sequence-construction stage
     of a training pipeline, written back as parquet."""
     from pyspark.sql import functions as F
 
+    from curw_flo2d_data_manager_spark.operators.packing import pack_sequences
     from curw_flo2d_data_manager_spark.operators.textstats import chunk_documents
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="chunk-corpus")
-    df = spark.read.parquet(args.input)
-    for col in (args.id_col, args.text_col):
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
+    df = _read_input(spark, args.input, "--input", (args.id_col, args.text_col))
     reserved = {"chunk_idx", "n_words", "chunk_text", "chunk_id"}
     if args.id_col in reserved:
         raise SystemExit(
@@ -1086,23 +975,21 @@ def cmd_chunk_corpus(args) -> None:
         F.concat_ws("#", F.col(args.id_col).cast("string"), F.col("chunk_idx")),
     )
     if args.pack:
-        from curw_flo2d_data_manager_spark.operators.packing import pack_sequences
-
         chunks = pack_sequences(
             chunks, "chunk_id", "n_words", budget=args.budget
         )
-    chunks.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    chunks = _overwrite_parquet(chunks, args.output)
     extra = ""
     if args.pack:
-        bins = spark.read.parquet(args.output).agg(
-            F.count_distinct("bin_id")
-        ).first()[0]
+        bins = chunks.agg(F.count_distinct("bin_id")).first()[0]
         extra = f" into {bins} bins of {args.budget} tokens"
-    print(f"chunk-corpus: {df.count()} docs -> {n} chunks{extra} -> {args.output}")
+    print(
+        f"chunk-corpus: {df.count()} docs -> {chunks.count()} chunks{extra} "
+        f"-> {args.output}"
+    )
 
 
-def cmd_materialize_mix(args) -> None:
+def cmd_materialize_mix(spark, args) -> None:
     """Materialize the two-sided training mix (epoch plan → physical
     rows): oversized domains downsample once, undersized domains
     repeat with epoch stamps — the exact token mass the temperature-
@@ -1110,27 +997,21 @@ def cmd_materialize_mix(args) -> None:
     from curw_flo2d_data_manager_spark.operators.sampling import (
         materialize_mixture,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="materialize-mix")
-    df = spark.read.parquet(args.input)
     group = [c for c in args.group_cols.split(",") if c]
-    for col in group + [args.id_col, args.text_col]:
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
+    df = _read_input(spark, args.input, "--input", group + [args.id_col, args.text_col])
     out = materialize_mixture(
         df, group, [args.id_col], args.text_col,
         target_tokens=args.target_tokens, alpha=args.alpha, salt=args.salt,
     )
-    out.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    n = _overwrite_parquet(out, args.output).count()
     print(
         f"materialize-mix: {df.count()} rows in, {n} mix rows out "
         f"(target {args.target_tokens} tokens, alpha {args.alpha}) -> {args.output}"
     )
 
 
-def cmd_import_corpus(args) -> None:
+def cmd_import_corpus(spark, args) -> None:
     """JSONL → parquet ingestion: the front door of the training-data
     pipeline. Reads line-delimited JSON (Spark's json source handles
     .gz transparently and splits plain files), optionally with an
@@ -1138,9 +1019,6 @@ def cmd_import_corpus(args) -> None:
     is a full extra pass over the data — an early projection, and an
     optional Z-order layout over numeric/timestamp columns so range
     scans on any of them prune row groups from day one."""
-    from curw_flo2d_data_manager_spark.session import get_spark
-
-    spark = get_spark(app_name="import-corpus")
     reader = spark.read
     if args.schema:
         reader = reader.schema(args.schema)
@@ -1163,15 +1041,17 @@ def cmd_import_corpus(args) -> None:
         from curw_flo2d_data_manager_spark.operators.zorder import write_zordered
 
         cols = [c.strip() for c in args.zorder.split(",")]
-        write_zordered(df, args.output, cols, n_files=args.files)
+        commit.replace(
+            args.output, lambda tmp: write_zordered(df, tmp, cols, n_files=args.files)
+        )
+        n = commit.table(spark, args.output).count()
     else:
         out = df.repartition(args.files) if args.files else df
-        out.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+        n = _overwrite_parquet(out, args.output).count()
     print(f"imported {n} rows -> {args.output}")
 
 
-def cmd_export_corpus(args) -> None:
+def cmd_export_corpus(spark, args) -> None:
     """Parquet → JSONL shard export: the back door of the pipeline —
     ship a cleaned/mixed corpus to a trainer that consumes line-
     delimited JSON. Shard assignment is DETERMINISTIC (md5 bucket of
@@ -1180,12 +1060,7 @@ def cmd_export_corpus(args) -> None:
     file under <output>/ written by Spark's json sink."""
     from pyspark.sql import functions as F
 
-    from curw_flo2d_data_manager_spark.session import get_spark
-
-    spark = get_spark(app_name="export-corpus")
-    df = spark.read.parquet(args.input)
-    if args.key_col not in df.columns:
-        raise SystemExit(f"--key-col {args.key_col!r} not in input ({df.columns})")
+    df = _read_input(spark, args.input, "--input", (args.key_col,))
     shards = max(1, args.shards)
     # explicit shard DIRECTORIES (shard=K/): repartition(n, expr) hashes
     # the expression, so two md5 buckets can collide into one partition
@@ -1200,10 +1075,10 @@ def cmd_export_corpus(args) -> None:
             F.lit(shards),
         ),
     ).repartition(shards, F.col("_shard"))
-    writer = out.write.partitionBy("_shard").mode("overwrite")
+    writer = out.write.partitionBy("_shard")
     if args.gzip:
         writer = writer.option("compression", "gzip")
-    writer.json(args.output)
+    commit.replace(args.output, writer.json)
     n = spark.read.json(args.output).drop("_shard").count()
     print(
         f"exported {n} rows -> {args.output} "
@@ -1211,15 +1086,14 @@ def cmd_export_corpus(args) -> None:
     )
 
 
-def cmd_split_corpus(args) -> None:
+def cmd_split_corpus(spark, args) -> None:
     """Materialize a deterministic leak-free train/val/test split:
     one pass per split (pure hash filter, no shuffle), each written
-    under <output>/<name>. Same key always lands in the same split
-    across runs, engines, and corpus growth."""
+    under <output>/<name>, all committed together. Same key always
+    lands in the same split across runs, engines, and corpus growth."""
     from pyspark.sql import functions as F
 
     from curw_flo2d_data_manager_spark.operators.sampling import split_assign
-    from curw_flo2d_data_manager_spark.session import get_spark
 
     fractions: dict[str, float] = {}
     for part in args.fractions.split(","):
@@ -1227,23 +1101,20 @@ def cmd_split_corpus(args) -> None:
         if not _ or not name.strip():
             raise SystemExit(f"bad --fractions entry {part!r} (want name=frac)")
         fractions[name.strip()] = float(frac)
-    spark = get_spark(app_name="split-corpus")
-    df = spark.read.parquet(args.input)
     keys = [c.strip() for c in args.key_cols.split(",")]
-    for col in keys:
-        if col not in df.columns:
-            raise SystemExit(f"key column {col!r} not in input ({df.columns})")
+    df = _read_input(spark, args.input, "--input", keys)
     assigned = split_assign(df, keys, fractions, salt=args.salt)
-    counts = []
-    for name in fractions:
-        target = os.path.join(args.output, name)
-        part = assigned.filter(F.col("split") == name).drop("split")
-        part.write.mode("overwrite").parquet(target)
-        counts.append(f"{name}={spark.read.parquet(target).count()}")
-    print(f"split {df.count()} rows -> {', '.join(counts)} under {args.output}")
+    splits = _overwrite_parquets({
+        os.path.join(args.output, name): assigned.filter(F.col("split") == name).drop("split")
+        for name in fractions
+    })
+    counts = ", ".join(
+        f"{name}={splits[os.path.join(args.output, name)].count()}" for name in fractions
+    )
+    print(f"split {df.count()} rows -> {counts} under {args.output}")
 
 
-def cmd_decontam_corpus(args) -> None:
+def cmd_decontam_corpus(spark, args) -> None:
     """Drop every corpus row whose fingerprint appears in a blocklist
     corpus (benchmark decontamination / already-trained-shard
     exclusion) via the Bloom-prefiltered exact anti-join: the corpus
@@ -1255,11 +1126,9 @@ def cmd_decontam_corpus(args) -> None:
     from curw_flo2d_data_manager_spark.operators.dedup import (
         bloom_blocklist_filter,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="decontam-corpus")
-    corpus = spark.read.parquet(args.input)
-    block = spark.read.parquet(args.blocklist)
+    corpus = _read_input(spark, args.input, "--input")
+    block = _read_input(spark, args.blocklist, "--blocklist")
 
     def keyed(df, key_col, text_col, side):
         if key_col and key_col in df.columns:
@@ -1286,9 +1155,8 @@ def cmd_decontam_corpus(args) -> None:
     kept = bloom_blocklist_filter(
         corpus_k, block_k.select(ckey), ckey, m_bits=m_bits, k=args.k
     ).select(*corpus.columns)
-    kept.write.mode("overwrite").parquet(args.output)
+    n_out = _overwrite_parquet(kept, args.output).count()
     n_in = corpus.count()
-    n_out = spark.read.parquet(args.output).count()
     print(
         f"decontam-corpus: {n_in} rows in, {n_out} kept "
         f"({n_in - n_out} blocklisted; m_bits={m_bits}, k={args.k}) "
@@ -1296,7 +1164,7 @@ def cmd_decontam_corpus(args) -> None:
     )
 
 
-def cmd_score_corpus(args) -> None:
+def cmd_score_corpus(spark, args) -> None:
     """Per-document training-data signals written back as parquet:
     token counts / quality ratios / predicted language (one pure-
     Column pass), optional in-corpus unigram-LM logprob, and optional
@@ -1308,23 +1176,24 @@ def cmd_score_corpus(args) -> None:
         cache_mark,
         release_caches_since,
     )
+    from curw_flo2d_data_manager_spark.operators.dedup import repeated_spans
     from curw_flo2d_data_manager_spark.operators.textstats import (
         dsir_log_ratio,
         text_profile,
         unigram_logprob,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
     signals = {s.strip() for s in args.signals.split(",") if s.strip()}
     known = {"profile", "unigram", "dsir", "spans"}
     if signals - known:
         raise SystemExit(f"unknown --signals {sorted(signals - known)}; "
                          f"choose from {sorted(known)}")
-    spark = get_spark(app_name="score-corpus")
-    df = spark.read.parquet(args.input)
-    for col in (args.id_col, args.text_col):
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
+    df = _read_input(spark, args.input, "--input", (args.id_col, args.text_col))
+    if "dsir" in signals and args.lang_col not in df.columns:
+        raise SystemExit(
+            f"--signals dsir needs --lang-col ({args.lang_col!r} "
+            f"not in input {df.columns})"
+        )
     out = df
     if "profile" in signals:
         out = text_profile(out, args.text_col)
@@ -1341,11 +1210,6 @@ def cmd_score_corpus(args) -> None:
             )
             out = out.join(lp, args.id_col, "left")
         if "dsir" in signals:
-            if args.lang_col not in df.columns:
-                raise SystemExit(
-                    f"--signals dsir needs --lang-col ({args.lang_col!r} "
-                    f"not in input {df.columns})"
-                )
             scored = dsir_log_ratio(
                 df.select(
                     args.id_col,
@@ -1361,10 +1225,6 @@ def cmd_score_corpus(args) -> None:
             )
             out = out.join(scored, args.id_col, "left")
         if "spans" in signals:
-            from curw_flo2d_data_manager_spark.operators.dedup import (
-                repeated_spans,
-            )
-
             spans = (
                 repeated_spans(
                     df.select(args.id_col, args.text_col), args.id_col,
@@ -1379,39 +1239,31 @@ def cmd_score_corpus(args) -> None:
             out = out.join(spans, args.id_col, "left").fillna(
                 {"dup_span_tokens": 0, "n_dup_spans": 0}
             )
-        out.write.mode("overwrite").parquet(args.output)
+        committed = _overwrite_parquet(out, args.output)
     finally:
         release_caches_since(mark)
-    n = spark.read.parquet(args.output).count()
     print(
-        f"score-corpus: {n} rows scored ({', '.join(sorted(signals))}) "
+        f"score-corpus: {committed.count()} rows scored ({', '.join(sorted(signals))}) "
         f"-> {args.output}"
     )
 
 
-def cmd_search_corpus(args) -> None:
+def cmd_search_corpus(spark, args) -> None:
     """BM25 top-k retrieval over a corpus parquet: the query string is
     tokenized with the SAME normalization as the corpus (so phrasing
     matches scoring), scored via ``textstats.bm25_topk``, and the hit
     list printed (and optionally written as parquet). Duplicate query
     terms count once — BM25's query-side tf is binary here, the common
     short-query convention."""
-    from curw_flo2d_data_manager_spark.operators.textstats import bm25_topk
-    from curw_flo2d_data_manager_spark.session import get_spark
+    import re
 
-    spark = get_spark(app_name="search-corpus")
-    df = spark.read.parquet(args.input)
-    for col in (args.id_col, args.text_col):
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
+    from curw_flo2d_data_manager_spark.operators.textstats import bm25_topk
+
+    df = _read_input(spark, args.input, "--input", (args.id_col, args.text_col))
     # normalize the query exactly like words(): lower, strip to
     # [a-z0-9 + non-ASCII + dash], whitespace-split
-    import re as _re
-
     terms = sorted(
-        set(
-            _re.sub("[^a-z0-9\\x80-\\uffff-]+", " ", args.query.lower()).split()
-        )
+        set(re.sub("[^a-z0-9\\x80-\\uffff-]+", " ", args.query.lower()).split())
     )
     if not terms:
         raise SystemExit(f"--query {args.query!r} has no searchable terms")
@@ -1425,8 +1277,7 @@ def cmd_search_corpus(args) -> None:
         k=args.k,
     )
     if args.output:
-        hits.write.mode("overwrite").parquet(args.output)
-        hits = spark.read.parquet(args.output)
+        hits = _overwrite_parquet(hits, args.output)
     rows = sorted(hits.collect(), key=lambda r: r["rank"])
     print(f"search-corpus: {len(rows)} hits for {' '.join(terms)!r}")
     for r in rows:
@@ -1440,8 +1291,6 @@ def _bounded_k(value: str) -> int:
     """argparse type for search-corpus --k: the hit list is collected
     to the driver (printing is the point of the command), so the
     bounded-collect contract is enforced at parse time, not assumed."""
-    import argparse
-
     k = int(value)
     if not 1 <= k <= 10000:
         raise argparse.ArgumentTypeError(
@@ -1469,7 +1318,7 @@ def _spark_write_complete(out: str) -> bool:
     )
 
 
-def cmd_prepare_corpus(args) -> None:
+def cmd_prepare_corpus(spark, args) -> None:
     """One-shot training-data pipeline runner: execute a JSON spec of
     corpus stages (import-corpus, dedup-corpus, decontam-corpus,
     score-corpus, split-corpus, chunk-corpus, materialize-mix,
@@ -1478,7 +1327,8 @@ def cmd_prepare_corpus(args) -> None:
     style idempotence: a stage whose ``output`` directory already
     exists is SKIPPED (same F9 get-or-create contract as the FLO-2D
     generators), so a crashed run resumes where it stopped. ``--force``
-    re-runs everything.
+    re-runs everything. Starts no Spark session of its own: each
+    stage's ``main`` call gets the one session.
 
     Spec format::
 
@@ -1493,9 +1343,7 @@ def cmd_prepare_corpus(args) -> None:
 
     Boolean true emits a bare flag; stage outputs chain by path.
     """
-    import json as _json
-
-    spec = _json.load(open(args.spec))
+    spec = json.load(open(args.spec))
     stages = spec.get("stages")
     if not isinstance(stages, list) or not stages:
         raise SystemExit(f"{args.spec}: spec needs a non-empty 'stages' list")
@@ -1505,13 +1353,13 @@ def cmd_prepare_corpus(args) -> None:
         if not name or not isinstance(stage_args, dict):
             raise SystemExit(f"stage {i}: needs 'run' and dict 'args'")
         out = stage_args.get("output")
-        # A stage counts as complete only when Spark's _SUCCESS marker
-        # landed: a crash mid-write leaves a partial parquet directory
-        # behind, and skipping on bare existence would feed the
-        # corrupt output to every downstream stage. Without the marker
-        # the stage re-runs — its own overwrite mode makes that safe.
-        # (Non-directory outputs — single rendered files — keep the
-        # plain existence check.)
+        # Every stage commits its output through ``commit``, so a crash
+        # mid-write leaves the previous output (or nothing) at the
+        # path. A directory without Spark's _SUCCESS marker was written
+        # some other way and is taken as partial: the stage re-runs
+        # and its commit replaces the directory whole. (Non-directory
+        # outputs — single rendered files — keep the plain existence
+        # check.)
         if out and os.path.exists(out) and not args.force:
             done = not os.path.isdir(out) or _spark_write_complete(out)
             if done:
@@ -1535,7 +1383,7 @@ def cmd_prepare_corpus(args) -> None:
     print(f"prepare-corpus: {len(stages)} stages complete")
 
 
-def cmd_corpus_similarity(args) -> None:
+def cmd_corpus_similarity(spark, args) -> None:
     """All-pairs sparse tf-idf cosine over a parquet corpus (ApSS,
     Bayardo WWW'07): writes (id_a, id_b, n_shared_terms, cosine)
     parquet for every pair at or above ``--min_sim`` — the text-side
@@ -1547,13 +1395,8 @@ def cmd_corpus_similarity(args) -> None:
     from curw_flo2d_data_manager_spark.operators.textstats import (
         sparse_cosine_pairs,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="corpus-similarity")
-    df = spark.read.parquet(args.input)
-    for col in (args.id_col, args.text_col):
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
+    df = _read_input(spark, args.input, "--input", (args.id_col, args.text_col))
     pairs = sparse_cosine_pairs(
         df,
         args.id_col,
@@ -1562,34 +1405,27 @@ def cmd_corpus_similarity(args) -> None:
         max_df_frac=args.max_df_frac,
         ngram=args.ngram,
     )
-    pairs.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    n = _overwrite_parquet(pairs, args.output).count()
     print(
         f"corpus-similarity: {n} pairs with cosine >= {args.min_sim} "
         f"(ngram={args.ngram}) -> {args.output}"
     )
 
 
-def cmd_graph_triangles(args) -> None:
+def cmd_graph_triangles(spark, args) -> None:
     """Per-node triangle counts over an undirected edge parquet —
     the clustering-coefficient primitive for duplicate-pair and
     co-occurrence graphs (operators/triangles.py: degree-oriented
     wedge enumeration, O(|E|^1.5) on any degree skew)."""
+    from pyspark.sql import functions as F
+
     from curw_flo2d_data_manager_spark.operators.triangles import (
         triangle_counts,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="graph-triangles")
-    edges = spark.read.parquet(args.edges)
-    for col in (args.src_col, args.dst_col):
-        if col not in edges.columns:
-            raise SystemExit(f"column {col!r} not in edges ({edges.columns})")
+    edges = _read_input(spark, args.edges, "--edges", (args.src_col, args.dst_col))
     out = triangle_counts(edges, args.src_col, args.dst_col)
-    out.write.mode("overwrite").parquet(args.output)
-    import pyspark.sql.functions as F
-
-    agg = spark.read.parquet(args.output).agg(
+    agg = _overwrite_parquet(out, args.output).agg(
         F.count(F.lit(1)).alias("nodes"),
         F.sum("n_triangles").alias("corners"),
     ).collect()[0]
@@ -1600,24 +1436,19 @@ def cmd_graph_triangles(args) -> None:
     )
 
 
-def cmd_link_predict(args) -> None:
+def cmd_link_predict(spark, args) -> None:
     """Top-k predicted missing edges of an undirected edge parquet by
     resource-allocation / Jaccard / common-neighbor scores
     (operators/linkpredict.py: wedge enumeration at the shared
     neighbor, anti-join against existing edges, optional hub degree
     cap)."""
+    from pyspark.sql import functions as F
+
     from curw_flo2d_data_manager_spark.operators.linkpredict import (
         link_prediction_scores,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    import pyspark.sql.functions as F
-
-    spark = get_spark(app_name="link-predict")
-    edges = spark.read.parquet(args.edges)
-    for col in (args.src_col, args.dst_col):
-        if col not in edges.columns:
-            raise SystemExit(f"column {col!r} not in edges ({edges.columns})")
+    edges = _read_input(spark, args.edges, "--edges", (args.src_col, args.dst_col))
     scores = link_prediction_scores(
         edges,
         args.src_col,
@@ -1627,30 +1458,22 @@ def cmd_link_predict(args) -> None:
     out = scores.orderBy(
         F.desc("ra_fp"), "node_a", "node_b"
     ).limit(args.top_k)
-    out.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    n = _overwrite_parquet(out, args.output).count()
     print(f"link-predict: top {n} candidate edges -> {args.output}")
 
 
-def cmd_graph_distances(args) -> None:
+def cmd_graph_distances(spark, args) -> None:
     """Multi-source BFS hop distances over an undirected edge parquet
     (operators/components.py::bfs_hops): nearest-seed distance per
     node up to --rounds hops; seeds come from a parquet of ids."""
+    from pyspark.sql import functions as F
+
     from curw_flo2d_data_manager_spark.operators.components import (
         bfs_hops,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="graph-distances")
-    edges = spark.read.parquet(args.edges)
-    seeds = spark.read.parquet(args.seeds)
-    for col in (args.src_col, args.dst_col):
-        if col not in edges.columns:
-            raise SystemExit(f"column {col!r} not in edges ({edges.columns})")
-    if args.id_col not in seeds.columns:
-        raise SystemExit(
-            f"column {args.id_col!r} not in seeds ({seeds.columns})"
-        )
+    edges = _read_input(spark, args.edges, "--edges", (args.src_col, args.dst_col))
+    seeds = _read_input(spark, args.seeds, "--seeds", (args.id_col,))
     out = bfs_hops(
         edges,
         seeds,
@@ -1659,10 +1482,7 @@ def cmd_graph_distances(args) -> None:
         dst=args.dst_col,
         id_col=args.id_col,
     )
-    out.write.mode("overwrite").parquet(args.output)
-    import pyspark.sql.functions as F
-
-    agg = spark.read.parquet(args.output).agg(
+    agg = _overwrite_parquet(out, args.output).agg(
         F.count(F.lit(1)).alias("n"), F.max("dist").alias("d")
     ).collect()[0]
     print(
@@ -1671,42 +1491,31 @@ def cmd_graph_distances(args) -> None:
     )
 
 
-def cmd_graph_hits(args) -> None:
+def cmd_graph_hits(spark, args) -> None:
     """HITS hubs/authorities over a DIRECTED edge parquet in exact
     integer fixed-point (operators/pagerank.py::hits_fixed_point) —
     hub scores for fan-out nodes, authority scores for fan-in nodes,
     bit-identical across re-runs and partitionings."""
+    from pyspark.sql import functions as F
+
     from curw_flo2d_data_manager_spark.operators.pagerank import (
         hits_fixed_point,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    import pyspark.sql.functions as F
-
-    spark = get_spark(app_name="graph-hits")
-    edges = spark.read.parquet(args.edges)
-    for col in (args.src_col, args.dst_col):
-        if col not in edges.columns:
-            raise SystemExit(f"column {col!r} not in edges ({edges.columns})")
-    out = hits_fixed_point(
-        edges, src=args.src_col, dst=args.dst_col, iters=args.iters
+    edges = _read_input(spark, args.edges, "--edges", (args.src_col, args.dst_col))
+    out = _overwrite_parquet(
+        hits_fixed_point(edges, src=args.src_col, dst=args.dst_col, iters=args.iters),
+        args.output,
     )
-    out.write.mode("overwrite").parquet(args.output)
-    top = (
-        spark.read.parquet(args.output)
-        .orderBy(F.desc("auth_fp"), "node")
-        .limit(3)
-        .collect()
-    )
-    n = spark.read.parquet(args.output).count()
+    top = out.orderBy(F.desc("auth_fp"), "node").limit(3).collect()
     heads = ", ".join(f"{r.node}:{r.auth_fp}" for r in top)
     print(
-        f"graph-hits: {n} nodes scored over {args.iters} rounds "
+        f"graph-hits: {out.count()} nodes scored over {args.iters} rounds "
         f"(top authorities {heads}) -> {args.output}"
     )
 
 
-def cmd_train_classifier(args) -> None:
+def cmd_train_classifier(spark, args) -> None:
     """Train the hashed linear quality classifier on a labeled parquet
     corpus (exact fixed-point GD — operators/mltrain.py) and write the
     learned weights as parquet (bucket, w_fp, w). Prints the training
@@ -1719,13 +1528,10 @@ def cmd_train_classifier(args) -> None:
         train_linear_classifier,
     )
     from curw_flo2d_data_manager_spark.operators.textstats import words
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="train-classifier")
-    df = spark.read.parquet(args.input)
-    for col in (args.id_col, args.text_col, args.label_col):
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
+    df = _read_input(
+        spark, args.input, "--input", (args.id_col, args.text_col, args.label_col)
+    )
     scale = 10**8
     w = train_linear_classifier(
         df,
@@ -1736,10 +1542,10 @@ def cmd_train_classifier(args) -> None:
         iters=args.iters,
         scale=scale,
     )
-    w.select(
-        "bucket", "w_fp", (F.col("w_fp") / F.lit(float(scale))).alias("w")
-    ).write.mode("overwrite").parquet(args.output)
-    weights = spark.read.parquet(args.output)
+    weights = _overwrite_parquet(
+        w.select("bucket", "w_fp", (F.col("w_fp") / F.lit(float(scale))).alias("w")),
+        args.output,
+    )
 
     # training accuracy of the hard-sigmoid probe (same margin +
     # activation as training: predict 1 iff m_fp DIV 4 + S/2 >= S/2,
@@ -1773,7 +1579,7 @@ def cmd_train_classifier(args) -> None:
     )
 
 
-def cmd_corpus_stats(args) -> None:
+def cmd_corpus_stats(spark, args) -> None:
     """One-pass corpus health report: per-(lang, source) doc/token
     counts, mixture weights, and mean quality signals — the look-
     before-you-train summary. Writes parquet and prints the totals."""
@@ -1782,19 +1588,12 @@ def cmd_corpus_stats(args) -> None:
     from curw_flo2d_data_manager_spark.operators.textstats import (
         domain_mixture,
         gopher_quality_flags,
+        normalize_text,
         whitespace_token_count,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="corpus-stats")
-    df = spark.read.parquet(args.input)
     group = [c for c in args.group_cols.split(",") if c]
-    for col in group + [args.text_col]:
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
-
-    from curw_flo2d_data_manager_spark.operators.textstats import normalize_text
-
+    df = _read_input(spark, args.input, "--input", group + [args.text_col])
     if args.bpe:
         # budget in tokenizer tokens: join per-doc greedy-BPE counts
         # (vocabulary-scaled encode, operators/bpe.py) and let the
@@ -1807,8 +1606,7 @@ def cmd_corpus_stats(args) -> None:
         )
 
         vocab = load_merges(args.merges) if args.merges else None
-        byte_level = bool(getattr(args, "byte_level", False))
-        if byte_level and not args.merges:
+        if args.byte_level and not args.merges:
             raise SystemExit(
                 "--byte-level needs --merges (the built-in lexicon is "
                 "trained over plain characters, not the byte alphabet)"
@@ -1836,7 +1634,7 @@ def cmd_corpus_stats(args) -> None:
             )
         counts = bpe_token_counts(
             df, id_col=args.id_col, text_col=args.text_col,
-            vocab=vocab, byte_level=byte_level,
+            vocab=vocab, byte_level=args.byte_level,
         ).select(args.id_col, "n_bpe_tokens")
         df = df.join(counts, args.id_col, "left").withColumn(
             "n_bpe_tokens", F.coalesce(F.col("n_bpe_tokens"), F.lit(0))
@@ -1866,8 +1664,7 @@ def cmd_corpus_stats(args) -> None:
             4,
         ).alias("approx_dup_rate"),
     )
-    report = mix.join(flags, group).orderBy(*group)
-    report.write.mode("overwrite").parquet(args.output)
+    report = _overwrite_parquet(mix.join(flags, group).orderBy(*group), args.output)
     total = df.agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum(whitespace_token_count(args.text_col)).alias("tokens"),
@@ -1878,7 +1675,7 @@ def cmd_corpus_stats(args) -> None:
     )
 
 
-def cmd_profile_table(args) -> None:
+def cmd_profile_table(spark, args) -> None:
     """One-pass data-quality profile of a parquet table: per-column
     null counts, distinct cardinalities, ranges, means — the
     ingest-health relation drift checks diff between loads. One
@@ -1888,23 +1685,15 @@ def cmd_profile_table(args) -> None:
     from curw_flo2d_data_manager_spark.operators.profile import (
         profile_columns,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="profile-table")
-    df = spark.read.parquet(args.input)
-    cols = [
-        c.strip() for c in args.columns.split(",") if c.strip()
-    ] or list(df.columns)
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise SystemExit(f"columns not in input: {missing} ({df.columns})")
+    cols = [c.strip() for c in args.columns.split(",") if c.strip()]
+    df = _read_input(spark, args.input, "--input", cols)
     prof = profile_columns(
-        df, cols, exact_distinct=not args.approx
+        df, cols or df.columns, exact_distinct=not args.approx
     ).orderBy("col_name")
     if args.output:
-        prof.coalesce(1).write.mode("overwrite").parquet(args.output)
-    rows = prof.collect()  # bounded: one row per profiled column
-    for r in rows:
+        prof = _overwrite_parquet(prof.coalesce(1), args.output).orderBy("col_name")
+    for r in prof.collect():  # bounded: one row per profiled column
         print(
             f"{r.col_name}: n={r.n_rows} null={r.n_null} "
             f"distinct={r.n_distinct} min={r.min_v} max={r.max_v} "
@@ -1912,50 +1701,36 @@ def cmd_profile_table(args) -> None:
         )
 
 
-def cmd_detect_extremes(args) -> None:
+def cmd_detect_extremes(spark, args) -> None:
     """Extreme-event report over a series parquet: POT cluster peaks
     (runs-method declustering) and optional CUSUM drift flags — the
     post-extraction analysis a flood office runs on the gauge series
     the reference's extract scripts produce. Writes the peak table
-    (and drift table with --cusum) and prints a summary."""
+    (and drift table with --cusum, committed together) and prints a
+    summary."""
     from pyspark.sql import functions as F
 
     from curw_flo2d_data_manager_spark.operators.extremes import (
         cusum_drift,
         peaks_over_threshold,
     )
-    from curw_flo2d_data_manager_spark.session import get_spark
 
-    spark = get_spark(app_name="detect-extremes")
-    df = spark.read.parquet(args.input)
     keys = [c for c in args.key_cols.split(",") if c]
-    for col in keys + [args.ts_col, args.value_col]:
-        if col not in df.columns:
-            raise SystemExit(f"column {col!r} not in input ({df.columns})")
-
-    peaks = peaks_over_threshold(
-        df,
-        value_col=args.value_col,
-        ts_col=args.ts_col,
-        key_cols=keys,
-        threshold=args.threshold,
-        min_gap_seconds=args.min_gap_seconds,
-    )
-    peaks.write.mode("overwrite").parquet(
-        os.path.join(args.output, "peaks")
-    )
-    summary = peaks.agg(
-        F.count(F.lit(1)).alias("clusters"),
-        F.max("peak_value").alias("max_peak"),
-        F.avg("excess").alias("mean_excess"),
-    ).first()
-    msg = (
-        f"detect-extremes: {summary['clusters']} clusters above "
-        f"{args.threshold} (max peak {summary['max_peak']}, mean excess "
-        f"{round(summary['mean_excess'], 4) if summary['mean_excess'] is not None else None})"
-    )
+    df = _read_input(spark, args.input, "--input", keys + [args.ts_col, args.value_col])
+    peaks_path = os.path.join(args.output, "peaks")
+    drift_path = os.path.join(args.output, "drift_alarms")
+    outputs = {
+        peaks_path: peaks_over_threshold(
+            df,
+            value_col=args.value_col,
+            ts_col=args.ts_col,
+            key_cols=keys,
+            threshold=args.threshold,
+            min_gap_seconds=args.min_gap_seconds,
+        )
+    }
     if args.cusum:
-        drift = cusum_drift(
+        outputs[drift_path] = cusum_drift(
             df,
             value_col=args.value_col,
             ts_col=args.ts_col,
@@ -1966,10 +1741,19 @@ def cmd_detect_extremes(args) -> None:
             (F.col("cusum_pos") > args.cusum_alarm)
             | (F.col("cusum_neg") > args.cusum_alarm)
         )
-        drift.write.mode("overwrite").parquet(
-            os.path.join(args.output, "drift_alarms")
-        )
-        msg += f"; {drift.count()} drift-alarm rows"
+    tables = _overwrite_parquets(outputs)
+    summary = tables[peaks_path].agg(
+        F.count(F.lit(1)).alias("clusters"),
+        F.max("peak_value").alias("max_peak"),
+        F.avg("excess").alias("mean_excess"),
+    ).first()
+    msg = (
+        f"detect-extremes: {summary['clusters']} clusters above "
+        f"{args.threshold} (max peak {summary['max_peak']}, mean excess "
+        f"{round(summary['mean_excess'], 4) if summary['mean_excess'] is not None else None})"
+    )
+    if args.cusum:
+        msg += f"; {tables[drift_path].count()} drift-alarm rows"
     print(msg + f" -> {args.output}")
 
 
@@ -2008,7 +1792,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp = sub.add_parser("gen-inflow", help="INFLOW.DAT (K1)")
     _common(sp)
     sp.add_argument("--obs_wl", type=float, default=None)
-    sp.set_defaults(fn=cmd_gen_inflow)
 
     sp = sub.add_parser("gen-rain", help="RAIN.DAT (K4; flo2d_10_* via nearest gauge)")
     _common(sp, open_models=True)
@@ -2020,31 +1803,26 @@ def build_parser() -> argparse.ArgumentParser:
                     help="config_flo2d_10.json path: model → {lat, lon}")
     sp.add_argument("--obs_stations", default=None,
                     help="weather-station dim parquet (default <store>/obs_stations)")
-    sp.set_defaults(fn=cmd_gen_rain)
 
     sp = sub.add_parser("gen-raincell", help="RAINCELL.DAT (K3)")
     _common(sp)
-    sp.set_defaults(fn=cmd_gen_raincell)
 
     sp = sub.add_parser("gen-outflow", help="OUTFLOW.DAT (K2)")
     _common(sp)
     sp.add_argument("--tide_config", default=None, help="JSON node→grid_id map")
     sp.add_argument("--tail", default=None, help="verbatim tail asset (P3)")
-    sp.set_defaults(fn=cmd_gen_outflow)
 
     sp = sub.add_parser("gen-chan", help="CHAN.DAT (K5)")
     _common(sp)
     sp.add_argument("--body", required=True, help="body pairs template asset")
     sp.add_argument("--head", default=None)
     sp.add_argument("--tail", default=None)
-    sp.set_defaults(fn=cmd_gen_chan)
 
     sp = sub.add_parser("init", help="register source + station dims (K9)")
     sp.add_argument("-m", "--model", required=True)
     sp.add_argument("--store", required=True)
     sp.add_argument("--grid_csv", required=True)
     sp.add_argument("--station_map", required=True, help="CHANNEL/FLOOD map JSON")
-    sp.set_defaults(fn=cmd_init)
 
     sp = sub.add_parser(
         "extract-water-level",
@@ -2072,7 +1850,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--variable_id", type=int, default=1)
     sp.add_argument("--template", default=None,
                     help="template archive path recorded in run_metadata (K8)")
-    sp.set_defaults(fn=cmd_extract_water_level)
 
     sp = sub.add_parser(
         "compact-store",
@@ -2081,7 +1858,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--path", required=True, help="data/ directory of the store")
     sp.add_argument("--target_mb", type=int, default=128)
     sp.add_argument("--dates", nargs="*", default=None)
-    sp.set_defaults(fn=cmd_compact_store)
 
     sp = sub.add_parser(
         "archive-templates",
@@ -2089,7 +1865,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     sp.add_argument("--source_dir", required=True)
     sp.add_argument("--name", default="template")
-    sp.set_defaults(fn=cmd_archive_templates)
 
     sp = sub.add_parser(
         "dedup-corpus",
@@ -2116,7 +1891,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="winnow: min shared fingerprints per pair")
     sp.add_argument("--keep_only", action="store_true",
                     help="write only surviving rows (original columns)")
-    sp.set_defaults(fn=cmd_dedup_corpus)
 
     sp = sub.add_parser(
         "train-classifier",
@@ -2130,7 +1904,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="0/1 integer label column")
     sp.add_argument("--buckets", type=int, default=64)
     sp.add_argument("--iters", type=int, default=3)
-    sp.set_defaults(fn=cmd_train_classifier)
 
     sp = sub.add_parser(
         "corpus-similarity",
@@ -2145,7 +1918,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="drop terms in more than this fraction of docs")
     sp.add_argument("--ngram", type=int, default=3,
                     help="word n-gram term size (1 = unigrams)")
-    sp.set_defaults(fn=cmd_corpus_similarity)
 
     sp = sub.add_parser(
         "graph-triangles",
@@ -2155,7 +1927,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--output", required=True, help="output parquet path")
     sp.add_argument("--src_col", default="src")
     sp.add_argument("--dst_col", default="dst")
-    sp.set_defaults(fn=cmd_graph_triangles)
 
     sp = sub.add_parser(
         "link-predict",
@@ -2171,7 +1942,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--max_degree", type=int, default=None,
         help="drop shared neighbors above this degree (hub cap)",
     )
-    sp.set_defaults(fn=cmd_link_predict)
 
     sp = sub.add_parser(
         "graph-distances",
@@ -2185,7 +1955,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--dst_col", default="dst")
     sp.add_argument("--id_col", default="id")
     sp.add_argument("--rounds", type=int, default=6)
-    sp.set_defaults(fn=cmd_graph_distances)
 
     sp = sub.add_parser(
         "graph-hits",
@@ -2197,7 +1966,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--src_col", default="src")
     sp.add_argument("--dst_col", default="dst")
     sp.add_argument("--iters", type=int, default=4)
-    sp.set_defaults(fn=cmd_graph_hits)
 
     sp = sub.add_parser(
         "corpus-stats",
@@ -2223,7 +1991,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="with --bpe: encode over the public byte-level "
                          "alphabet (GPT-2 byte-to-unicode mapping) for "
                          "merges tables trained that way")
-    sp.set_defaults(fn=cmd_corpus_stats)
 
     sp = sub.add_parser(
         "chunk-corpus",
@@ -2240,7 +2007,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="also assign packing bins (adds bin_id/bin_offset)")
     sp.add_argument("--budget", type=int, default=2048,
                     help="pack: tokens per bin")
-    sp.set_defaults(fn=cmd_chunk_corpus)
 
     sp = sub.add_parser(
         "materialize-mix",
@@ -2255,7 +2021,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--target_tokens", type=int, default=1_000_000)
     sp.add_argument("--alpha", type=float, default=0.7)
     sp.add_argument("--salt", default="")
-    sp.set_defaults(fn=cmd_materialize_mix)
 
     sp = sub.add_parser(
         "dedup-embeddings",
@@ -2272,7 +2037,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="IVF cluster count (default rows/500)")
     sp.add_argument("--keep_only", action="store_true",
                     help="write only surviving rows (original columns)")
-    sp.set_defaults(fn=cmd_dedup_embeddings)
 
     sp = sub.add_parser(
         "import-corpus",
@@ -2293,7 +2057,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--strip-html", default=None, metavar="COL",
                     help="strip HTML markup / decode entities in this "
                          "text column during import (crawl ingestion)")
-    sp.set_defaults(fn=cmd_import_corpus)
 
     sp = sub.add_parser(
         "export-corpus",
@@ -2305,7 +2068,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="column whose md5 decides the shard (stable re-exports)")
     sp.add_argument("--shards", type=int, default=8)
     sp.add_argument("--gzip", action="store_true")
-    sp.set_defaults(fn=cmd_export_corpus)
 
     sp = sub.add_parser(
         "prepare-corpus",
@@ -2315,7 +2077,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--spec", required=True, help="pipeline spec JSON path")
     sp.add_argument("--force", action="store_true",
                     help="re-run stages whose output already exists")
-    sp.set_defaults(fn=cmd_prepare_corpus)
 
     sp = sub.add_parser(
         "split-corpus",
@@ -2329,7 +2090,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--fractions", default="train=0.8,val=0.1,test=0.1",
                     help="name=frac[,name=frac...]; sums <= 1, remainder unassigned")
     sp.add_argument("--salt", default="", help="independent resample handle")
-    sp.set_defaults(fn=cmd_split_corpus)
 
     sp = sub.add_parser(
         "decontam-corpus",
@@ -2350,7 +2110,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="Bloom size in bits (0 = auto: ~10 bits/key, "
                          "next power of two)")
     sp.add_argument("--k", type=int, default=5, help="Bloom hash count")
-    sp.set_defaults(fn=cmd_decontam_corpus)
 
     sp = sub.add_parser(
         "score-corpus",
@@ -2367,7 +2126,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="language column for the dsir target subset")
     sp.add_argument("--target-lang", default="en",
                     help="dsir target domain: rows with lang-col == this")
-    sp.set_defaults(fn=cmd_score_corpus)
 
     sp = sub.add_parser(
         "build-ann-index",
@@ -2388,14 +2146,12 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--append", action="store_true",
                     help="assign a new batch against the stored quantizer "
                          "(no retrain) and append")
-    sp.set_defaults(fn=cmd_build_ann_index)
 
     sp = sub.add_parser(
         "ann-index-stats",
         help="cell-balance / consistency report for a persisted ANN index",
     )
     sp.add_argument("--index", required=True, help="index directory")
-    sp.set_defaults(fn=cmd_ann_index_stats)
 
     sp = sub.add_parser(
         "compact-ann-index",
@@ -2409,7 +2165,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="new cell count (default rows/500, min 4)")
     sp.add_argument("--force", action="store_true",
                     help="rebalance regardless of the skew measurement")
-    sp.set_defaults(fn=cmd_compact_ann_index)
 
     sp = sub.add_parser(
         "query-ann-index",
@@ -2434,7 +2189,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--mmr-lam", type=float, default=0.7,
                     help="MMR relevance weight λ (1.0 = pure "
                          "relevance, 0.0 = pure diversity)")
-    sp.set_defaults(fn=cmd_query_ann_index)
 
     sp = sub.add_parser(
         "search-corpus",
@@ -2453,7 +2207,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--output", default=None,
                     help="optional parquet path for the hit list; "
                          "hits always print to stdout")
-    sp.set_defaults(fn=cmd_search_corpus)
 
     sp = sub.add_parser(
         "detect-extremes",
@@ -2475,7 +2228,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--cusum_target", type=float, default=0.0)
     sp.add_argument("--cusum_slack", type=float, default=0.5)
     sp.add_argument("--cusum_alarm", type=float, default=5.0)
-    sp.set_defaults(fn=cmd_detect_extremes)
 
     sp = sub.add_parser(
         "profile-table",
@@ -2490,13 +2242,26 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--approx", action="store_true",
                     help="HLL distinct counts (no Expand; the "
                          "extreme-scale path)")
-    sp.set_defaults(fn=cmd_profile_table)
     return p
 
 
+# subcommands that run no Spark job of their own
+_NO_SESSION = ("archive-templates", "prepare-corpus")
+
+
 def main(argv=None) -> None:
+    """Parse ``argv``, skip a generator whose ``--out`` exists (F9),
+    and run subcommand ``x-y`` as ``cmd_x_y(spark, args)`` in the one
+    session built here (None for ``_NO_SESSION``)."""
     args = build_parser().parse_args(argv)
-    args.fn(args)
+    if getattr(args, "out", None) and _skip_existing(args.out):
+        return
+    spark = None
+    if args.cmd not in _NO_SESSION:
+        from curw_flo2d_data_manager_spark.session import get_spark
+
+        spark = get_spark(app_name=args.cmd)
+    globals()["cmd_" + args.cmd.replace("-", "_")](spark, args)
 
 
 if __name__ == "__main__":

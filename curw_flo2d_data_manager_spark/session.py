@@ -95,6 +95,9 @@ def get_spark(
         # set from the start, so the parquet schemas commit.table
         # remembers (keyed by this conf) stay valid all session
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # timestamps as INT64 micros, the type pyarrow writes: INT96
+        # keeps no min/max statistics, so files could not be pruned
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # local mode: driver heap IS the whole executor pool —
         # derived from host memory (1/4 of MemTotal clamped to
         # [8g, 24g]; see _default_driver_memory). The 128 GiB build

@@ -105,10 +105,10 @@ def upsert_files(
     can share a key with an incoming row. The files holding such rows
     go through ``merge_upsert`` with ``incoming`` and are written
     anew, together with it, in the table's schema
-    (``require_schema``); every other file is hard-linked in
-    unchanged. With no table at ``target`` the merge runs against
-    nothing, so ``incoming`` is written with duplicate keys
-    collapsed, as every later run does.
+    (``require_schema``), minus any zero-row file the write left;
+    every other file is hard-linked in unchanged. With no table at
+    ``target`` the merge runs against nothing, so ``incoming`` is
+    written with duplicate keys collapsed, as every later run does.
 
     Returns the rows of the new files that satisfy ``where``, read
     back from ``tmp``: a caller derives from them without running
@@ -127,10 +127,32 @@ def upsert_files(
         else spark.createDataFrame([], schema)
     )
     merge_upsert(prior, incoming, keys).select(*schema.names).write.parquet(tmp)
-    new = [os.path.join(tmp, n) for n in commit.data_files(tmp)]
-    if existing is not None:
+    carried = existing is not None and bool(set(commit.data_files(target)) - set(hits))
+    new = _drop_empty_files(tmp, keep_schema=not carried)
+    if carried:
         commit.carry_over(target, tmp, drop=hits)
-    return spark.read.schema(schema).parquet(*new).where(where)
+    if not new:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*(os.path.join(tmp, n) for n in new)).where(where)
+
+
+def _drop_empty_files(path: str, keep_schema: bool) -> list[str]:
+    """Remove the zero-row data files Spark wrote under ``path`` (the
+    first task writes one even when its input is empty), with their
+    ``.crc`` siblings, and return the names left. With
+    ``keep_schema``, an all-empty write keeps its files, so the table
+    still has one to read its schema from."""
+    import pyarrow.parquet as pq
+
+    names = commit.data_files(path)
+    empty = [n for n in names if pq.read_metadata(os.path.join(path, n)).num_rows == 0]
+    if keep_schema and len(empty) == len(names):
+        return names
+    for n in empty:
+        for f in (n, f".{n}.crc"):
+            if os.path.exists(os.path.join(path, f)):
+                os.remove(os.path.join(path, f))
+    return [n for n in names if n not in empty]
 
 
 def _upsert_sql(

@@ -330,6 +330,46 @@ def test_extract_keeps_older_rows_in_a_mixed_file(forecast_store):
     assert fs.inodes()["part-old.parquet"] == old
 
 
+def test_extract_rerun_of_same_fgt_adds_no_file(forecast_store):
+    """Re-running a stored cycle replaces its file: every row of the
+    merge's "kept" side is replaced, and that empty side must not leave
+    a zero-row part file that every later run would carry over."""
+    import pyarrow.parquet as pq
+
+    from curw_flo2d_data_manager_spark import commit
+
+    fs = forecast_store()
+    fs.history("part-old.parquet", ["2023-12-31 06:00:00"])
+    fs.extract("2024-01-01 06:00:00")
+    n_files, rows = len(commit.data_files(fs.fcst)), fs.rows()
+    fs.extract("2024-01-01 06:00:00")
+    files = commit.data_files(fs.fcst)
+    assert len(files) == n_files
+    assert all(pq.read_metadata(os.path.join(fs.fcst, n)).num_rows > 0 for n in files)
+    assert fs.rows() == rows
+
+
+def test_extract_writes_history_timestamp_types(forecast_store):
+    """New part files store ``time``/``fgt`` as the INT64 microsecond
+    UTC timestamps of the pyarrow-written history, so every file reads
+    back with one type and keeps min/max statistics for pruning."""
+    import pyarrow.parquet as pq
+
+    fs = forecast_store()
+    fs.history("part-old.parquet", ["2023-12-31 06:00:00"])
+    fs.extract("2024-01-01 06:00:00")
+    want = pq.read_schema(os.path.join(fs.fcst, "part-old.parquet"))
+    new = [n for n in fs.inodes() if n != "part-old.parquet"]
+    assert new
+    for name in new:
+        path = os.path.join(fs.fcst, name)
+        got = pq.read_schema(path)
+        for col in ("time", "fgt"):
+            assert got.field(col).type == want.field(col).type, (name, col)
+        stats = pq.read_metadata(path).row_group(0).column(got.names.index("fgt")).statistics
+        assert stats is not None and stats.has_min_max
+
+
 @pytest.mark.parametrize(
     "change, column",
     [

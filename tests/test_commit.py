@@ -84,6 +84,47 @@ def test_guard_sees_os_link():
     assert rename_calls(src) == [2, 3]
 
 
+def overwrite_mode_calls(source: str) -> list[int]:
+    """Lines that ask a Spark writer for its in-place overwrite, which
+    deletes the target before the job runs: ``.mode("overwrite")``, or
+    ``mode="overwrite"`` passed to any call."""
+    hits = []
+    for node in ast.walk(ast.parse(source)):
+        if not isinstance(node, ast.Call):
+            continue
+        values = [k.value for k in node.keywords if k.arg == "mode"]
+        if isinstance(node.func, ast.Attribute) and node.func.attr == "mode":
+            values += node.args
+        if any(isinstance(v, ast.Constant) and v.value == "overwrite" for v in values):
+            hits.append(node.lineno)
+    return sorted(hits)
+
+
+def test_cli_never_overwrites_in_place():
+    lines = overwrite_mode_calls((PACKAGE_DIR / "cli.py").read_text())
+    assert not lines, f"Spark in-place overwrite in cli.py (lines {lines}): use commit.replace"
+
+
+def test_guard_sees_overwrite_mode():
+    src = (
+        "df.write.mode('overwrite').parquet(p)\n"
+        "df.write.mode('append').parquet(p)\n"
+        "w.save(p, format='json', mode='overwrite')\n"
+        "x.mode(m)\n"
+        "s.replace('overwrite', 'y')\n"
+    )
+    assert overwrite_mode_calls(src) == [1, 3]
+
+
+def _file_bytes(root: str) -> dict:
+    """Every file under ``root`` by relative path, with its bytes."""
+    return {
+        os.path.relpath(os.path.join(d, n), root): open(os.path.join(d, n), "rb").read()
+        for d, _, names in os.walk(root)
+        for n in names
+    }
+
+
 # -------------------------------------------------------- commit sites
 def test_gen_raincell_crash_mid_concat_leaves_no_file(spark, tmp_path, monkeypatch):
     """A crash while the .DAT is being concatenated must leave nothing
@@ -338,6 +379,94 @@ def test_extract_crash_in_run_dim_write_keeps_all_three_tables(forecast_store, m
 
     fs.extract("2024-01-02 06:00:00")
     assert {t: fs.rows(t) for t in tables} == {t: clean.rows(t) for t in tables}
+
+
+def test_dedup_corpus_crash_mid_write_keeps_previous_output(spark, tmp_path, monkeypatch):
+    """A write that dies after some of its files landed (no ``_SUCCESS``
+    marker yet) must leave the previous ``--output`` byte-identical,
+    with no temp copy behind (Spark's own overwrite deletes the target
+    first), and the re-run must give the output of an uninterrupted
+    run."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    def corpus(name, ids, prefix):
+        path = str(tmp_path / name)
+        spark.createDataFrame(
+            [(i, f"{prefix} {i % 30}") for i in ids], "doc_id long, text string"
+        ).write.parquet(path)
+        return path
+
+    old_in, new_in = corpus("old.parquet", range(40), "old"), corpus("new.parquet", range(70), "new")
+    out, clean = str(tmp_path / "dedup"), str(tmp_path / "clean")
+
+    def dedup(src, dst):
+        main(["dedup-corpus", "--input", src, "--output", dst, "--method", "exact", "--keep_only"])
+
+    dedup(old_in, out)
+    dedup(new_in, clean)
+    before = _file_bytes(out)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        real_parquet(self, path, *a, **k)
+        if os.path.basename(path).startswith("dedup"):
+            os.remove(os.path.join(path, "_SUCCESS"))
+            raise OSError("injected crash mid-write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError, match="injected crash"):
+        dedup(new_in, out)
+    monkeypatch.undo()
+
+    assert _file_bytes(out) == before
+    assert not [n for n in os.listdir(tmp_path) if n.endswith(commit.SWAP)]
+    dedup(new_in, out)
+    assert _multiset(spark.read.parquet(out)) == _multiset(spark.read.parquet(clean))
+    assert spark.read.parquet(out).count() == 30
+
+
+def test_split_corpus_failure_in_second_split_keeps_earlier_splits(spark, tmp_path, monkeypatch):
+    """``split-corpus`` commits its splits together: a failure while the
+    second split is written leaves the first (and every other) split as
+    the previous run wrote it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    def corpus(name, ids):
+        path = str(tmp_path / name)
+        spark.createDataFrame([(i, f"t{i}") for i in ids], "doc_id long, text string").write.parquet(path)
+        return path
+
+    old_in, new_in = corpus("old.parquet", range(50)), corpus("new.parquet", range(50, 130))
+    out = str(tmp_path / "splits")
+
+    def split(src):
+        main([
+            "split-corpus", "--input", src, "--output", out,
+            "--fractions", "train=0.5,val=0.3,test=0.2",
+        ])
+
+    split(old_in)
+    before = _file_bytes(out)
+    assert {p.split(os.sep)[0] for p in before} == {"train", "val", "test"}
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        real_parquet(self, path, *a, **k)
+        if os.path.basename(path).startswith("val"):
+            raise OSError("injected failure in the second split's write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError, match="injected failure"):
+        split(new_in)
+    monkeypatch.undo()
+
+    assert _file_bytes(out) == before
+    assert sorted(os.listdir(out)) == ["test", "train", "val"]
+    split(new_in)
+    got = sum(spark.read.parquet(os.path.join(out, n)).count() for n in ("train", "val", "test"))
+    assert got == 80
 
 
 def test_merge_run_manifest_crash_keeps_previous(tmp_path, monkeypatch):

@@ -28,7 +28,6 @@ python tools/bench_ann_drift.py [n_base] [batch] [n_queries]
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import shutil
@@ -40,10 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from curw_flo2d_data_manager_spark.cli import (
-    cmd_build_ann_index,
-    cmd_compact_ann_index,
-)
+from curw_flo2d_data_manager_spark.cli import main as cli_main
 from curw_flo2d_data_manager_spark.operators.similarity import (
     cosine_topk,
     ivf_query,
@@ -181,13 +177,7 @@ def main() -> None:
         base_path = os.path.join(work, "base")
         _vectors(spark, 0, n_base).write.parquet(base_path)
         t0 = time.monotonic()
-        cmd_build_ann_index(
-            argparse.Namespace(
-                input=base_path, output=idx, id_col="vec_id",
-                vec_col="embedding", clusters=None, pq=False,
-                pq_m=8, pq_ksub=16, append=False,
-            )
-        )
+        cli_main(["build-ann-index", "--input", base_path, "--output", idx])
         build_s = round(time.monotonic() - t0, 2)
 
         # 3 skewed batches, appended against the STORED quantizer
@@ -196,13 +186,7 @@ def main() -> None:
             lo = n_base + b * batch
             bp = os.path.join(work, f"batch{b}")
             _vectors(spark, lo, lo + batch, coarse_cells=2).write.parquet(bp)
-            cmd_build_ann_index(
-                argparse.Namespace(
-                    input=bp, output=idx, id_col="vec_id",
-                    vec_col="embedding", clusters=None, pq=False,
-                    pq_m=8, pq_ksub=16, append=True,
-                )
-            )
+            cli_main(["build-ann-index", "--input", bp, "--output", idx, "--append"])
         append_s = round(time.monotonic() - t0, 2)
 
         # queries from the drifted distribution (held-out ids), exact
@@ -226,11 +210,9 @@ def main() -> None:
         pre = _measure(spark, idx, queries, exact_pairs, len(exact_pairs))
 
         t0 = time.monotonic()
-        cmd_compact_ann_index(
-            argparse.Namespace(
-                index=idx, skew_threshold=2.0, force=True, clusters=None,
-            )
-        )
+        cli_main([
+            "compact-ann-index", "--index", idx, "--skew-threshold", "2.0", "--force",
+        ])
         compact_s = round(time.monotonic() - t0, 2)
 
         post = _measure(spark, idx, queries, exact_pairs, len(exact_pairs))

@@ -9,7 +9,9 @@ table or one partition) takes two renames, ``target`` →
 ``<target>.tmp-old`` and ``.tmp-swap`` → ``target``: POSIX has no
 atomic directory exchange, so a crash between them leaves the
 committed copy at ``.tmp-old``, which ``recover`` renames back. Every
-reader of a swapped directory recovers it first. ``replace_all``
+reader of a swapped directory recovers it first, and a reader of a
+table whose partitions are swapped one by one (``recover_partitions``)
+recovers each of them. ``replace_all``
 writes every temp copy of several targets before the first swap.
 ``carry_over`` hard-links a flat table's unchanged data files into
 its temp copy, so a commit that changes a few files rewrites only
@@ -23,7 +25,9 @@ cached. ``replace_all`` forgets every schema at or under a target it
 swaps.
 
 Single writer per target, and no ``recover`` during a commit of that
-target: the CLI's cron-sequenced commands touch a path one at a time.
+target: the CLI's cron-sequenced commands touch a path one at a time,
+and a stream's micro-batches run one after another. Paths are local:
+the swaps are ``os`` renames.
 """
 
 from __future__ import annotations
@@ -68,6 +72,19 @@ def recover(target: str) -> None:
         os.rename(old, target)
     _remove(old)
     _remove(target + SWAP)
+
+
+def recover_partitions(table: str) -> None:
+    """``recover`` every child of the directory ``table`` that has a
+    stranded ``.tmp-old`` or ``.tmp-swap`` copy: partition discovery
+    would read ``date=X.tmp-old`` or ``batch=3.tmp-swap`` as one more
+    partition value."""
+    if not os.path.isdir(table):
+        return
+    for name in os.listdir(table):
+        for suffix in (SWAP, OLD):
+            if name.endswith(suffix):
+                recover(os.path.join(table, name.removesuffix(suffix)))
 
 
 def replace_all(pairs) -> None:
@@ -131,11 +148,12 @@ def replace(target: str, write) -> str:
 
 
 def read_parquet(spark, target: str):
-    """The parquet table last committed at ``target`` (recovered first),
-    or None when nothing was ever committed there. Every other error
-    propagates: taking a failed read for a first run would have the
-    next ``replace`` discard the table."""
+    """The parquet table last committed at ``target`` (recovered first,
+    with its partitions), or None when nothing was ever committed
+    there. Every other error propagates: taking a failed read for a
+    first run would have the next ``replace`` discard the table."""
     recover(target)
+    recover_partitions(target)
     if not os.path.exists(target):
         return None
     return table(spark, target)

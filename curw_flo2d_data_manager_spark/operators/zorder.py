@@ -71,7 +71,6 @@ def write_zordered(
     cols: list[str],
     bits: int = 16,
     n_files: int | None = None,
-    mode: str = "overwrite",
 ) -> dict[str, tuple[float, float]]:
     """Write ``df`` as parquet laid out along the Z-curve of ``cols``
     (numeric or timestamp — anything castable to double).
@@ -101,7 +100,7 @@ def write_zordered(
         .repartitionByRange(n, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
     return frame

@@ -12,6 +12,30 @@ from curw_flo2d_data_manager_spark.operators.textstats import unigram_logprob
 from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 
+def _replay_waves(prefix: str, waves: list[DataFrame], start) -> str:
+    """Feed ``waves`` to a file-arrival stream one at a time: each wave
+    lands as one parquet file in a fresh watch dir, then
+    ``start(watch_glob, out, checkpoint)`` drains it (availableNow)
+    against one checkpoint. Returns ``out`` (the caller's lazy result
+    reads it); the watch and checkpoint dirs are removed."""
+    import shutil
+    import tempfile
+
+    watch = tempfile.mkdtemp(prefix=f"{prefix}_src_")
+    ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
+    out = tempfile.mkdtemp(prefix=f"{prefix}_out_")
+    try:
+        for i, wave in enumerate(waves, 1):
+            wave.coalesce(1).write.parquet(f"{watch}/wave{i}")
+            q = start(f"{watch}/*", out, ckpt)
+            q.awaitTermination(300)
+            q.stop()
+    finally:
+        shutil.rmtree(watch, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return out
+
+
 def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus dedup over file arrival: wave 1 is the
     documents table, wave 2 re-sends every 3rd document under a new id
@@ -19,8 +43,6 @@ def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger must drop every re-sent duplicate across waves and admit
     the new docs; the oracle is the batch first-occurrence-per-
     normalized-text rule over both waves."""
-    import tempfile
-
     from curw_flo2d_data_manager_spark.streaming.ingest import corpus_dedup_stream
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -34,24 +56,13 @@ def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    watch = tempfile.mkdtemp(prefix="stream_corpus_src_")
-    out = tempfile.mkdtemp(prefix="stream_corpus_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_corpus_ckpt_")
-    docs.coalesce(1).write.parquet(f"{watch}/wave1")
-
-    q1 = corpus_dedup_stream(
-        spark, f"{watch}/*", out, "doc_id long, text string",
-        checkpoint=ckpt, available_now=True,
+    out = _replay_waves(
+        "stream_corpus", [docs, wave2],
+        lambda src, dst, ckpt: corpus_dedup_stream(
+            spark, src, dst, "doc_id long, text string",
+            checkpoint=ckpt, available_now=True,
+        ),
     )
-    q1.awaitTermination(300)
-    q1.stop()
-    wave2.coalesce(1).write.parquet(f"{watch}/wave2")
-    q2 = corpus_dedup_stream(
-        spark, f"{watch}/*", out, "doc_id long, text string",
-        checkpoint=ckpt, available_now=True,
-    )
-    q2.awaitTermination(300)
-    q2.stop()
     return (
         spark.read.parquet(f"{out}/docs")
         .select("doc_id", F.sha2(F.col("text"), 256).alias("text_sha"))
@@ -86,30 +97,20 @@ def stream_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead-letter sinks must reproduce the BATCH gate decision
     (n_words >= 5 AND punct_ratio <= 0.2) for every document — the
     oracle recomputes both signals and the routing directly."""
-    import tempfile
-
     from curw_flo2d_data_manager_spark.streaming.ingest import (
         corpus_quality_stream,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    watch = tempfile.mkdtemp(prefix="stream_quality_src_")
-    out = tempfile.mkdtemp(prefix="stream_quality_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_quality_ckpt_")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{watch}/wave1"
-    )
-    for _ in range(2):  # second pass picks up wave2
-        q = corpus_quality_stream(
-            spark, f"{watch}/*", out, "doc_id long, text string",
+    out = _replay_waves(
+        "stream_quality",
+        [docs.filter(F.col("doc_id") % 2 == k) for k in (0, 1)],
+        lambda src, dst, ckpt: corpus_quality_stream(
+            spark, src, dst, "doc_id long, text string",
             min_words=5, max_punct_ratio=0.2,
             checkpoint=ckpt, available_now=True,
-        )
-        q.awaitTermination(300)
-        q.stop()
-        docs.filter(F.col("doc_id") % 2 == 1).repartition(1).write.mode(
-            "ignore"
-        ).parquet(f"{watch}/wave2")
+        ),
+    )
     accepted = spark.read.parquet(f"{out}/accepted").select(
         "doc_id", F.lit(True).alias("accepted")
     )
@@ -157,8 +158,6 @@ def stream_corpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus genuinely new docs. At threshold=1.0 'near-dup' means
     identical shingle set exactly, so DuckDB reproduces the survivor
     set as first-occurrence-per-shingle-set-key."""
-    import tempfile
-
     from curw_flo2d_data_manager_spark.streaming.ingest import (
         corpus_neardup_stream,
     )
@@ -175,18 +174,13 @@ def stream_corpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    watch = tempfile.mkdtemp(prefix="stream_neardup_src_")
-    out = tempfile.mkdtemp(prefix="stream_neardup_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_neardup_ckpt_")
-    docs.coalesce(1).write.parquet(f"{watch}/wave1")
-    for _ in range(2):
-        q = corpus_neardup_stream(
-            spark, f"{watch}/*", out, "doc_id long, text string",
+    out = _replay_waves(
+        "stream_neardup", [docs, wave2],
+        lambda src, dst, ckpt: corpus_neardup_stream(
+            spark, src, dst, "doc_id long, text string",
             threshold=1.0, checkpoint=ckpt, available_now=True,
-        )
-        q.awaitTermination(300)
-        q.stop()
-        wave2.repartition(1).write.mode("ignore").parquet(f"{watch}/wave2")
+        ),
+    )
     return (
         spark.read.parquet(f"{out}/docs")
         .select("doc_id", F.sha2(F.col("text"), 256).alias("text_sha"))
@@ -745,32 +739,22 @@ def stream_corpus_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepted and blocked sinks must reproduce the batch anti-join
     decision for every document — the oracle recomputes md5-level
     membership directly."""
-    import tempfile
-
     from curw_flo2d_data_manager_spark.streaming.ingest import (
         corpus_decontam_stream,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     blocklist = docs.filter(F.col("source") == "src0").select("text")
-    watch = tempfile.mkdtemp(prefix="stream_decontam_src_")
-    out = tempfile.mkdtemp(prefix="stream_decontam_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_decontam_ckpt_")
     feed = docs.select("doc_id", "text")
-    feed.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{watch}/wave1"
-    )
-    for _ in range(2):  # second pass picks up wave2
-        q = corpus_decontam_stream(
-            spark, f"{watch}/*", out, "doc_id long, text string",
+    out = _replay_waves(
+        "stream_decontam",
+        [feed.filter(F.col("doc_id") % 2 == k) for k in (0, 1)],
+        lambda src, dst, ckpt: corpus_decontam_stream(
+            spark, src, dst, "doc_id long, text string",
             blocklist, m_bits=4096, k=3,
             checkpoint=ckpt, available_now=True,
-        )
-        q.awaitTermination(300)
-        q.stop()
-        feed.filter(F.col("doc_id") % 2 == 1).repartition(1).write.mode(
-            "ignore"
-        ).parquet(f"{watch}/wave2")
+        ),
+    )
     accepted = spark.read.parquet(f"{out}/accepted").select(
         "doc_id", F.lit(True).alias("accepted")
     )

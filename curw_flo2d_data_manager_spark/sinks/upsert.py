@@ -100,13 +100,14 @@ def upsert_files(
     """Write into ``tmp``, the temp copy of the flat parquet table
     ``target``, that table with ``incoming`` merged in on ``keys``.
 
-    ``where`` must hold for every incoming row and pin one key column
-    (the extract's ``fgt``), so only a stored row that satisfies it
-    can share a key with an incoming row. The files holding such rows
-    go through ``merge_upsert`` with ``incoming`` and are written
-    anew, together with it, in the table's schema
-    (``require_schema``), minus any zero-row file the write left;
-    every other file is hard-linked in unchanged. With no table at
+    ``where`` must hold for every stored row that can share a key with
+    an incoming row: the extract's ``fgt`` equality (``fgt`` is part of
+    its key), or ``F.lit(True)`` to merge the whole table (the
+    streaming upsert). The files holding rows that satisfy it go
+    through ``merge_upsert`` with ``incoming`` and are written anew,
+    together with it, in the table's schema (``require_schema``),
+    minus any zero-row file the write left; every other file is
+    hard-linked in unchanged. With no table at
     ``target`` the merge runs against nothing, so ``incoming`` is
     written with duplicate keys collapsed, as every later run does.
 

@@ -141,8 +141,8 @@ class TimeseriesStore:
 
     # -- physical layout (SURVEY §4.3) ----------------------------------
     @staticmethod
-    def write_data(df: DataFrame, path: str, mode: str = "append") -> None:
-        """Write fact rows with the store's canonical layout:
+    def write_data(df: DataFrame, path: str) -> None:
+        """Append fact rows with the store's canonical layout:
         ``PARTITIONED BY (date)``, sorted ``(id, time)`` within files.
 
         Partition pruning turns S1's time-range predicate into a
@@ -155,7 +155,7 @@ class TimeseriesStore:
             df.withColumn("date", F.to_date("time"))
             .repartition("date")
             .sortWithinPartitions("date", "id", "time")
-            .write.mode(mode)
+            .write.mode("append")
             .partitionBy("date")
             .parquet(path)
         )
@@ -166,7 +166,6 @@ class TimeseriesStore:
         table_name: str,
         buckets: int = 64,
         path: str | None = None,
-        mode: str = "overwrite",
     ) -> None:
         """Bucketed layout for co-located joins: hash-bucket fact rows
         by series ``id``, sorted ``(id, time)`` inside each bucket.
@@ -179,7 +178,7 @@ class TimeseriesStore:
         store data externally (the table is then just metadata).
         """
         writer = (
-            df.write.mode(mode)
+            df.write.mode("overwrite")
             .bucketBy(buckets, "id")
             .sortBy("id", "time")
         )
@@ -219,7 +218,7 @@ class TimeseriesStore:
         """
         import math
 
-        _recover_partitions(path)
+        commit.recover_partitions(path)
         part_dirs = sorted(
             d for d in os.listdir(path)
             if d.startswith(partition_prefix)
@@ -247,21 +246,9 @@ class TimeseriesStore:
     @classmethod
     def open(cls, spark, root: str) -> "TimeseriesStore":
         """Open a store written under ``root`` (``run/`` + ``data/``)."""
-        _recover_partitions(f"{root}/data")
+        commit.recover_partitions(f"{root}/data")
         return cls(
             run=commit.table(spark, f"{root}/run"),
             data=commit.table(spark, f"{root}/data"),
         )
 
-
-def _recover_partitions(path: str) -> None:
-    """Undo interrupted partition swaps under ``path``: partition
-    discovery would read a leftover ``date=X.tmp-old`` or
-    ``date=X.tmp-swap`` directory as one more partition value."""
-
-    if not os.path.isdir(path):
-        return
-    for d in os.listdir(path):
-        for suffix in (commit.SWAP, commit.OLD):
-            if d.endswith(suffix):
-                commit.recover(os.path.join(path, d.removesuffix(suffix)))

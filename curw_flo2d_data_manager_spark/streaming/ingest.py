@@ -16,6 +16,11 @@ Scale notes:
 * the upsert sink routes each micro-batch through the same
   deterministic merge used in batch (idempotent on (key, fgt) replays,
   which Structured Streaming requires for exactly-once file sinks).
+
+Every micro-batch output is committed through ``commit``: a batch's
+outputs are written to temp copies and swapped in together, so a
+failed or retried batch leaves the previous files, and the ledger
+reads recover any swap a crash interrupted.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from curw_flo2d_data_manager_spark import commit
 from curw_flo2d_data_manager_spark.functions.timeutil import right_closed_bucket
 
 SERIES_SCHEMA = StructType(
@@ -45,21 +51,29 @@ SERIES_SCHEMA = StructType(
 )
 
 
-def _maybe_missing_dir(path: str) -> bool:
-    """True when ``path`` is a LOCAL directory that does not exist.
+def _require_local(path: str, param: str) -> None:
+    """Fail on the driver, when the stream is wired, unless ``path`` is
+    local: ``commit`` swaps directories with ``os`` renames."""
+    if "://" in path:
+        raise ValueError(f"{param} must be a local path, not {path!r}")
 
-    The incremental-ledger streams read their own prior output on
-    every micro-batch; on the FIRST batch the dir is absent and the
-    ``AnalysisException`` fallback handles it — but Spark's analyzer
-    logs a full FileNotFoundException stack trace (FileStreamSink
-    metadata probe) before throwing, polluting every sweep log
-    (round-11 verdict).  Checking existence up front skips the read
-    attempt for local paths; remote URIs (``scheme://``) keep the
-    try/except path, since probing them needs the Hadoop FS anyway.
+
+def _start(stream: DataFrame, process, checkpoint: str | None, available_now: bool):
+    """Start ``stream`` with ``process(batch_df, batch_id)`` as its
+    ``foreachBatch`` body; returns the started ``StreamingQuery``.
+
+    ``update`` mode: for the sources here (no aggregation) it emits
+    exactly what ``append`` does, and an aggregating input to
+    :func:`foreach_batch_upsert` hands each batch its updated keys.
     """
-    import os
-
-    return "://" not in path and not os.path.isdir(path)
+    writer = stream.writeStream.foreachBatch(process).outputMode("update")
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        # drain everything currently on disk, then terminate (one-shot
+        # catch-up runs and tests); default is a long-lived stream
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_series_stream(
@@ -171,36 +185,29 @@ def foreach_batch_upsert(
     checkpoint: str,
     available_now: bool = False,
 ):
-    """Continuously merge-upsert micro-batches into a parquet relation
-    (streaming K7). Deterministic last-writer-wins per key within each
-    batch; replayed batches re-merge idempotently.
+    """Continuously merge-upsert micro-batches into the flat parquet
+    table ``target_path`` (streaming K7). Each batch goes through
+    ``sinks.upsert.upsert_files`` and one ``commit.replace``:
+    deterministic last-writer-wins per key, replayed batches re-merge
+    idempotently, and a batch whose columns or types differ from the
+    table fails with a ``ValueError`` naming the column, leaving the
+    table as it was.
 
     Returns the started ``StreamingQuery``.
     """
-    from curw_flo2d_data_manager_spark.sinks.upsert import merge_upsert
+    from curw_flo2d_data_manager_spark.sinks.upsert import upsert_files
+
+    _require_local(target_path, "target_path")
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            existing = spark.read.parquet(target_path)
-            merged = merge_upsert(existing, batch_df, keys)
-        except Exception:
-            merged = batch_df.dropDuplicates(keys)
-        # write-new-then-swap is the scale pattern; local form rewrites
-        merged.cache().count()
-        merged.write.mode("overwrite").parquet(target_path)
-        merged.unpersist()
+        commit.replace(
+            target_path,
+            lambda tmp: upsert_files(
+                batch_df.sparkSession, target_path, tmp, batch_df, keys, F.lit(True)
+            ),
+        )
 
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        # drain everything currently on disk, then terminate (one-shot
-        # catch-up runs and tests); default is a long-lived stream
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _merge, checkpoint, available_now)
 
 
 def streaming_session_sum(
@@ -309,12 +316,7 @@ def hychan_extract_stream(
         parsed = _parse_hychan_lines(tagged, base_time, variable, keep_incomplete)
         on_batch(parsed, batch_id)
 
-    writer = lines.writeStream.foreachBatch(_process)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(lines, _process, checkpoint, available_now)
 
 
 def timdep_extract_stream(
@@ -350,12 +352,7 @@ def timdep_extract_stream(
         parsed = _parse_timdep_lines(tagged, base_time, cells, drop_last_block)
         on_batch(parsed, batch_id)
 
-    writer = lines.writeStream.foreachBatch(_process)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(lines, _process, checkpoint, available_now)
 
 
 def corpus_dedup_stream(
@@ -378,13 +375,15 @@ def corpus_dedup_stream(
     2. against history: left-anti join the batch's digests against the
        digest ledger accumulated from all PREVIOUS batches.
 
-    Survivors are appended under ``out_dir/docs/batch=<id>/`` and
-    their digests under ``out_dir/digests/batch=<id>/`` — the
-    deterministic per-batch subdirectory is OVERWRITTEN on replay, so
+    Survivors land under ``out_dir/docs/batch=<id>/`` and their
+    digests under ``out_dir/digests/batch=<id>/``, both committed with
+    one ``commit.replace_all``: a failed batch leaves both ledgers as
+    they were, and a replay replaces the batch's directories whole, so
     a crashed-and-retried micro-batch converges to the same files
     (idempotent; with checkpointed file discovery this is end-to-end
     exactly-once). The ledger read excludes the current batch id for
-    the same reason: a retry must not see its own partial output.
+    the same reason: a replay of a batch whose commit landed must not
+    see its own output.
 
     Scale shape: the anti-join shuffles 32-byte digests, never text;
     the ledger is digest-only parquet, so history grows by hash count,
@@ -402,12 +401,12 @@ def corpus_dedup_stream(
 
     from curw_flo2d_data_manager_spark.operators.textstats import normalize_text
 
+    _require_local(out_dir, "out_dir")
     stream = spark.readStream.schema(schema).parquet(watch_dir)
     docs_root = os.path.join(out_dir, "docs")
     ledger_root = os.path.join(out_dir, "digests")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_spark = batch_df.sparkSession
         digested = batch_df.withColumn(
             "_digest", F.sha2(normalize_text(text_col), 256)
         )
@@ -419,38 +418,27 @@ def corpus_dedup_stream(
             (digested["_digest"] == w_first["_digest"])
             & (digested[id_col] == w_first["_keep_id"]),
         ).select(digested["*"])
-        from pyspark.errors import AnalysisException
+        seen = commit.read_parquet(batch_df.sparkSession, ledger_root)
+        if seen is not None:  # None: first batch, no ledger yet
+            seen = seen.filter(F.col("batch") != batch_id).select("digest")
+            local = local.join(seen, local["_digest"] == seen["digest"], "left_anti")
+        # both outputs write from one evaluation: the ledger probe runs
+        # once, and the docs and their digests are the same survivors
+        fresh = local.localCheckpoint(eager=True)
+        commit.replace_all([
+            (
+                os.path.join(docs_root, f"batch={batch_id}"),
+                fresh.drop("_digest").write.parquet,
+            ),
+            (
+                os.path.join(ledger_root, f"batch={batch_id}"),
+                fresh.select(
+                    F.col("_digest").alias("digest"), F.lit(batch_id).alias("batch")
+                ).write.parquet,
+            ),
+        ])
 
-        if _maybe_missing_dir(ledger_root):  # first batch, local path
-            fresh = local
-        else:
-            try:
-                seen = (
-                    batch_spark.read.parquet(ledger_root)
-                    .filter(F.col("batch") != batch_id)
-                    .select("digest")
-                )
-                fresh = local.join(
-                    seen, local["_digest"] == seen["digest"], "left_anti"
-                )
-            except AnalysisException:  # first batch: no ledger dir yet
-                fresh = local
-        fresh = fresh.localCheckpoint(eager=True)  # read-before-overwrite safety
-        fresh.drop("_digest").write.mode("overwrite").parquet(
-            os.path.join(docs_root, f"batch={batch_id}")
-        )
-        fresh.select(
-            F.col("_digest").alias("digest"), F.lit(batch_id).alias("batch")
-        ).write.mode("overwrite").parquet(
-            os.path.join(ledger_root, f"batch={batch_id}")
-        )
-
-    writer = stream.writeStream.foreachBatch(_process)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint, available_now)
 
 
 def corpus_quality_stream(
@@ -471,11 +459,11 @@ def corpus_quality_stream(
     scan) and routed to ``out_dir/accepted/batch=<id>/`` or the
     dead-letter ``out_dir/rejected/batch=<id>/``; rejected rows carry
     their measurements so the reject stream is auditable, accepted
-    rows come through unchanged. The deterministic per-batch directory
-    is OVERWRITTEN on replay, so with checkpointed file discovery a
-    crashed-and-retried micro-batch converges to the same files —
-    end-to-end exactly-once, same idempotence argument as
-    ``corpus_dedup_stream``.
+    rows come through unchanged. A batch commits both directories with
+    one ``commit.replace_all`` and a replay replaces them whole, so
+    with checkpointed file discovery a crashed-and-retried micro-batch
+    converges to the same files — end-to-end exactly-once, same
+    idempotence argument as ``corpus_dedup_stream``.
 
     Scale shape: stateless per batch (no ledger, no watermark state);
     one scan per batch, the accepted/rejected split reuses the scored
@@ -488,6 +476,7 @@ def corpus_quality_stream(
         whitespace_token_count,
     )
 
+    _require_local(out_dir, "out_dir")
     stream = spark.readStream.schema(schema).parquet(watch_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -504,21 +493,20 @@ def corpus_quality_stream(
             .persist()
         )
         try:
-            scored.filter("_ok").drop("n_words", "punct_ratio", "_ok").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, "accepted", f"batch={batch_id}"))
-            scored.filter("NOT _ok").drop("_ok").write.mode("overwrite").parquet(
-                os.path.join(out_dir, "rejected", f"batch={batch_id}")
-            )
+            commit.replace_all([
+                (
+                    os.path.join(out_dir, "accepted", f"batch={batch_id}"),
+                    scored.filter("_ok").drop("n_words", "punct_ratio", "_ok").write.parquet,
+                ),
+                (
+                    os.path.join(out_dir, "rejected", f"batch={batch_id}"),
+                    scored.filter("NOT _ok").drop("_ok").write.parquet,
+                ),
+            ])
         finally:
             scored.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_process)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint, available_now)
 
 
 def corpus_neardup_stream(
@@ -556,10 +544,11 @@ def corpus_neardup_stream(
        EXACTLY (deterministic), while fuzzier thresholds trade the
        estimator's variance for storage.
 
-    Survivors append under ``out_dir/docs/batch=<id>/``; their band
+    Survivors land under ``out_dir/docs/batch=<id>/``, their band
     rows under ``out_dir/bands/batch=<id>/`` and signatures under
-    ``out_dir/sigs/batch=<id>/`` — deterministic per-batch overwrite =
-    replay-idempotent, same exactly-once argument as the exact stream.
+    ``out_dir/sigs/batch=<id>/``, all three committed with one
+    ``commit.replace_all`` — replay-idempotent, same exactly-once
+    argument as the exact stream.
     Scale shape: band join shuffles (band_idx, band_hash) keys only;
     the signature join moves num_hashes longs per CANDIDATE, not per
     document. ``max_bucket_size`` applies minhash_lsh_pairs' hot-bucket
@@ -575,8 +564,6 @@ def corpus_neardup_stream(
     """
     import os
 
-    from pyspark.errors import AnalysisException
-
     from curw_flo2d_data_manager_spark.operators.caching import (
         cache_mark,
         release_caches_since,
@@ -587,8 +574,11 @@ def corpus_neardup_stream(
         with_shingle_hashes,
     )
 
+    _require_local(out_dir, "out_dir")
     rows_per_band = num_hashes // bands
     stream = spark.readStream.schema(schema).parquet(watch_dir)
+    bands_root = os.path.join(out_dir, "bands")
+    sigs_root = os.path.join(out_dir, "sigs")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         bspark = batch_df.sparkSession
@@ -631,15 +621,13 @@ def corpus_neardup_stream(
             jaccard_threshold=threshold,
         ).select(F.col("id_b").alias("_drop")).distinct()
 
-        # against the signature ledger (existence probe first: the
-        # first batch has no ledger and the failed read would log a
-        # full FileNotFoundException trace before the except fires)
-        try:
-            if _maybe_missing_dir(os.path.join(out_dir, "bands")):
-                raise AnalysisException("first batch: no ledger yet")
-            hist_bands = bspark.read.parquet(
-                os.path.join(out_dir, "bands")
-            ).filter(F.col("batch") != batch_id)
+        # against the signature ledger (None: first batch, no ledger yet)
+        hist_bands = commit.read_parquet(bspark, bands_root)
+        hist_sigs = commit.read_parquet(bspark, sigs_root)
+        if hist_bands is None or hist_sigs is None:
+            drops = within
+        else:
+            hist_bands = hist_bands.filter(F.col("batch") != batch_id)
             if max_bucket_size is not None:
                 # Exclude over-cap buckets via aggregate + broadcast
                 # anti-join rather than a window count: the window
@@ -661,9 +649,7 @@ def corpus_neardup_stream(
                     ["band_idx", "band_hash"],
                     "left_anti",
                 )
-            hist_sigs = bspark.read.parquet(
-                os.path.join(out_dir, "sigs")
-            ).filter(F.col("batch") != batch_id)
+            hist_sigs = hist_sigs.filter(F.col("batch") != batch_id)
             cand = (
                 banded.join(hist_bands, ["band_idx", "band_hash"])
                 .select("_bid", "_sig", F.col("hist_id"))
@@ -688,40 +674,40 @@ def corpus_neardup_stream(
                 .distinct()
             )
             drops = within.unionByName(dominated).distinct()
-        except AnalysisException:  # first batch: no ledger yet
-            drops = within
 
+        # the three outputs write from one evaluation: the ledger probe
+        # runs once, and docs, bands and sigs hold the same survivors
         survivors = sig.join(
             drops, sig[id_col] == drops["_drop"], "left_anti"
-        ).localCheckpoint(eager=True)  # read-before-overwrite safety
-        survivors.drop("_sig").write.mode("overwrite").parquet(
-            os.path.join(out_dir, "docs", f"batch={batch_id}")
-        )
+        ).localCheckpoint(eager=True)
         surv_banded = banded.join(
             survivors.select(F.col(id_col).alias("_keep")),
             banded["_bid"] == F.col("_keep"),
         )
-        surv_banded.select(
-            "band_idx", "band_hash", F.col("_bid").alias("hist_id"),
-            F.lit(batch_id).alias("batch"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "bands", f"batch={batch_id}")
-        )
-        survivors.select(
-            F.col(id_col).alias("hist_id"), F.col("_sig").alias("hist_sig"),
-            F.lit(batch_id).alias("batch"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "sigs", f"batch={batch_id}")
-        )
+        commit.replace_all([
+            (
+                os.path.join(out_dir, "docs", f"batch={batch_id}"),
+                survivors.drop("_sig").write.parquet,
+            ),
+            (
+                os.path.join(bands_root, f"batch={batch_id}"),
+                surv_banded.select(
+                    "band_idx", "band_hash", F.col("_bid").alias("hist_id"),
+                    F.lit(batch_id).alias("batch"),
+                ).write.parquet,
+            ),
+            (
+                os.path.join(sigs_root, f"batch={batch_id}"),
+                survivors.select(
+                    F.col(id_col).alias("hist_id"), F.col("_sig").alias("hist_sig"),
+                    F.lit(batch_id).alias("batch"),
+                ).write.parquet,
+            ),
+        ])
         release_caches_since(cache_base)
         sig.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_process)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint, available_now)
 
 
 def corpus_decontam_stream(
@@ -752,10 +738,11 @@ def corpus_decontam_stream(
     blocklist for the exact verify. ``key_col=None`` fingerprints rows
     as ``md5(text_col)`` on both sides.
 
-    Deterministic per-batch directories are OVERWRITTEN on replay, so
-    with checkpointed file discovery a crashed-and-retried micro-batch
-    converges to the same files — exactly-once, same argument as
-    ``corpus_quality_stream``. Returns the started ``StreamingQuery``.
+    A batch commits both directories with one ``commit.replace_all``
+    and a replay replaces them whole, so with checkpointed file
+    discovery a crashed-and-retried micro-batch converges to the same
+    files — exactly-once, same argument as ``corpus_quality_stream``.
+    Returns the started ``StreamingQuery``.
     """
     import os
 
@@ -763,6 +750,8 @@ def corpus_decontam_stream(
         bloom_build,
         bloom_might_contain,
     )
+
+    _require_local(out_dir, "out_dir")
 
     def keyed(df: DataFrame) -> tuple[DataFrame, str]:
         if key_col is not None:
@@ -790,21 +779,20 @@ def corpus_decontam_stream(
                 blk_keys, sliver[ckey] == F.col("_blk_key"), "left_semi"
             )
             drop = ["_hit"] + ([] if key_col is not None else ["_fp"])
-            clean.unionByName(verified).drop(*drop).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, "accepted", f"batch={batch_id}"))
-            blocked.drop(*drop).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "blocked", f"batch={batch_id}")
-            )
+            commit.replace_all([
+                (
+                    os.path.join(out_dir, "accepted", f"batch={batch_id}"),
+                    clean.unionByName(verified).drop(*drop).write.parquet,
+                ),
+                (
+                    os.path.join(out_dir, "blocked", f"batch={batch_id}"),
+                    blocked.drop(*drop).write.parquet,
+                ),
+            ])
         finally:
             probed.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_process)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint, available_now)
 
 
 def streaming_pot(

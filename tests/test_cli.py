@@ -584,7 +584,7 @@ def test_compact_store_cli(spark, tmp_path):
             [("s1", base + timedelta(minutes=k), float(k))],
             "id string, time timestamp, value double",
         )
-        TimeseriesStore.write_data(df, path, mode="append")
+        TimeseriesStore.write_data(df, path)
     assert len(glob.glob(os.path.join(path, "date=*", "*.parquet"))) >= 4
 
     main(["compact-store", "--path", path, "--target_mb", "128"])

@@ -1,7 +1,7 @@
 """``commit`` — the one path by which new content becomes visible.
 
-Each fault-injection case below interrupts one commit site of the CLI
-or the store at its worst moment (mid-concat, mid-``json.dump``, or
+Each fault-injection case below interrupts one commit site of the CLI,
+the store or a stream at its worst moment (mid-concat, mid-``json.dump``, or
 between a directory swap's two renames) and checks that the target is
 left fully old, and that the next run converges to the uninterrupted
 result. The read-half cases check that ``commit.table`` gives what
@@ -100,9 +100,10 @@ def overwrite_mode_calls(source: str) -> list[int]:
     return sorted(hits)
 
 
-def test_cli_never_overwrites_in_place():
-    lines = overwrite_mode_calls((PACKAGE_DIR / "cli.py").read_text())
-    assert not lines, f"Spark in-place overwrite in cli.py (lines {lines}): use commit.replace"
+@pytest.mark.parametrize("module", ["cli.py", "streaming/ingest.py"])
+def test_cli_never_overwrites_in_place(module):
+    lines = overwrite_mode_calls((PACKAGE_DIR / module).read_text())
+    assert not lines, f"Spark in-place overwrite in {module} (lines {lines}): use commit.replace"
 
 
 def test_guard_sees_overwrite_mode():
@@ -193,7 +194,6 @@ def test_compact_store_recovers_partition_after_interrupted_swap(
                 "id string, time timestamp, value double",
             ),
             path,
-            mode="append",
         )
 
     def rows(df=None):
@@ -424,6 +424,96 @@ def test_dedup_corpus_crash_mid_write_keeps_previous_output(spark, tmp_path, mon
     dedup(new_in, out)
     assert _multiset(spark.read.parquet(out)) == _multiset(spark.read.parquet(clean))
     assert spark.read.parquet(out).count() == 30
+
+
+def _dedup_stream(spark, root, wave=None):
+    """Run ``corpus_dedup_stream`` under ``root`` (``in/``, ``out/``,
+    ``ckpt/``) until it has drained its input, after landing ``wave``
+    (rows of ``doc_id, text``) as one new input file; returns the
+    output dir. A failed run raises after its query is stopped."""
+    from curw_flo2d_data_manager_spark.streaming.ingest import corpus_dedup_stream
+
+    schema = "doc_id long, text string"
+    src, out = os.path.join(root, "in"), os.path.join(root, "out")
+    if wave is not None:
+        n = len(os.listdir(src)) if os.path.isdir(src) else 0
+        spark.createDataFrame(wave, schema).coalesce(1).write.parquet(
+            os.path.join(src, f"wave{n}")
+        )
+    q = corpus_dedup_stream(
+        spark, os.path.join(src, "*"), out, schema,
+        checkpoint=os.path.join(root, "ckpt"), available_now=True,
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    return out
+
+
+WAVE1 = [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "delta words")]
+WAVE2 = [(4, "ALPHA  beta gamma!"), (5, "epsilon fresh text"), (6, "epsilon fresh text")]
+
+
+def test_dedup_stream_crash_mid_write_keeps_committed_batches(spark, tmp_path, monkeypatch):
+    """A micro-batch whose ledger write dies after its files landed (no
+    ``_SUCCESS`` marker yet) must leave the committed ``docs/`` and
+    ``digests/`` byte-identical, with no temp copy behind (so
+    ``docs/batch=1`` must not land before its ledger rows are
+    written), and replaying the checkpoint must give the output of an
+    uninterrupted run."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    clean_root = str(tmp_path / "clean")
+    _dedup_stream(spark, clean_root, WAVE1)
+    clean = _dedup_stream(spark, clean_root, WAVE2)
+    root = str(tmp_path / "crash")
+    out = _dedup_stream(spark, root, WAVE1)
+    before = _file_bytes(out)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        real_parquet(self, path, *a, **k)
+        parent, name = os.path.split(path)
+        if os.path.basename(parent) == "digests" and name.startswith("batch=1"):
+            os.remove(os.path.join(path, "_SUCCESS"))
+            raise OSError("injected crash mid-write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        _dedup_stream(spark, root, WAVE2)
+    monkeypatch.undo()
+
+    assert _file_bytes(out) == before
+    assert not [d for d, _, _ in os.walk(out) if d.endswith(commit.SWAP)]
+
+    _dedup_stream(spark, root)  # replays batch 1 from the checkpoint
+    for table in ("docs", "digests"):
+        got = spark.read.parquet(os.path.join(out, table))
+        assert _multiset(got) == _multiset(spark.read.parquet(os.path.join(clean, table)))
+    docs = spark.read.parquet(os.path.join(out, "docs"))
+    assert sorted(r.doc_id for r in docs.collect()) == [1, 3, 5]
+
+
+def test_dedup_stream_recovers_stranded_ledger_swap(spark, tmp_path):
+    """A ``digests/batch=1.tmp-swap`` left by a hard kill mid-write is
+    recovered by the next micro-batch's ledger read: partition
+    discovery never sees it, so ``batch`` stays typed ``int``."""
+    from pyspark.sql.types import IntegerType
+
+    root = str(tmp_path / "s")
+    out = _dedup_stream(spark, root, WAVE1)
+    ledger = os.path.join(out, "digests")
+    shutil.copytree(os.path.join(ledger, "batch=0"), os.path.join(ledger, "batch=1" + commit.SWAP))
+
+    _dedup_stream(spark, root, WAVE2)
+
+    assert sorted(os.listdir(ledger)) == ["batch=0", "batch=1"]
+    assert spark.read.parquet(ledger).schema["batch"].dataType == IntegerType()
+    docs = spark.read.parquet(os.path.join(out, "docs"))
+    assert sorted(r.doc_id for r in docs.collect()) == [1, 3, 5]
 
 
 def test_split_corpus_failure_in_second_split_keeps_earlier_splits(spark, tmp_path, monkeypatch):

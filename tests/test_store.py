@@ -109,7 +109,7 @@ def test_compact_data_merges_small_files(spark, tmp_path):
             for j in range(20)
         ]
         df = spark.createDataFrame(rows, "id string, time timestamp, value double")
-        TimeseriesStore.write_data(df, path, mode="append")
+        TimeseriesStore.write_data(df, path)
 
     files_before = glob.glob(os.path.join(path, "date=*", "*.parquet"))
     before = spark.read.parquet(path).orderBy("id", "time").collect()

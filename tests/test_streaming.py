@@ -102,6 +102,65 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path, series_dir):
     assert df.select("id", "time").distinct().count() == 4
 
 
+def test_foreach_batch_upsert_rejects_schema_mismatch_and_keeps_target(
+    spark, tmp_path, series_dir
+):
+    """A micro-batch with a column the target lacks fails the query
+    with an error naming that column, and the target keeps its files
+    and rows instead of being replaced by the one-row batch."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from curw_flo2d_data_manager_spark.streaming.ingest import SERIES_SCHEMA
+
+    def snapshot(path):
+        return {n: open(os.path.join(path, n), "rb").read() for n in sorted(os.listdir(path))}
+
+    target = str(tmp_path / "target")
+    q = foreach_batch_upsert(
+        read_series_stream(spark, series_dir), target, keys=["id", "time"],
+        checkpoint=str(tmp_path / "ckpt1"), available_now=True,
+    )
+    q.awaitTermination(120)
+    q.stop()
+    files, rows = snapshot(target), sorted(spark.read.parquet(target).collect())
+    assert len(rows) == 4
+
+    wider = StructType(SERIES_SCHEMA.fields + [StructField("flag", IntegerType())])
+    extra = str(tmp_path / "extra")
+    spark.createDataFrame(
+        [("a", datetime(2024, 1, 1, 0, 30), 8.0, 1)], wider
+    ).coalesce(1).write.parquet(extra)
+    q = foreach_batch_upsert(
+        read_series_stream(spark, extra, schema=wider), target, keys=["id", "time"],
+        checkpoint=str(tmp_path / "ckpt2"), available_now=True,
+    )
+    with pytest.raises(StreamingQueryException, match="payload column 'flag'"):
+        q.awaitTermination(120)
+    q.stop()
+
+    assert snapshot(target) == files
+    assert sorted(spark.read.parquet(target).collect()) == rows
+
+
+def test_streams_reject_remote_output_paths_when_wired(spark, tmp_path, series_dir):
+    """Stream outputs are committed with local renames, so a
+    ``scheme://`` output fails on the driver, naming the parameter,
+    before any query starts."""
+    from curw_flo2d_data_manager_spark.streaming.ingest import corpus_dedup_stream
+
+    with pytest.raises(ValueError, match="out_dir"):
+        corpus_dedup_stream(spark, str(tmp_path), "s3a://bucket/out", "doc_id long, text string")
+    with pytest.raises(ValueError, match="target_path"):
+        foreach_batch_upsert(
+            read_series_stream(spark, series_dir), "hdfs://nn/target", ["id", "time"],
+            str(tmp_path / "ckpt"),
+        )
+    assert not spark.streams.active
+
+
 def test_watermark_finalizes_once_and_drops_late_rows(spark, tmp_path):
     """End-to-end late-data semantics in append mode, three
     micro-batches (one file each): batch 1 advances the watermark,

@@ -251,4 +251,3 @@ class TimeseriesStore:
             run=commit.table(spark, f"{root}/run"),
             data=commit.table(spark, f"{root}/data"),
         )
-

@@ -12,12 +12,15 @@ from curw_flo2d_data_manager_spark.operators.textstats import unigram_logprob
 from curw_flo2d_data_manager_spark.queries._shared import _events, _t
 
 
-def _replay_waves(prefix: str, waves: list[DataFrame], start) -> str:
+def _replay_waves(
+    prefix: str, waves: list[DataFrame], start, read
+) -> DataFrame:
     """Feed ``waves`` to a file-arrival stream one at a time: each wave
     lands as one parquet file in a fresh watch dir, then
     ``start(watch_glob, out, checkpoint)`` drains it (availableNow)
-    against one checkpoint. Returns ``out`` (the caller's lazy result
-    reads it); the watch and checkpoint dirs are removed."""
+    against one checkpoint. Returns ``read(out)`` materialized, so it
+    no longer reads ``out``; the watch, checkpoint and output dirs are
+    removed."""
     import shutil
     import tempfile
 
@@ -30,10 +33,10 @@ def _replay_waves(prefix: str, waves: list[DataFrame], start) -> str:
             q = start(f"{watch}/*", out, ckpt)
             q.awaitTermination(300)
             q.stop()
+        return read(out).localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(watch, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        for d in (watch, ckpt, out):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,18 +59,16 @@ def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out = _replay_waves(
+    return _replay_waves(
         "stream_corpus", [docs, wave2],
         lambda src, dst, ckpt: corpus_dedup_stream(
             spark, src, dst, "doc_id long, text string",
             checkpoint=ckpt, available_now=True,
         ),
-    )
-    return (
-        spark.read.parquet(f"{out}/docs")
-        .select("doc_id", F.sha2(F.col("text"), 256).alias("text_sha"))
-        .orderBy("doc_id")
-    )
+        lambda out: spark.read.parquet(f"{out}/docs").select(
+            "doc_id", F.sha2(F.col("text"), 256).alias("text_sha")
+        ),
+    ).orderBy("doc_id")
 
 
 STREAM_CORPUS_SQL = """
@@ -102,7 +103,24 @@ def stream_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = _replay_waves(
+
+    def read(out: str) -> DataFrame:
+        accepted = spark.read.parquet(f"{out}/accepted").select(
+            "doc_id", F.lit(True).alias("accepted")
+        )
+        rejected = spark.read.parquet(f"{out}/rejected").select(
+            "doc_id",
+            F.lit(False).alias("accepted"),
+            "n_words",
+            "punct_ratio",
+        )
+        return (
+            accepted.withColumn("n_words", F.lit(None).cast("long"))
+            .withColumn("punct_ratio", F.lit(None).cast("double"))
+            .unionByName(rejected)
+        )
+
+    return _replay_waves(
         "stream_quality",
         [docs.filter(F.col("doc_id") % 2 == k) for k in (0, 1)],
         lambda src, dst, ckpt: corpus_quality_stream(
@@ -110,22 +128,8 @@ def stream_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_words=5, max_punct_ratio=0.2,
             checkpoint=ckpt, available_now=True,
         ),
-    )
-    accepted = spark.read.parquet(f"{out}/accepted").select(
-        "doc_id", F.lit(True).alias("accepted")
-    )
-    rejected = spark.read.parquet(f"{out}/rejected").select(
-        "doc_id",
-        F.lit(False).alias("accepted"),
-        "n_words",
-        "punct_ratio",
-    )
-    return (
-        accepted.withColumn("n_words", F.lit(None).cast("long"))
-        .withColumn("punct_ratio", F.lit(None).cast("double"))
-        .unionByName(rejected)
-        .orderBy("doc_id")
-    )
+        read,
+    ).orderBy("doc_id")
 
 
 STREAM_QUALITY_SQL = """
@@ -174,18 +178,16 @@ def stream_corpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    out = _replay_waves(
+    return _replay_waves(
         "stream_neardup", [docs, wave2],
         lambda src, dst, ckpt: corpus_neardup_stream(
             spark, src, dst, "doc_id long, text string",
             threshold=1.0, checkpoint=ckpt, available_now=True,
         ),
-    )
-    return (
-        spark.read.parquet(f"{out}/docs")
-        .select("doc_id", F.sha2(F.col("text"), 256).alias("text_sha"))
-        .orderBy("doc_id")
-    )
+        lambda out: spark.read.parquet(f"{out}/docs").select(
+            "doc_id", F.sha2(F.col("text"), 256).alias("text_sha")
+        ),
+    ).orderBy("doc_id")
 
 
 STREAM_NEARDUP_SQL = """
@@ -746,7 +748,7 @@ def stream_corpus_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     blocklist = docs.filter(F.col("source") == "src0").select("text")
     feed = docs.select("doc_id", "text")
-    out = _replay_waves(
+    return _replay_waves(
         "stream_decontam",
         [feed.filter(F.col("doc_id") % 2 == k) for k in (0, 1)],
         lambda src, dst, ckpt: corpus_decontam_stream(
@@ -754,14 +756,14 @@ def stream_corpus_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
             blocklist, m_bits=4096, k=3,
             checkpoint=ckpt, available_now=True,
         ),
-    )
-    accepted = spark.read.parquet(f"{out}/accepted").select(
-        "doc_id", F.lit(True).alias("accepted")
-    )
-    blocked = spark.read.parquet(f"{out}/blocked").select(
-        "doc_id", F.lit(False).alias("accepted")
-    )
-    return accepted.unionByName(blocked).orderBy("doc_id")
+        lambda out: spark.read.parquet(f"{out}/accepted")
+        .select("doc_id", F.lit(True).alias("accepted"))
+        .unionByName(
+            spark.read.parquet(f"{out}/blocked").select(
+                "doc_id", F.lit(False).alias("accepted")
+            )
+        ),
+    ).orderBy("doc_id")
 
 
 STREAM_DECONTAM_SQL = """

@@ -813,3 +813,22 @@ def test_streaming_attribution_join_left_outer_watermark_emission(spark, tmp_pat
     )
     assert matched == [("u1", 1, 100)]
     assert unmatched == [("u1", 2), ("u2", 3)]
+
+
+def test_stream_queries_leave_no_output_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """Each ``stream_corpus_*`` registry query drains a stream into temp
+    dirs; its result is readable after it returns, and no
+    ``<prefix>_out_*`` dir is left behind."""
+    import tempfile
+
+    from curw_flo2d_data_manager_spark.queries import queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in (
+        "stream_corpus_dedup",
+        "stream_corpus_quality",
+        "stream_corpus_neardup",
+        "stream_corpus_decontam",
+    ):
+        assert queries()[name](spark, sf_dir).collect(), name
+    assert sorted(p.name for p in tmp_path.glob("*_out_*")) == []

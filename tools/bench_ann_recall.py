@@ -32,40 +32,43 @@ python tools/bench_ann_recall.py [n_vectors] [n_queries]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.similarity import (
     bq_hamming_topk,
     build_ivf_index,
     cosine_topk,
+    dot,
     ivf_query,
     ivfpq_query,
+    l2_norm,
+    pq_assign,
     sq_adc_topk,
     train_pq_codebooks,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 DIM = 64
 K = 10
 
 
-def _vectors(spark, lo: int, hi: int):
+def _vectors(spark, lo: int, hi: int, coarse_cells: int = 32,
+             partitions: int = 64):
     """Deterministic two-scale structured unit vectors for ids
     [lo, hi): coarse tier (id % 32, IVF-visible), fine tier
     (id % 4096 — the ground-truth neighborhood: same-fine vectors are
     each other's true neighbors), hash noise well below the fine-tier
-    separation but above SQ8's int8 resolution."""
+    separation but above SQ8's int8 resolution. ``coarse_cells`` < 32
+    restricts the coarse tier to patterns 7.. (bench_ann_drift's
+    drifted ingest batches)."""
+    coarse = F.col("vec_id") % coarse_cells + (7 if coarse_cells < 32 else 0)
     raw = F.transform(
         F.sequence(F.lit(0), F.lit(DIM - 1)),
         lambda d: (
-            F.cos((F.col("vec_id") % 32) * (d + 1) * 0.2)
+            F.cos(coarse * (d + 1) * 0.2)
             + F.cos(
                 (F.col("vec_id") % 4096) * (d + 1) * 0.011 + F.lit(1.7)
             )
@@ -82,7 +85,7 @@ def _vectors(spark, lo: int, hi: int):
     )
     return (
         spark.range(lo, hi)
-        .repartition(64)
+        .repartition(partitions)
         .select(F.col("id").alias("vec_id"))
         .withColumn("_raw", raw)
         .select(
@@ -102,13 +105,8 @@ def _recall(approx, exact_pairs: set, n_exact: int) -> float:
     return len(got & exact_pairs) / max(n_exact, 1)
 
 
-def main() -> None:
-    n_vec = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-
-    spark = get_spark(app_name="bench_ann_recall")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_vectors=1_000_000, n_queries=100) -> dict:
+    n_vec, n_q = n_vectors, n_queries
     corpus = _vectors(spark, 0, n_vec).persist()
     corpus.count()
     queries = (
@@ -157,10 +155,6 @@ def main() -> None:
     # Codes are computed ONCE and persisted (the deployment recipe:
     # pq_assign -> partitionBy(cluster) parquet); without this every
     # operating point re-codes the full corpus in-plan.
-    from curw_flo2d_data_manager_spark.operators.similarity import (
-        pq_assign,
-    )
-
     t0 = time.monotonic()
     codebooks = train_pq_codebooks(corpus, m=8, ksub=16)
     pq_train_s = round(time.monotonic() - t0, 2)
@@ -221,13 +215,6 @@ def main() -> None:
             "query_sec": round(time.monotonic() - t0, 2),
         }
     )
-    from pyspark.sql import Window
-
-    from curw_flo2d_data_manager_spark.operators.similarity import (
-        dot,
-        l2_norm,
-    )
-
     for mult in (10, 30):
         t0 = time.monotonic()
         cand = sq_adc_topk(corpus, queries, k=K * mult, dim=DIM).select(
@@ -292,23 +279,19 @@ def main() -> None:
             }
         )
 
-    print(
-        json.dumps(
-            {
-                "metric": "ann_recall",
-                "vectors": n_vec,
-                "dim": DIM,
-                "k": K,
-                "queries": n_q,
-                "brute_force_sec": brute_s,
-                "ivf_build_sec": ivf_build_s,
-                "pq_train_sec": pq_train_s,
-                "pq_code_sec": pq_code_s,
-                "settings": results,
-            }
-        )
-    )
+    return {
+        "metric": "ann_recall",
+        "vectors": n_vec,
+        "dim": DIM,
+        "k": K,
+        "queries": n_q,
+        "brute_force_sec": brute_s,
+        "ivf_build_sec": ivf_build_s,
+        "pq_train_sec": pq_train_s,
+        "pq_code_sec": pq_code_s,
+        "settings": results,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main)

@@ -16,13 +16,9 @@ python tools/bench_ann_scale.py [n_vectors] (default 1000000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.similarity import (
@@ -30,18 +26,15 @@ from curw_flo2d_data_manager_spark.operators.similarity import (
     cosine_topk,
     ivf_query,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 DIM = 64
 N_QUERIES = 100
 
 
-def main() -> None:
-    n_vec = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
+def main(spark, n_vectors=1_000_000) -> dict:
+    n_vec = n_vectors
     n_clusters = max(16, int(n_vec ** 0.5) // 16)
     nprobe = max(4, n_clusters // 16)
-    spark = get_spark(app_name="bench_ann_scale")
-    spark.sparkContext.setLogLevel("ERROR")
 
     # deterministic structured vectors: cluster-ish base (id mod 32)
     # plus per-id hash noise; every 100th vector perturbs its
@@ -110,25 +103,21 @@ def main() -> None:
     ).count()
     recall10 = both / max(exact.count(), 1)
 
-    print(
-        json.dumps(
-            {
-                "metric": "ann_scale",
-                "vectors": n_assigned,
-                "dim": DIM,
-                "n_clusters": n_clusters,
-                "nprobe": nprobe,
-                "queries": n_q,
-                "index_build_sec": round(build_s, 2),
-                "ivf_query_sec": round(query_s, 2),
-                "brute_force_sec": round(brute_s, 2),
-                "speedup_vs_brute": round(brute_s / max(query_s, 1e-9), 2),
-                "planted_nn_recall": round(hits / max(n_q, 1), 4),
-                "recall_at_10_vs_exact": round(recall10, 4),
-            }
-        )
-    )
+    return {
+        "metric": "ann_scale",
+        "vectors": n_assigned,
+        "dim": DIM,
+        "n_clusters": n_clusters,
+        "nprobe": nprobe,
+        "queries": n_q,
+        "index_build_sec": round(build_s, 2),
+        "ivf_query_sec": round(query_s, 2),
+        "brute_force_sec": round(brute_s, 2),
+        "speedup_vs_brute": round(brute_s / max(query_s, 1e-9), 2),
+        "planted_nn_recall": round(hits / max(n_q, 1), 4),
+        "recall_at_10_vs_exact": round(recall10, 4),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main)

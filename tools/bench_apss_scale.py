@@ -23,28 +23,20 @@ python tools/bench_apss_scale.py [n_docs] [copy_every]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.textstats import (
     sparse_cosine_pairs,
+    word_ngram_terms,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("exact",)
 
 
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    copy_every = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-
-    spark = get_spark(app_name="bench_apss_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_docs=200_000, copy_every=100) -> dict:
     n_copies = n_docs // copy_every
     base = spark.range(n_docs).select(
         F.col("id").alias("doc_id"), F.col("id").alias("cid")
@@ -92,9 +84,6 @@ def main() -> None:
     # produced (sum over df>=2 terms of f*(f-1)/2) — computed from the
     # corpus term stats, untimed.
     n_cand = cand_out["candidates"].count()
-    from curw_flo2d_data_manager_spark.operators.textstats import (
-        word_ngram_terms,
-    )
     full_rows = (
         docs.select(F.explode(word_ngram_terms("text", 3)).alias("term"),
                     F.col("doc_id").alias("_id"))
@@ -106,7 +95,7 @@ def main() -> None:
     )
 
     ok = found == planted and agg["exact"] == len(planted)
-    print(json.dumps({
+    return {
         "metric": "apss_scale",
         "n_docs": n_docs + n_copies,
         "planted_pairs": len(planted),
@@ -119,10 +108,8 @@ def main() -> None:
         "elapsed_sec": round(elapsed, 2),
         "docs_per_sec": int((n_docs + n_copies) / elapsed),
         "exact": bool(ok),
-    }))
-    if not ok:
-        raise SystemExit(1)
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -27,18 +27,15 @@ python tools/bench_bfs_scale.py [n_cliques] [clique_size] [rounds]
 
 from __future__ import annotations
 
-import itertools
-import json
-import os
-import sys
+import math
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import clique_chain, require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.components import bfs_hops
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("ok",)
 
 
 def expected(n_cliques: int, size: int, rounds: int):
@@ -60,31 +57,13 @@ def expected(n_cliques: int, size: int, rounds: int):
     return count, total
 
 
-def main() -> None:
-    n_cliques = int(sys.argv[1]) if len(sys.argv) > 1 else 160_000
-    size = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 12
-    assert size >= 3 and n_cliques >= 2
+def main(spark, n_cliques=160_000, clique_size=6, rounds=12) -> dict:
+    require(clique_size >= 3, "clique_size must be >= 3")
+    require(n_cliques >= 2, "n_cliques must be >= 2")
+    size = clique_size
 
-    spark = get_spark(app_name="bench_bfs_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    pairs = list(itertools.combinations(range(size), 2))
-    i_arr = F.array(*[F.lit(i) for i, _ in pairs])
-    j_arr = F.array(*[F.lit(j) for _, j in pairs])
-    n_pairs = len(pairs)
-    clique = (F.col("id") / n_pairs).cast("long") * size
-    p = (F.col("id") % n_pairs + 1).cast("int")
-    clique_edges = spark.range(n_cliques * n_pairs).select(
-        (clique + F.element_at(i_arr, p)).alias("src"),
-        (clique + F.element_at(j_arr, p)).alias("dst"),
-    )
-    bridges = spark.range(n_cliques - 1).select(
-        (F.col("id") * size + (size - 1)).alias("src"),
-        ((F.col("id") + 1) * size).alias("dst"),
-    )
-    edges = clique_edges.unionByName(bridges)
-    n_edges = n_cliques * n_pairs + (n_cliques - 1)
+    edges = clique_chain(spark, n_cliques, size)
+    n_edges = n_cliques * math.comb(size, 2) + (n_cliques - 1)
     seeds = spark.range(1).select(F.lit(0).cast("long").alias("id"))
 
     t0 = time.time()
@@ -118,30 +97,21 @@ def main() -> None:
         and wagg.dsum == n_cliques * (size - 1)
     )
     ok = ok and wide_ok
-    print(
-        json.dumps(
-            {
-                "metric": "bfs_scale",
-                "n_edges": n_edges,
-                "rounds": rounds,
-                "nodes_reached": agg.n,
-                "expected_nodes": exp_n,
-                "dist_sum_exact_match": agg.dsum == exp_sum,
-                "value": round(elapsed, 2),
-                "wide_nodes": wagg.n,
-                "wide_exact_match": wide_ok,
-                "wide_value": round(wide_elapsed, 2),
-                "unit": "sec",
-                "ok": ok,
-            }
-        )
-    )
-    if not ok:
-        raise SystemExit(
-            f"MISMATCH: deep ({agg.n}, {agg.dsum}) expected "
-            f"({exp_n}, {exp_sum}); wide ({wagg.n}, {wagg.dsum})"
-        )
+    return {
+        "metric": "bfs_scale",
+        "n_edges": n_edges,
+        "rounds": rounds,
+        "nodes_reached": agg.n,
+        "expected_nodes": exp_n,
+        "dist_sum_exact_match": agg.dsum == exp_sum,
+        "value": round(elapsed, 2),
+        "wide_nodes": wagg.n,
+        "wide_exact_match": wide_ok,
+        "wide_value": round(wide_elapsed, 2),
+        "unit": "sec",
+        "ok": ok,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -24,13 +24,9 @@ python tools/bench_bloom_scale.py [n_corpus] [n_blocklist]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.caching import release_caches
@@ -39,16 +35,14 @@ from curw_flo2d_data_manager_spark.operators.dedup import (
     bloom_build,
     bloom_might_contain,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("exact",)
 
 
-def main() -> None:
-    n_corpus = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
-    n_block = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
+def main(spark, n_corpus=20_000_000, n_blocklist=2_000_000) -> dict:
+    n_block = n_blocklist
     # ~10 bits/key, rounded up to a power of two, k=5 → fp ≈ 0.9%
     m_bits = 1 << max(16, (n_block * 10).bit_length())
-    spark = get_spark(app_name="bench_bloom_scale")
-    spark.sparkContext.setLogLevel("ERROR")
 
     blocklist = spark.range(n_block).select(
         F.concat(F.lit("blk-"), F.col("id")).alias("fp")
@@ -92,27 +86,22 @@ def main() -> None:
     true_matches = n_corpus - kept_plain
     fp_rate = (sliver - true_matches) / max(1, n_corpus - true_matches)
 
-    print(
-        json.dumps(
-            {
-                "metric": "bloom_blocklist_scale",
-                "n_corpus": n_corpus,
-                "n_blocklist": n_block,
-                "m_bits": m_bits,
-                "kept_bloom": kept_bloom,
-                "kept_plain": kept_plain,
-                "exact": kept_bloom == kept_plain,
-                "sliver_rows": sliver,
-                "fp_rate": round(fp_rate, 6),
-                "build_sec": round(t_build, 3),
-                "filter_sec": round(t_filter, 3),
-                "plain_anti_sec": round(t_plain, 3),
-                "unit": "sec",
-            }
-        )
-    )
-    assert kept_bloom == kept_plain
+    return {
+        "metric": "bloom_blocklist_scale",
+        "n_corpus": n_corpus,
+        "n_blocklist": n_block,
+        "m_bits": m_bits,
+        "kept_bloom": kept_bloom,
+        "kept_plain": kept_plain,
+        "exact": kept_bloom == kept_plain,
+        "sliver_rows": sliver,
+        "fp_rate": round(fp_rate, 6),
+        "build_sec": round(t_build, 3),
+        "filter_sec": round(t_filter, 3),
+        "plain_anti_sec": round(t_plain, 3),
+        "unit": "sec",
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

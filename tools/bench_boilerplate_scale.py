@@ -10,28 +10,29 @@ python tools/bench_boilerplate_scale.py [docs] (default 1_000_000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.textstats import (
     strip_boilerplate_lines,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 N_SITES = 1000
+MIN_DOC_FREQ = 100
+CHECKS = ("exact",)
 
 
-def main() -> None:
-    docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    spark = get_spark(app_name="bench_boilerplate_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, docs=1_000_000) -> dict:
+    # a site banner is boilerplate (and stripped) only in >= min_doc_freq
+    # docs; sites are drawn by hash, so at docs = N_SITES x min_doc_freq
+    # about half of them fall short — twice that clears every one
+    require(
+        docs >= 2 * N_SITES * MIN_DOC_FREQ,
+        f"docs must be >= {2 * N_SITES * MIN_DOC_FREQ:,} (2 x N_SITES x "
+        "min_doc_freq) for every site banner to count as boilerplate",
+    )
     site = F.pmod(F.xxhash64("id"), F.lit(N_SITES))
     text = F.concat_ws(
         "\n",
@@ -44,7 +45,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    out = strip_boilerplate_lines(df, "doc_id", min_doc_freq=100)
+    out = strip_boilerplate_lines(df, "doc_id", min_doc_freq=MIN_DOC_FREQ)
     agg = out.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_removed").alias("removed"),
@@ -71,22 +72,18 @@ def main() -> None:
         and agg["exactly_two"] == docs
         and agg["body_intact"] == docs
     )
-    print(
-        json.dumps(
-            {
-                "metric": "boilerplate_scale",
-                "docs": docs,
-                "sites": N_SITES,
-                "exact": bool(exact),
-                "removed": int(agg["removed"]),
-                "body_intact": int(agg["body_intact"]),
-                "sec": round(sec, 2),
-                "docs_per_sec": int(docs / sec),
-                "unit": "sec",
-            }
-        )
-    )
+    return {
+        "metric": "boilerplate_scale",
+        "docs": docs,
+        "sites": N_SITES,
+        "exact": bool(exact),
+        "removed": int(agg["removed"]),
+        "body_intact": int(agg["body_intact"]),
+        "sec": round(sec, 2),
+        "docs_per_sec": int(docs / sec),
+        "unit": "sec",
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -29,14 +29,11 @@ python tools/bench_bpe_merges_scale.py [n_docs] [vocab] [merges_path]
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import require, run, run_tool
+from bench_bpe_scale import _word
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.bpe import (
@@ -45,18 +42,9 @@ from curw_flo2d_data_manager_spark.operators.bpe import (
     byte_pretokenize,
     load_merges,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 WORDS_PER_DOC = 20
-
-
-def _word(j: int) -> str:
-    s = ""
-    x = j
-    for _ in range(4 + j % 5):
-        s += chr(ord("a") + x % 26)
-        x = x * 31 + 7
-    return s
+CHECKS = ("ok",)
 
 
 def _pieces(word: str, vocab: frozenset, maxlen: int) -> int:
@@ -76,31 +64,26 @@ def _pieces(word: str, vocab: frozenset, maxlen: int) -> int:
     return cnt + (n - pos)
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    v = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000
-    merges_path = sys.argv[3] if len(sys.argv) > 3 else "/tmp/merges_32k.txt"
-    assert n % v == 0, "n_docs must be a multiple of vocab size"
+def main(spark, n_docs=2_000_000, vocab=10_000,
+         merges_path="/tmp/merges_32k.txt") -> dict:
+    n, v = n_docs, vocab
+    require(n % v == 0, "n_docs must be a multiple of vocab")
 
     if not os.path.exists(merges_path):
-        subprocess.run(
-            [
-                sys.executable,
-                os.path.join(os.path.dirname(__file__), "train_bpe_merges.py"),
-                "--input", "/root/testdata/sf0.1/documents.parquet",
-                "--out", merges_path,
-                "--n", "32768",
-                "--fill-synthetic",
-            ],
-            check=True,
+        run_tool(
+            "train_bpe_merges",
+            "--input", "/root/testdata/sf0.1/documents.parquet",
+            "--out", merges_path,
+            "--n", "32768",
+            "--fill-synthetic",
         )
-    vocab = load_merges(merges_path)
-    assert len(vocab) >= 32768, len(vocab)
-    vset = frozenset(vocab)
-    maxlen = max(len(t) for t in vocab)
-
-    spark = get_spark(app_name="bench_bpe_merges_scale")
-    spark.sparkContext.setLogLevel("ERROR")
+    merges = load_merges(merges_path)
+    require(
+        len(merges) >= 32768,
+        f"merges_path holds {len(merges)} merges; needs >= 32,768",
+    )
+    vset = frozenset(merges)
+    maxlen = max(len(t) for t in merges)
 
     words_py = [_word(j) for j in range(v)]
     pieces_py = [_pieces(w, vset, maxlen) for w in words_py]
@@ -120,7 +103,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    out = bpe_token_counts(docs, vocab=vocab)
+    out = bpe_token_counts(docs, vocab=merges)
     agg = out.agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum("n_words").alias("words"),
@@ -149,7 +132,7 @@ def main() -> None:
     bl = {
         r["doc_id"]: r["n_bpe_tokens"]
         for r in bpe_token_counts(
-            sample_docs, vocab=vocab, byte_level=True
+            sample_docs, vocab=merges, byte_level=True
         ).collect()
     }
     bl_pieces = [
@@ -162,29 +145,23 @@ def main() -> None:
     ) and len(bl) == 50
     ok &= bl_ok
 
-    print(
-        json.dumps(
-            {
-                "metric": "bpe_merges_scale",
-                "n_docs": n,
-                "corpus_vocab": v,
-                "merges": len(vocab),
-                "tokens": int(agg["bpe"]),
-                "value": round(elapsed, 2),
-                "unit": "sec",
-                "docs_per_sec": int(n / elapsed),
-                "exact_total": bool(
-                    agg["bpe"] == exp_bpe and agg["words"] == exp_words
-                ),
-                "sampled_rows_exact": bool(rows_ok),
-                "byte_level_rows_exact": bool(bl_ok),
-                "ok": bool(ok),
-            }
-        )
-    )
-    if not ok:
-        raise SystemExit("bpe merges scale truth MISMATCH")
+    return {
+        "metric": "bpe_merges_scale",
+        "n_docs": n,
+        "corpus_vocab": v,
+        "merges": len(merges),
+        "tokens": int(agg["bpe"]),
+        "value": round(elapsed, 2),
+        "unit": "sec",
+        "docs_per_sec": int(n / elapsed),
+        "exact_total": bool(
+            agg["bpe"] == exp_bpe and agg["words"] == exp_words
+        ),
+        "sampled_rows_exact": bool(rows_ok),
+        "byte_level_rows_exact": bool(bl_ok),
+        "ok": bool(ok),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

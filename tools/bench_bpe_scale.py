@@ -24,22 +24,18 @@ python tools/bench_bpe_scale.py [n_docs] [vocab]  (default 2_000_000 10_000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.bpe import (
     DEFAULT_BPE_VOCAB,
     bpe_token_counts,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 WORDS_PER_DOC = 20
+CHECKS = ("ok",)
 
 
 def _word(j: int) -> str:
@@ -65,16 +61,12 @@ def _pieces(word: str, vocab: list[str]) -> int:
     return cnt
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    v = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000
+def main(spark, n_docs=2_000_000, vocab=10_000) -> dict:
+    n, v = n_docs, vocab
     # each slot's word index (id + s·31) % V is a bijection of
     # id mod V, so V | n makes every word appear exactly n/V times
     # per slot — the closed-form total below depends on it.
-    assert n % v == 0, "n_docs must be a multiple of vocab size"
-
-    spark = get_spark(app_name="bench_bpe_scale")
-    spark.sparkContext.setLogLevel("ERROR")
+    require(n % v == 0, "n_docs must be a multiple of vocab")
 
     words_py = [_word(j) for j in range(v)]
     pieces_py = [_pieces(w, DEFAULT_BPE_VOCAB) for w in words_py]
@@ -126,27 +118,21 @@ def main() -> None:
     ) and len(sample) == 50
     ok &= rows_ok
 
-    print(
-        json.dumps(
-            {
-                "metric": "bpe_scale",
-                "n_docs": n,
-                "vocab": v,
-                "tokens": int(agg["bpe"]),
-                "value": round(elapsed, 2),
-                "unit": "sec",
-                "docs_per_sec": int(n / elapsed),
-                "exact_total": bool(
-                    agg["bpe"] == exp_bpe and agg["words"] == exp_words
-                ),
-                "sampled_rows_exact": bool(rows_ok),
-                "ok": bool(ok),
-            }
-        )
-    )
-    if not ok:
-        raise SystemExit("bpe scale truth MISMATCH")
+    return {
+        "metric": "bpe_scale",
+        "n_docs": n,
+        "vocab": v,
+        "tokens": int(agg["bpe"]),
+        "value": round(elapsed, 2),
+        "unit": "sec",
+        "docs_per_sec": int(n / elapsed),
+        "exact_total": bool(
+            agg["bpe"] == exp_bpe and agg["words"] == exp_words
+        ),
+        "sampled_rows_exact": bool(rows_ok),
+        "ok": bool(ok),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

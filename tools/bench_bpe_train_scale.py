@@ -19,15 +19,12 @@ python tools/bench_bpe_train_scale.py [n_smoke_docs]  (default 2_000_000)
 
 from __future__ import annotations
 
-import json
-import os
 import random
-import subprocess
-import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import bench_bpe_merges_scale
+from _scale import run, run_tool
 
 CONS = list("bcdfghjklmnpqrstvwz")
 VOWELS = list("aeiouy")
@@ -35,6 +32,7 @@ SUFFIXES = [
     "", "s", "ed", "ing", "er", "est", "ly", "tion", "ness", "ment",
     "able", "ity", "ful", "less", "ish", "ous", "ive", "al", "ic", "ism",
 ]
+CHECKS = ("ok",)
 
 
 def build_vocab(n_stems: int, seed: int = 20260816) -> list[str]:
@@ -79,84 +77,54 @@ def write_corpus(path: str, n_docs: int, words_per_doc: int = 60) -> int:
     return len(vocab)
 
 
-def main() -> None:
-    n_smoke = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    work = "/tmp/bpe_train_scale"
-    os.makedirs(work, exist_ok=True)
-    corpus = f"{work}/train_corpus.parquet"
-    merges = f"{work}/merges_trained_32k.txt"
+def main(spark, n_smoke_docs=2_000_000) -> dict:
+    with tempfile.TemporaryDirectory(prefix="bpe_train_scale_") as work:
+        corpus = f"{work}/train_corpus.parquet"
+        merges = f"{work}/merges_trained_32k.txt"
 
-    t0 = time.time()
-    vocab_size = write_corpus(corpus, n_docs=20_000)
-    t_gen = time.time() - t0
+        t0 = time.time()
+        vocab_size = write_corpus(corpus, n_docs=20_000)
+        t_gen = time.time() - t0
 
-    t1 = time.time()
-    if os.path.exists(merges):
-        os.unlink(merges)
-    subprocess.run(
-        [
-            sys.executable,
-            os.path.join(os.path.dirname(__file__), "train_bpe_merges.py"),
+        t1 = time.time()
+        run_tool(
+            "train_bpe_merges",
             "--input", corpus,
             "--out", merges,
             "--n", "32768",
             "--fill-synthetic",
-        ],
-        check=True,
-    )
-    t_train = time.time() - t1
-
-    learned = 0
-    with open(merges, encoding="utf-8") as fh:
-        for ln in fh:
-            if ln.startswith("#learned:"):
-                learned = int(ln.split(":")[1])
-                break
-    assert learned >= 1024, (
-        f"trainer saturated at {learned} genuine merges — corpus not "
-        "diverse enough"
-    )
-
-    # the 2M-doc Arrow-encoder smoke on the TRAINED table (sampled
-    # docs bit-equal to the plain-Python greedy reference inside)
-    t2 = time.time()
-    out = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(
-                os.path.dirname(__file__), "bench_bpe_merges_scale.py"
-            ),
-            str(n_smoke), "10000", merges,
-        ],
-        check=True,
-        capture_output=True,
-        text=True,
-    )
-    t_smoke = time.time() - t2
-    smoke = json.loads(
-        [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    )
-
-    print(
-        json.dumps(
-            {
-                "metric": "bpe_train_scale",
-                "value": round(t_gen + t_train + t_smoke, 2),
-                "unit": "sec",
-                "corpus_docs": 20_000,
-                "corpus_vocab": vocab_size,
-                "learned_merges": learned,
-                "table_size": 32768,
-                "gen_s": round(t_gen, 2),
-                "train_s": round(t_train, 2),
-                "smoke": smoke,
-                "ok": bool(learned >= 1024 and smoke.get("ok")),
-            }
         )
-    )
-    if not (learned >= 1024 and smoke.get("ok")):
-        raise SystemExit("bpe train scale MISMATCH")
+        t_train = time.time() - t1
+
+        learned = 0
+        with open(merges, encoding="utf-8") as fh:
+            for ln in fh:
+                if ln.startswith("#learned:"):
+                    learned = int(ln.split(":")[1])
+                    break
+
+        # the Arrow-encoder smoke on the TRAINED table (sampled docs
+        # bit-equal to the plain-Python greedy reference inside)
+        t2 = time.time()
+        smoke = bench_bpe_merges_scale.main(spark, n_smoke_docs, 10000, merges)
+        t_smoke = time.time() - t2
+
+    return {
+        "metric": "bpe_train_scale",
+        "value": round(t_gen + t_train + t_smoke, 2),
+        "unit": "sec",
+        "corpus_docs": 20_000,
+        "corpus_vocab": vocab_size,
+        "learned_merges": learned,
+        "table_size": 32768,
+        "gen_s": round(t_gen, 2),
+        "train_s": round(t_train, 2),
+        "smoke": smoke,
+        # the trainer must learn >= 1,024 merges before any filler,
+        # or the corpus is not diverse enough to test it
+        "ok": bool(learned >= 1024 and smoke.get("ok")),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -16,27 +16,20 @@ python tools/bench_cc_scale.py [n_edges] (default 1000000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators import components
 from curw_flo2d_data_manager_spark.operators.components import connected_components
-from curw_flo2d_data_manager_spark.session import get_spark
 
 CHAIN_LEN = 1000
+CHECKS = ("wrong_labels == 0",)
 
 
-def main() -> None:
-    n_edges = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
+def main(spark, n_edges=1_000_000) -> dict:
     n_nodes = n_edges + n_edges // (CHAIN_LEN - 1)  # edges = len-1 per chain
-    spark = get_spark(app_name="bench_cc_scale")
-    spark.sparkContext.setLogLevel("ERROR")
 
     # chains: node i links to i+1 unless i is a chain tail
     edges = (
@@ -55,23 +48,18 @@ def main() -> None:
     n_labeled = labels.count()
     elapsed = time.time() - t0
 
-    print(
-        json.dumps(
-            {
-                "metric": "cc_chain_graph",
-                "n_edges": actual_edges,
-                "chain_len": CHAIN_LEN,
-                "n_nodes_labeled": n_labeled,
-                "wrong_labels": wrong,
-                "rounds": components.last_rounds,
-                "value": round(elapsed, 2),
-                "unit": "sec",
-                "edges_per_sec": int(actual_edges / elapsed),
-            }
-        )
-    )
-    spark.stop()
+    return {
+        "metric": "cc_chain_graph",
+        "n_edges": actual_edges,
+        "chain_len": CHAIN_LEN,
+        "n_nodes_labeled": n_labeled,
+        "wrong_labels": wrong,
+        "rounds": components.last_rounds,
+        "value": round(elapsed, 2),
+        "unit": "sec",
+        "edges_per_sec": int(actual_edges / elapsed),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

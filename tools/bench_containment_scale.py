@@ -15,24 +15,17 @@ python tools/bench_containment_scale.py [docs] (default 200_000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.dedup import containment_pairs
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("planted_missing == 0",)
 
 
-def main() -> None:
-    docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    spark = get_spark(app_name="bench_containment_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, docs=200_000) -> dict:
     # body: 20 tokens unique to this doc id
     body = F.concat_ws(
         " ",
@@ -78,23 +71,19 @@ def main() -> None:
         pairs, ["id_small", "id_big"], "left_anti"
     ).count()
 
-    print(
-        json.dumps(
-            {
-                "metric": "containment_scale",
-                "docs": docs,
-                "pairs_found": int(n_pairs),
-                "planted_expected": int(n_expected),
-                "planted_missing": int(missing),
-                "recall": 1.0
-                if missing == 0
-                else round(1 - missing / max(n_expected, 1), 4),
-                "sec": round(sec, 2),
-                "unit": "sec",
-            }
-        )
-    )
+    return {
+        "metric": "containment_scale",
+        "docs": docs,
+        "pairs_found": int(n_pairs),
+        "planted_expected": int(n_expected),
+        "planted_missing": int(missing),
+        "recall": 1.0
+        if missing == 0
+        else round(1 - missing / max(n_expected, 1), 4),
+        "sec": round(sec, 2),
+        "unit": "sec",
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -11,28 +11,22 @@ Usage: python tools/bench_dedup_scale.py [n_docs] (default 100000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
+from curw_flo2d_data_manager_spark.operators import components
+from curw_flo2d_data_manager_spark.operators.components import cluster_assign
 from curw_flo2d_data_manager_spark.operators.dedup import (
     minhash_lsh_pairs,
     simhash_near_pairs,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("pipeline_survivors == pipeline_expected_survivors",)
 
 
-
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    spark = get_spark(app_name="bench_dedup_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_docs=100_000) -> dict:
     # ~40 words per doc from a 5k-token synthetic vocabulary (token =
     # "w<hash mod 5000>"), deterministic per id; every 20th doc is a
     # near-copy of its predecessor (same words, one token appended)
@@ -67,9 +61,6 @@ def main() -> None:
     # full pipeline: pairs -> connected components -> keep-one. Every
     # planted (20j, 20j+1) pair is its own 2-cluster, so survivors must
     # be exactly n_docs - n_planted (near-copies lose, originals win).
-    from curw_flo2d_data_manager_spark.operators import components
-    from curw_flo2d_data_manager_spark.operators.components import cluster_assign
-
     n_planted = n_docs // 20 if n_docs % 20 == 0 else (n_docs + 18) // 20
     t0 = time.monotonic()
     pairs = minhash_lsh_pairs(
@@ -79,24 +70,20 @@ def main() -> None:
     survivors = decisions.filter(F.col("keep")).count()
     t_pipeline = round(time.monotonic() - t0, 2)
 
-    print(
-        json.dumps(
-            {
-                "metric": "dedup_scale",
-                "docs": n_docs,
-                "minhash_pairs_j08": mh,
-                "minhash_sec": t_minhash,
-                "simhash_pairs_h3": sh,
-                "simhash_sec": t_simhash,
-                "docs_per_sec_minhash": int(n_docs / t_minhash),
-                "pipeline_sec": t_pipeline,
-                "pipeline_survivors": survivors,
-                "pipeline_expected_survivors": n_docs - n_planted,
-                "pipeline_cc_rounds": components.last_rounds,
-            }
-        )
-    )
+    return {
+        "metric": "dedup_scale",
+        "docs": n_docs,
+        "minhash_pairs_j08": mh,
+        "minhash_sec": t_minhash,
+        "simhash_pairs_h3": sh,
+        "simhash_sec": t_simhash,
+        "docs_per_sec_minhash": int(n_docs / t_minhash),
+        "pipeline_sec": t_pipeline,
+        "pipeline_survivors": survivors,
+        "pipeline_expected_survivors": n_docs - n_planted,
+        "pipeline_cc_rounds": components.last_rounds,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

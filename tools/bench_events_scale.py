@@ -23,31 +23,37 @@ Usage: python tools/bench_events_scale.py [n_events]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import require, run
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from curw_flo2d_data_manager_spark.operators.despike import hampel_despike
+from curw_flo2d_data_manager_spark.operators.interpolate import (
+    linear_interpolate,
+)
 from curw_flo2d_data_manager_spark.operators.sessionize import sessionize
-from curw_flo2d_data_manager_spark.session import get_spark
 
 N_USERS = 100_000
 TYPES = ["click", "error", "purchase", "signup", "view"]
+# the interpolation check lets 1% of gaps stay unfilled; a user's first
+# or last event is an unfillable gap with chance ~1/7 each, against
+# ~events_per_user/7 gaps, so each user needs well over 200 events
+EVENTS_PER_USER = 250
 
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000_000
-    spark = get_spark(app_name="bench_events_scale")
-    spark.sparkContext.setLogLevel("ERROR")
+def main(spark, n_events=50_000_000) -> dict:
+    n = n_events
+    require(
+        n >= EVENTS_PER_USER * N_USERS,
+        f"n_events must be >= {EVENTS_PER_USER * N_USERS:,} "
+        f"({EVENTS_PER_USER} per user) for 99% of the planted gaps to fill",
+    )
 
     # Deterministic synthetic stream: per-user event sequence with
     # xxhash-derived pseudo-random inter-arrival gaps (0..3600 s) so
@@ -120,11 +126,6 @@ def main() -> None:
     _force(events.groupBy("user_id").pivot("event_type", TYPES).agg(F.sum("value")))
     results["pivot"] = round(time.monotonic() - t0, 3)
 
-    from curw_flo2d_data_manager_spark.operators.despike import hampel_despike
-    from curw_flo2d_data_manager_spark.operators.interpolate import (
-        linear_interpolate,
-    )
-
     gapped = events.withColumn(
         "value",
         F.when(F.col("event_id") % 7 == 0, F.lit(None).cast("double"))
@@ -189,21 +190,16 @@ def main() -> None:
     results["rolling_actives"] = round(time.monotonic() - t0, 3)
 
     total = sum(results.values())
-    print(
-        json.dumps(
-            {
-                "metric": "events_window_ops_scale",
-                "n_events": n_rows,
-                "gen_sec": round(gen_s, 3),
-                "ops_sec": results,
-                "value": round(total, 3),
-                "unit": "sec",
-                "rows_per_sec_overall": int(n_rows * len(results) / total),
-            }
-        )
-    )
-    spark.stop()
+    return {
+        "metric": "events_window_ops_scale",
+        "n_events": n_rows,
+        "gen_sec": round(gen_s, 3),
+        "ops_sec": results,
+        "value": round(total, 3),
+        "unit": "sec",
+        "rows_per_sec_overall": int(n_rows * len(results) / total),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main)

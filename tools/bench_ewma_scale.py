@@ -13,30 +13,22 @@ Prints one JSON line. Usage: python tools/bench_ewma_scale.py [rows]
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import sys
 import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 import pandas as pd
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.smoothing import ewma
-from curw_flo2d_data_manager_spark.session import get_spark
 
 ALPHA = 0.3
 SEGMENT_ROWS = 1_000_000
+CHECKS = ("exact_ok",)
 
 
-def main() -> None:
-    rows = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
-    spark = get_spark(app_name="bench_ewma_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, rows=10_000_000) -> dict:
     df = (
         spark.range(rows)
         .repartition(32)
@@ -71,23 +63,17 @@ def main() -> None:
         and last_rel < 1e-9
         and math.isfinite(agg["s"])
     )
-    print(
-        json.dumps(
-            {
-                "metric": "ewma_segmented_single_series",
-                "rows": rows,
-                "segment_rows": SEGMENT_ROWS,
-                "sec": elapsed,
-                "rows_per_sec": int(rows / elapsed),
-                "sum_rel_err": float(f"{sum_rel:.3e}"),
-                "last_rel_err": float(f"{last_rel:.3e}"),
-                "exact_ok": bool(ok),
-            }
-        )
-    )
-    if not ok:
-        raise SystemExit(1)
+    return {
+        "metric": "ewma_segmented_single_series",
+        "rows": rows,
+        "segment_rows": SEGMENT_ROWS,
+        "sec": elapsed,
+        "rows_per_sec": int(rows / elapsed),
+        "sum_rel_err": float(f"{sum_rel:.3e}"),
+        "last_rel_err": float(f"{last_rel:.3e}"),
+        "exact_ok": bool(ok),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -29,30 +29,27 @@ python tools/bench_exactstats_scale.py [n_rows]  (default 100_000_000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
+from decimal import ROUND_HALF_UP, Decimal
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.exactstats import (
+    gini_fixed,
     group_mode,
     moments_fixed,
     weighted_median,
     welch_ttest,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("ok",)
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
-    assert n % 400 == 0
-
-    spark = get_spark(app_name="bench_exactstats_scale")
-    spark.sparkContext.setLogLevel("ERROR")
+def main(spark, n_rows=100_000_000) -> dict:
+    n = n_rows
+    require(n % 400 == 0, "n_rows must be a multiple of 400 (exact-uniform cells)")
+    require(n % 5000 == 0, "n_rows must be a multiple of 5000 (exact Gini keys)")
 
     b = (F.col("id") - F.col("id") % 8) / 8
     r = F.col("id") % 8
@@ -124,7 +121,6 @@ def main() -> None:
     # = v·0.01 so cents = v and Σ2ix ≤ 2n²·50 ≈ 2.7e17 at n=5.2e7 —
     # inside BIGINT headroom (cents=v is what keeps the 52%-key case
     # overflow-safe; see gini_fixed's documented bound).
-    assert n % 5000 == 0
     h = F.col("id") % 100
     qq = (F.col("id") - h) / 100
     gkey = F.when(h < 52, F.lit(0)).otherwise(
@@ -135,8 +131,6 @@ def main() -> None:
         ((qq.cast("long") % 50 + 1).cast("double") * 0.01).alias("money"),
         F.col("id"),
     )
-    from curw_flo2d_data_manager_spark.operators.exactstats import gini_fixed
-
     t0 = time.time()
     gin = {r.g: r for r in gini_fixed(gdf, ["g"], "money").collect()}
     t_gini = time.time() - t0
@@ -144,8 +138,6 @@ def main() -> None:
     # generator truth: per key n_k rows, cents v=1..50 each n_k/50
     # times; num = Σ(2i−n−1)·v over ascending runs, all integer; the
     # single float op and HALF_UP 6dp round replayed exactly.
-    from decimal import ROUND_HALF_UP, Decimal
-
     def exact_gini(n_k: int) -> tuple[int, int, float]:
         m = n_k // 50
         num = 0
@@ -179,26 +171,20 @@ def main() -> None:
             and r.gini == egini
         )
 
-    print(
-        json.dumps(
-            {
-                "metric": "exactstats_scale",
-                "n_rows": n,
-                "moments_s": round(t_mom, 2),
-                "mode_s": round(t_mode, 2),
-                "weighted_median_s": round(t_wm, 2),
-                "welch_s": round(t_tt, 2),
-                "gini_skewed_s": round(t_gini, 2),
-                "value": round(t_mom + t_mode + t_wm + t_tt + t_gini, 2),
-                "unit": "sec",
-                "exact_equality": bool(ok),
-                "ok": bool(ok),
-            }
-        )
-    )
-    if not ok:
-        raise SystemExit("exactstats scale truth MISMATCH")
+    return {
+        "metric": "exactstats_scale",
+        "n_rows": n,
+        "moments_s": round(t_mom, 2),
+        "mode_s": round(t_mode, 2),
+        "weighted_median_s": round(t_wm, 2),
+        "welch_s": round(t_tt, 2),
+        "gini_skewed_s": round(t_gini, 2),
+        "value": round(t_mom + t_mode + t_wm + t_tt + t_gini, 2),
+        "unit": "sec",
+        "exact_equality": bool(ok),
+        "ok": bool(ok),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

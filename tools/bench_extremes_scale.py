@@ -16,20 +16,15 @@ python tools/bench_extremes_scale.py [n_series] [rows_per_series]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.extremes import (
     cusum_drift,
     peaks_over_threshold,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 # planted storms: for every series, rows i in [k*1000, k*1000+5)
 # for k = 1..STORMS exceed the threshold (5-row runs, 995 quiet rows
@@ -39,20 +34,22 @@ from curw_flo2d_data_manager_spark.session import get_spark
 RUN_LEN = 5
 PERIOD = 1000
 THRESHOLD = 100.0
+CHECKS = ("pot_exact", "cusum_exact")
 
 
-def main() -> None:
-    n_series = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000
-    rows_per = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000
+def main(spark, n_series=2_000, rows_per_series=10_000) -> dict:
+    rows_per = rows_per_series
     storms = max(0, min(9, (rows_per - RUN_LEN) // PERIOD))
     # planted drift: the last ~5% of each series, clear of storm rows
     drift_lo = rows_per - max(200, rows_per // 20)
     drift_hi = rows_per
-    assert storms >= 1 and drift_lo > storms * PERIOD + RUN_LEN, (
-        "rows_per too small for a meaningful smoke"
+    require(
+        storms >= 1 and drift_lo > storms * PERIOD + RUN_LEN,
+        f"rows_per_series={rows_per} needs >= 1 planted storm "
+        f"(rows_per_series >= {PERIOD + RUN_LEN}) and its drift segment "
+        f"(from row {drift_lo}) past the last storm row "
+        f"{storms * PERIOD + RUN_LEN}",
     )
-    spark = get_spark(app_name="bench_extremes_scale")
-    spark.sparkContext.setLogLevel("ERROR")
 
     sid = F.col("id") % n_series
     i = (F.col("id") / n_series).cast("long")  # row index within series
@@ -130,23 +127,18 @@ def main() -> None:
     cusum_s = time.time() - t0
     cusum_exact = n_fired == n_series
 
-    print(
-        json.dumps(
-            {
-                "metric": "extremes_scale",
-                "rows": n_series * rows_per,
-                "n_series": n_series,
-                "pot_sec": round(pot_s, 3),
-                "pot_exact": bool(pot_exact),
-                "n_clusters": agg["n_clusters"],
-                "cusum_sec": round(cusum_s, 3),
-                "cusum_drift_series_detected": n_fired,
-                "cusum_exact": bool(cusum_exact),
-            }
-        )
-    )
-    spark.stop()
+    return {
+        "metric": "extremes_scale",
+        "rows": n_series * rows_per,
+        "n_series": n_series,
+        "pot_sec": round(pot_s, 3),
+        "pot_exact": bool(pot_exact),
+        "n_clusters": agg["n_clusters"],
+        "cusum_sec": round(cusum_s, 3),
+        "cusum_drift_series_detected": n_fired,
+        "cusum_exact": bool(cusum_exact),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

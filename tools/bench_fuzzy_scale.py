@@ -15,28 +15,29 @@ python tools/bench_fuzzy_scale.py [rows] (default 10_000_000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.dedup import fuzzy_name_pairs
-from curw_flo2d_data_manager_spark.session import get_spark
 
 N_BRANDS = 1000
 N_ITEMS = 100
+# rows per distinct name below which some planted name may draw no row
+# (its pair then cannot be found): 20 keeps the expected number of
+# absent planted names ~1000·e^-20
+ROWS_PER_NAME = 20
+CHECKS = ("planted_missing == 0",)
 
 
-def main() -> None:
-    rows = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
+def main(spark, rows=10_000_000) -> dict:
     n_names = N_BRANDS * N_ITEMS
-
-    spark = get_spark(app_name="bench_fuzzy_scale")
-    spark.sparkContext.setLogLevel("ERROR")
+    require(
+        rows >= ROWS_PER_NAME * n_names,
+        f"rows must be >= {ROWS_PER_NAME * n_names:,} ({ROWS_PER_NAME} x "
+        "distinct names) so every planted name occurs in the rows",
+    )
 
     idx = F.pmod(F.xxhash64("id"), F.lit(n_names))
     name = F.format_string(
@@ -91,23 +92,19 @@ def main() -> None:
     n_pairs = pairs.count()
     mass = pairs.agg(F.max("n_a"), F.max("n_b")).collect()[0]
 
-    print(
-        json.dumps(
-            {
-                "metric": "fuzzy_scale",
-                "rows": rows + rows // 1000,
-                "distinct_names": n_names,
-                "pairs_found": n_pairs,
-                "planted_expected": n_expected,
-                "planted_missing": int(missing),
-                "recall": 1.0 if missing == 0 else round(1 - missing / n_expected, 4),
-                "max_group_rows": [mass[0], mass[1]],
-                "sec": round(fuzzy_s, 2),
-                "unit": "sec",
-            }
-        )
-    )
+    return {
+        "metric": "fuzzy_scale",
+        "rows": rows + rows // 1000,
+        "distinct_names": n_names,
+        "pairs_found": n_pairs,
+        "planted_expected": n_expected,
+        "planted_missing": int(missing),
+        "recall": 1.0 if missing == 0 else round(1 - missing / n_expected, 4),
+        "max_group_rows": [mass[0], mass[1]],
+        "sec": round(fuzzy_s, 2),
+        "unit": "sec",
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -11,13 +11,10 @@ python tools/bench_hh_scale.py [n_docs] (default 500000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
+import math
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.caching import release_caches
@@ -25,17 +22,13 @@ from curw_flo2d_data_manager_spark.operators.textstats import (
     frequent_terms,
     words,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 TOKENS_PER_DOC = 40
 MIN_SHARE = 0.005
+CHECKS = ("exact_match",)
 
 
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
-    spark = get_spark(app_name="bench_hh_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_docs=500_000) -> dict:
     # each doc: mostly unique tail tokens; every doc carries "hot0",
     # every 2nd "hot1", every 4th "hot2", ... every 2^k-th "hotk" —
     # a known heavy-hitter ladder straddling the share threshold
@@ -75,8 +68,6 @@ def main() -> None:
     t0 = time.monotonic()
     toks = docs.select(F.explode(words("text")).alias("t"))
     n_tok = toks.count()
-    import math
-
     thr = math.ceil(MIN_SHARE * n_tok)
     exact = toks.groupBy("t").agg(F.count(F.lit(1)).alias("c")).persist()
     n_vocab = exact.count()
@@ -92,7 +83,8 @@ def main() -> None:
     # counts only the <= floor(1/min_share) candidate buckets' terms
     # as strings.
     cand_bound = math.floor(1.0 / MIN_SHARE)
-    out = {
+    docs.unpersist()
+    return {
         "metric": "heavy_hitters_scale",
         "n_docs": n_docs,
         "n_tokens": n_tok,
@@ -106,9 +98,7 @@ def main() -> None:
         "candidate_shuffle_bound": cand_bound,
         "shuffle_key_reduction": round(1.0 - cand_bound / max(n_vocab, 1), 4),
     }
-    docs.unpersist()
-    print(json.dumps(out))
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -12,20 +12,16 @@ python tools/bench_hits_scale.py [n_src] [fanout] [n_dst]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.pagerank import hits_fixed_point
-from curw_flo2d_data_manager_spark.session import get_spark
 
 ITERS = 3
 SCALE = 10**9
+CHECKS = ("exact",)
 
 
 def _edge(i: int, j: int, n_dst: int, n_src: int) -> tuple[int, int]:
@@ -55,14 +51,7 @@ def _python_replay(edges, n_src, n_dst):
     return {v: (h[v], a[v]) for v in nodes}
 
 
-def main() -> None:
-    n_src = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
-    fanout = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    n_dst = int(sys.argv[3]) if len(sys.argv) > 3 else 50_000
-
-    spark = get_spark(app_name="bench_hits_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_src=500_000, fanout=4, n_dst=50_000) -> dict:
     edges_df = (
         spark.range(n_src)
         .select(
@@ -98,24 +87,18 @@ def main() -> None:
 
     mismatches = sum(1 for v in want if got.get(v) != want[v])
     n_edges = len(set(edges))
-    print(
-        json.dumps(
-            {
-                "metric": "hits_scale",
-                "edges": n_src * fanout,
-                "distinct_edges": n_edges,
-                "nodes": len(want),
-                "iters": ITERS,
-                "spark_sec": elapsed,
-                "python_replay_sec": replay_s,
-                "mismatches": mismatches,
-                "exact": mismatches == 0,
-            }
-        )
-    )
-    if mismatches:
-        raise SystemExit(1)
+    return {
+        "metric": "hits_scale",
+        "edges": n_src * fanout,
+        "distinct_edges": n_edges,
+        "nodes": len(want),
+        "iters": ITERS,
+        "spark_sec": elapsed,
+        "python_replay_sec": replay_s,
+        "mismatches": mismatches,
+        "exact": mismatches == 0,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -23,19 +23,19 @@ Usage: python tools/bench_hychan_scale.py [target_gib] (default 1.0)
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _scale import run
+from pyspark.sql import functions as F
 
-from curw_flo2d_data_manager_spark.session import get_spark
+import curw_flo2d_data_manager_spark.sources.hychan as hychan_mod
+from curw_flo2d_data_manager_spark.sources import line_text
 from curw_flo2d_data_manager_spark.sources.hychan import parse_hychan
 
 ROWS_PER_SECTION = 13_500  # ~40 B/line -> ~540 KiB per section
+CHECKS = ("split_invariant",)
 
 
 def synthesize(path: str, target_gib: float) -> int:
@@ -62,8 +62,6 @@ def synthesize(path: str, target_gib: float) -> int:
 
 def fingerprint(df):
     """Order-insensitive result fingerprint + row count, one pass."""
-    from pyspark.sql import functions as F
-
     row = df.select(
         F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(element_no, time, value))").alias("fp"),
@@ -78,20 +76,13 @@ def timed_parse(spark, path: str):
     return time.monotonic() - t0, n, fp
 
 
-def main() -> None:
-    target_gib = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
-    spark = get_spark(app_name="bench_hychan_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    tmp = tempfile.mkdtemp(prefix="hychan_scale_")
-    path = os.path.join(tmp, "HYCHAN.OUT")
-    try:
+def main(spark, target_gib=1.0) -> dict:
+    with tempfile.TemporaryDirectory(prefix="hychan_scale_") as tmp:
+        path = os.path.join(tmp, "HYCHAN.OUT")
         t0 = time.monotonic()
         n_sections, n_lines = synthesize(path, target_gib)
         synth_s = time.monotonic() - t0
         size_mib = os.path.getsize(path) / (1 << 20)
-
-        from curw_flo2d_data_manager_spark.sources import line_text
 
         # warmup: first job pays JVM/codegen/JIT; discard its timing so
         # the three measured variants compare like-for-like
@@ -115,8 +106,6 @@ def main() -> None:
         def _cached(tagged, cols, order_col="line_no", file_col="file", cache=False):
             return orig(tagged, cols, order_col, file_col, cache=True)
 
-        import curw_flo2d_data_manager_spark.sources.hychan as hychan_mod
-
         line_text.filldown_headers = _cached
         hychan_mod.filldown_headers = _cached
         try:
@@ -126,30 +115,24 @@ def main() -> None:
             hychan_mod.filldown_headers = orig
             spark.catalog.clearCache()
 
-        print(
-            json.dumps(
-                {
-                    "metric": "hychan_scale_parse",
-                    "file_mib": round(size_mib, 1),
-                    "sections": n_sections,
-                    "input_lines": n_lines,
-                    "parsed_rows": n_default,
-                    "synth_sec": round(synth_s, 1),
-                    "parse_sec": round(sec_default, 2),
-                    "parse_partitions": parts_default,
-                    "parse_sec_16mib_splits": round(sec_small, 2),
-                    "partitions_16mib": parts_small,
-                    "split_invariant": (n_default, fp_default)
-                    == (n_small, fp_small),
-                    "parse_sec_cached": round(sec_cached, 2),
-                    "cache_speedup": round(sec_default / sec_cached, 2),
-                    "lines_per_sec": int(n_lines / sec_default),
-                }
-            )
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return {
+        "metric": "hychan_scale_parse",
+        "file_mib": round(size_mib, 1),
+        "sections": n_sections,
+        "input_lines": n_lines,
+        "parsed_rows": n_default,
+        "synth_sec": round(synth_s, 1),
+        "parse_sec": round(sec_default, 2),
+        "parse_partitions": parts_default,
+        "parse_sec_16mib_splits": round(sec_small, 2),
+        "partitions_16mib": parts_small,
+        "split_invariant": (n_default, fp_default)
+        == (n_small, fp_small),
+        "parse_sec_cached": round(sec_cached, 2),
+        "cache_speedup": round(sec_default / sec_cached, 2),
+        "lines_per_sec": int(n_lines / sec_default),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -1,5 +1,6 @@
 """Scale smoke for k_core: millions of edges with EXACT planted truth,
-generated distributed via spark.range (the bench_triangle_scale graph).
+generated distributed via spark.range (``_scale.clique_chain``, the
+bench_triangle_scale graph).
 
 Graph = C chained cliques of size S plus ``hub_spokes`` degree-1 spoke
 nodes on node 0. With k = S-2 (4 for S=6):
@@ -22,51 +23,26 @@ python tools/bench_kcore_scale.py [n_cliques] [clique_size] [hub_spokes]
 
 from __future__ import annotations
 
-import itertools
-import json
-import os
-import sys
+import math
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import clique_chain, require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.components import k_core
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("exact",)
 
 
-def main() -> None:
-    n_cliques = int(sys.argv[1]) if len(sys.argv) > 1 else 160_000
-    size = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    hub_spokes = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000
+def main(spark, n_cliques=160_000, clique_size=6, hub_spokes=100_000) -> dict:
+    require(clique_size >= 4, "clique_size must be >= 4")
+    require(n_cliques >= 2, "n_cliques must be >= 2")
+    size = clique_size
     k = size - 2
-    assert size >= 4 and n_cliques >= 2
 
-    spark = get_spark(app_name="bench_kcore_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    pairs = list(itertools.combinations(range(size), 2))
-    i_arr = F.array(*[F.lit(i) for i, _ in pairs])
-    j_arr = F.array(*[F.lit(j) for _, j in pairs])
-    n_pairs = len(pairs)
-    clique = (F.col("id") / n_pairs).cast("long") * size
-    p = (F.col("id") % n_pairs + 1).cast("int")
-    clique_edges = spark.range(n_cliques * n_pairs).select(
-        (clique + F.element_at(i_arr, p)).alias("src"),
-        (clique + F.element_at(j_arr, p)).alias("dst"),
-    )
-    bridges = spark.range(n_cliques - 1).select(
-        (F.col("id") * size + (size - 1)).alias("src"),
-        ((F.col("id") + 1) * size).alias("dst"),
-    )
+    edges = clique_chain(spark, n_cliques, size, hub_spokes=hub_spokes)
     n_nodes = n_cliques * size
-    spokes = spark.range(hub_spokes).select(
-        F.lit(0).cast("long").alias("src"),
-        (F.col("id") + n_nodes).alias("dst"),
-    )
-    edges = clique_edges.unionByName(bridges).unionByName(spokes)
-    n_edges = n_cliques * n_pairs + (n_cliques - 1) + hub_spokes
+    n_edges = n_cliques * math.comb(size, 2) + (n_cliques - 1) + hub_spokes
 
     t0 = time.time()
     core = k_core(edges, k=k, n_rounds=4)
@@ -92,7 +68,7 @@ def main() -> None:
     elapsed = time.time() - t0
 
     ok = agg["mismatches"] == 0 and agg["survivors"] == n_nodes
-    print(json.dumps({
+    return {
         "metric": "kcore_scale",
         "k": k,
         "n_cliques": n_cliques,
@@ -105,10 +81,8 @@ def main() -> None:
         "elapsed_sec": round(elapsed, 2),
         "edges_per_sec": int(n_edges / elapsed),
         "exact": bool(ok),
-    }))
-    if not ok:
-        raise SystemExit(1)
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -17,27 +17,19 @@ python tools/bench_knn_scale.py [n_vectors] [n_blocks]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.similarity import knn_graph
-from curw_flo2d_data_manager_spark.session import get_spark
 
 DIM = 64
+CHECKS = ("planted_rank1_recall == 1",)
 
 
-def main() -> None:
-    n_vec = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    n_blocks = int(sys.argv[2]) if len(sys.argv) > 2 else 256
-    spark = get_spark(app_name="bench_knn_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_vectors=200_000, n_blocks=256) -> dict:
+    n_vec = n_vectors
     # deterministic structured vectors: the planted pair (100k, 100k+1)
     # shares base_id, hence the same block and near-identical direction
     base_id = (
@@ -92,22 +84,18 @@ def main() -> None:
         ).count()
     )
     n_planted = n_vec // 100
-    print(
-        json.dumps(
-            {
-                "metric": "knn_graph_scale",
-                "n_vectors": n_vec,
-                "n_blocks": n_blocks,
-                "n_edges": n_edges,
-                "planted_rank1_recall": round(planted / max(1, n_planted), 4),
-                "graph_sec": round(t_graph, 3),
-                "unit": "sec",
-            }
-        )
-    )
     edges.unpersist()
     emb.unpersist()
+    return {
+        "metric": "knn_graph_scale",
+        "n_vectors": n_vec,
+        "n_blocks": n_blocks,
+        "n_edges": n_edges,
+        "planted_rank1_recall": round(planted / max(1, n_planted), 4),
+        "graph_sec": round(t_graph, 3),
+        "unit": "sec",
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -25,29 +25,23 @@ python tools/bench_linkpred_scale.py [n_gadgets] [n_spokes]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.linkpredict import (
     link_prediction_scores,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("ok",)
 
 
-def main() -> None:
-    n_gadgets = int(sys.argv[1]) if len(sys.argv) > 1 else 40_000
-    m = int(sys.argv[2]) if len(sys.argv) > 2 else 12
-    assert n_gadgets >= 3 and m >= 2
+def main(spark, n_gadgets=40_000, n_spokes=12) -> dict:
+    m = n_spokes
+    require(n_gadgets >= 3, "n_gadgets must be >= 3")
+    require(m >= 2, "n_spokes must be >= 2")
     stride = m + 1
-
-    spark = get_spark(app_name="bench_linkpred_scale")
-    spark.sparkContext.setLogLevel("ERROR")
 
     gadget = (F.col("id") / m).cast("long")
     spoke = (F.col("id") % m).cast("long")
@@ -98,27 +92,18 @@ def main() -> None:
         and agg.max_common == 1
         and agg.min_common == 1
     )
-    print(
-        json.dumps(
-            {
-                "metric": "linkpred_scale",
-                "n_edges": n_edges,
-                "n_pairs": agg.n_pairs,
-                "expected_pairs": exp_pairs,
-                "ra_sum_exact_match": agg.ra_sum == exp_ra_sum,
-                "jaccard1_rows": agg.n_jacc1,
-                "value": round(elapsed, 2),
-                "unit": "sec",
-                "ok": ok,
-            }
-        )
-    )
-    if not ok:
-        raise SystemExit(
-            f"MISMATCH: got ({agg.n_pairs}, {agg.ra_sum}, {agg.n_jacc1}) "
-            f"expected ({exp_pairs}, {exp_ra_sum}, {exp_jacc1})"
-        )
+    return {
+        "metric": "linkpred_scale",
+        "n_edges": n_edges,
+        "n_pairs": agg.n_pairs,
+        "expected_pairs": exp_pairs,
+        "ra_sum_exact_match": agg.ra_sum == exp_ra_sum,
+        "jaccard1_rows": agg.n_jacc1,
+        "value": round(elapsed, 2),
+        "unit": "sec",
+        "ok": ok,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

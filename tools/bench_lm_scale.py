@@ -26,13 +26,9 @@ python tools/bench_lm_scale.py [n_docs] [n_vectors] (default 200000 200000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.caching import release_caches
@@ -41,18 +37,15 @@ from curw_flo2d_data_manager_spark.operators.similarity import (
     semantic_dedup_assigned,
 )
 from curw_flo2d_data_manager_spark.operators.textstats import bigram_logprob
-from curw_flo2d_data_manager_spark.session import get_spark
 
 DIM = 64
 WORDS_PER_DOC = 60
 VOCAB = 5000
+CHECKS = ("salad_separated", "planted_drop_recall == 1")
 
 
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    n_vec = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
-    spark = get_spark(app_name="bench_lm_scale")
-    spark.sparkContext.setLogLevel("ERROR")
+def main(spark, n_docs=200_000, n_vectors=200_000) -> dict:
+    n_vec = n_vectors
     out: dict = {"metric": "lm_semdedup_scale", "n_docs": n_docs, "n_vectors": n_vec}
 
     # --- bigram LM over synthetic text ------------------------------
@@ -157,8 +150,8 @@ def main() -> None:
     out["total_dropped"] = int(agg["total_dropped"])
     assigned.unpersist()
     corpus.unpersist()
-    print(json.dumps(out))
+    return out
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -19,41 +19,28 @@ python tools/bench_lpa_scale.py [n_cliques] [clique_size] [iters]
 
 from __future__ import annotations
 
-import itertools
-import json
-import os
-import sys
+import math
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import clique_chain, require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.components import (
     label_propagation,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("exact",)
 
 
-def main() -> None:
-    n_cliques = int(sys.argv[1]) if len(sys.argv) > 1 else 44_000
-    size = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    iters = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    assert size >= 4 and iters >= 2, "truth argument needs S>=4, iters>=2"
+def main(spark, n_cliques=44_000, clique_size=10, iters=3) -> dict:
+    require(clique_size >= 4, "clique_size must be >= 4 for the two-round truth")
+    require(iters >= 2, "iters must be >= 2 for the two-round truth")
+    size = clique_size
 
-    spark = get_spark(app_name="bench_lpa_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    pairs = list(itertools.combinations(range(size), 2))
-    i_arr = F.array(*[F.lit(i) for i, _ in pairs])
-    j_arr = F.array(*[F.lit(j) for _, j in pairs])
-    n_pairs = len(pairs)
-    clique = (F.col("id") / n_pairs).cast("long") * size
-    p = (F.col("id") % n_pairs + 1).cast("int")  # element_at is 1-based
-    edges = spark.range(n_cliques * n_pairs).select(
-        (clique + F.element_at(i_arr, p)).alias("id_a"),
-        (clique + F.element_at(j_arr, p)).alias("id_b"),
+    edges = clique_chain(spark, n_cliques, size, bridges=False).select(
+        F.col("src").alias("id_a"), F.col("dst").alias("id_b")
     )
+    n_pairs = math.comb(size, 2)
 
     t0 = time.time()
     labels = label_propagation(edges, n_iters=iters)
@@ -75,23 +62,19 @@ def main() -> None:
         and agg["mismatches"] == 0
         and agg["n_communities"] == n_cliques
     )
-    print(
-        json.dumps(
-            {
-                "metric": "lpa_scale",
-                "edges": n_cliques * n_pairs,
-                "nodes": n_cliques * size,
-                "cliques": n_cliques,
-                "iters": iters,
-                "exact": bool(exact),
-                "mismatches": int(agg["mismatches"]),
-                "communities": int(agg["n_communities"]),
-                "sec": round(lpa_s, 2),
-                "unit": "sec",
-            }
-        )
-    )
+    return {
+        "metric": "lpa_scale",
+        "edges": n_cliques * n_pairs,
+        "nodes": n_cliques * size,
+        "cliques": n_cliques,
+        "iters": iters,
+        "exact": bool(exact),
+        "mismatches": int(agg["mismatches"]),
+        "communities": int(agg["n_communities"]),
+        "sec": round(lpa_s, 2),
+        "unit": "sec",
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -14,14 +14,11 @@ python tools/bench_markup_scale.py [n_docs]  (default 2_000_000)
 
 from __future__ import annotations
 
-import json
-import os
+import hashlib
 import re
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.markup import (
@@ -31,7 +28,8 @@ from curw_flo2d_data_manager_spark.operators.markup import (
     _REGEX_STEPS,
     strip_html,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("ok",)
 
 
 def _py_strip(s: str) -> str:
@@ -72,8 +70,6 @@ def _wrapped_expr():
 
 
 def _py_wrapped(i: int) -> str:
-    import hashlib
-
     h = hashlib.md5(str(i).encode()).hexdigest()
     return (
         f'<html><head><style>p {{color: #{i % 999}}}</style><!-- doc {i} -->'
@@ -98,8 +94,6 @@ def _clean_expr():
 
 
 def _py_clean(i: int) -> str:
-    import hashlib
-
     h = hashlib.md5(str(i).encode()).hexdigest()
     return (
         f"payload text {h}  with plain   words and  numbers "
@@ -125,12 +119,8 @@ def _run_arm(spark, n, expr):
     return in_bytes, elapsed, agg, sample
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-
-    spark = get_spark(app_name="bench_markup_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_docs=2_000_000) -> dict:
+    n = n_docs
     in_bytes, elapsed, agg, sample = _run_arm(spark, n, _wrapped_expr())
     ok = agg["docs"] == n and len(sample) == 200
     for i, got in sample.items():
@@ -143,27 +133,21 @@ def main() -> None:
         cok &= got == _py_strip(_py_clean(i))
 
     ok = bool(ok and cok)
-    print(
-        json.dumps(
-            {
-                "metric": "markup_strip_scale",
-                "n_docs": n,
-                "input_mb": round(in_bytes / 1e6, 1),
-                "value": round(elapsed, 2),
-                "unit": "sec",
-                "docs_per_sec": int(n / elapsed),
-                "mb_per_sec": round(in_bytes / 1e6 / elapsed, 1),
-                "clean_docs_per_sec": int(n / ce),
-                "clean_mb_per_sec": round(cb / 1e6 / ce, 1),
-                "clean_over_wrapped": round(elapsed / ce, 2),
-                "sampled_rows_exact": bool(ok),
-                "ok": ok,
-            }
-        )
-    )
-    if not ok:
-        raise SystemExit("markup strip truth MISMATCH")
+    return {
+        "metric": "markup_strip_scale",
+        "n_docs": n,
+        "input_mb": round(in_bytes / 1e6, 1),
+        "value": round(elapsed, 2),
+        "unit": "sec",
+        "docs_per_sec": int(n / elapsed),
+        "mb_per_sec": round(in_bytes / 1e6 / elapsed, 1),
+        "clean_docs_per_sec": int(n / ce),
+        "clean_mb_per_sec": round(cb / 1e6 / ce, 1),
+        "clean_over_wrapped": round(elapsed / ce, 2),
+        "sampled_rows_exact": bool(ok),
+        "ok": ok,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -22,13 +22,9 @@ python tools/bench_mltrain_scale.py [n_docs] [buckets] [iters]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.mltrain import (
@@ -36,17 +32,11 @@ from curw_flo2d_data_manager_spark.operators.mltrain import (
     train_linear_classifier,
 )
 from curw_flo2d_data_manager_spark.operators.textstats import words
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("exact",)
 
 
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    iters = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-
-    spark = get_spark(app_name="bench_mltrain_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_docs=1_000_000, buckets=64, iters=3) -> dict:
     # one signal token + 5 per-doc md5 noise tokens: the signal is a
     # minority of every bag and the 64 hash buckets carry real
     # collisions from ~5M distinct noise tokens
@@ -109,7 +99,7 @@ def main() -> None:
         ).collect()
     }
     ok = (w1 == w2) and acc >= 0.95
-    print(json.dumps({
+    return {
         "metric": "mltrain_scale",
         "n_docs": n_docs,
         "buckets": buckets,
@@ -119,10 +109,8 @@ def main() -> None:
         "train_accuracy": acc,
         "rerun_bit_identical": w1 == w2,
         "exact": bool(ok),
-    }))
-    if not ok:
-        raise SystemExit(1)
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -21,21 +21,17 @@ python tools/bench_pagerank_scale.py [n_ring_edges] [iters]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.pagerank import pagerank
-from curw_flo2d_data_manager_spark.session import get_spark
 
 RING_LEN = 1000
 N_SPOKES = 10_000
 DAMPING = 0.85
+CHECKS = ("ok",)
 
 
 def star_model(n_total: int, iters: int) -> dict[str, float]:
@@ -54,15 +50,10 @@ def star_model(n_total: int, iters: int) -> dict[str, float]:
     return {"hub": hub, "spoke1": spoke1, "spoke": spoke}
 
 
-def main() -> None:
-    n_ring_edges = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    iters = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+def main(spark, n_ring_edges=2_000_000, iters=5) -> dict:
     n_rings = n_ring_edges // RING_LEN
     n_ring_nodes = n_rings * RING_LEN
     n_total = n_ring_nodes + N_SPOKES + 1
-
-    spark = get_spark(app_name="bench_pagerank_scale")
-    spark.sparkContext.setLogLevel("ERROR")
 
     # star occupies ids 0..N_SPOKES; rings start after it
     base = N_SPOKES + 1
@@ -112,24 +103,18 @@ def main() -> None:
         "sums_to_one": abs(stats["total"] - 1.0) < 1e-6,
         "all_nodes_ranked": stats["n_nodes"] == n_total,
     }
-    print(
-        json.dumps(
-            {
-                "metric": "pagerank_scale",
-                "n_edges": n_ring_edges + N_SPOKES + 1,
-                "n_nodes": n_total,
-                "iters": iters,
-                "elapsed_s": round(elapsed, 1),
-                "sec_per_iter": round(elapsed / iters, 2),
-                "ring_max_dev": float(stats["ring_max_dev"]),
-                "checks": checks,
-                "ok": all(checks.values()),
-            }
-        )
-    )
-    if not all(checks.values()):
-        raise SystemExit(1)
+    return {
+        "metric": "pagerank_scale",
+        "n_edges": n_ring_edges + N_SPOKES + 1,
+        "n_nodes": n_total,
+        "iters": iters,
+        "elapsed_s": round(elapsed, 1),
+        "sec_per_iter": round(elapsed / iters, 2),
+        "ring_max_dev": float(stats["ring_max_dev"]),
+        "checks": checks,
+        "ok": all(checks.values()),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

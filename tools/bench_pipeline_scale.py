@@ -59,15 +59,11 @@ python tools/bench_pipeline_scale.py [n_docs]   (default 10_000_000)
 
 from __future__ import annotations
 
-import json
-import os
 import shutil
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
+from _scale import require, run
+from bench_bpe_merges_scale import _pieces
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -82,7 +78,6 @@ from curw_flo2d_data_manager_spark.operators.textstats import (
     domain_mixture,
     words,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 COMMON = "the and of to is in that for it was"          # 10 en markers
 FOREIGN = " ".join(
@@ -92,6 +87,7 @@ WORDS_GOOD = 60
 BUDGET = 480  # 8 docs per bin exactly
 NUM_HASHES = 16
 BANDS = 4
+CHECKS = ("ok",)
 
 
 def _build_merges_file(path: str, common_words: list[str]) -> None:
@@ -118,31 +114,10 @@ def _build_merges_file(path: str, common_words: list[str]) -> None:
         fh.write("\n".join(lines) + "\n")
 
 
-def _py_pieces(word: str, vset: frozenset, maxlen: int, max_steps: int) -> int:
-    """Plain-Python greedy reference (engine horizon + residue rule —
-    mirrors tools/bench_bpe_merges_scale._pieces)."""
-    pos, cnt = 0, 0
-    n = len(word)
-    while pos < n and cnt < max_steps:
-        step = 1
-        for ln in range(min(maxlen, n - pos), 1, -1):
-            if word[pos:pos + ln] in vset:
-                step = ln
-                break
-        pos += step
-        cnt += 1
-    return cnt + (n - pos)
-
-
-def main() -> None:
-    args = [a for a in sys.argv[1:] if a != "--bpe"]
-    use_bpe = "--bpe" in sys.argv[1:]
-    n = int(args[0]) if args else 10_000_000
-    assert n % 10 == 0, "n must be a multiple of 10 (full blocks)"
+def main(spark, n_docs=10_000_000, bpe=False) -> dict:
+    n, use_bpe = n_docs, bpe
+    require(n % 10 == 0, "n_docs must be a multiple of 10 (full blocks)")
     blocks = n // 10
-
-    spark = get_spark(app_name="bench_pipeline_scale")
-    spark.sparkContext.setLogLevel("ERROR")
 
     work = "/tmp/pipeline_scale"
     shutil.rmtree(work, ignore_errors=True)
@@ -413,7 +388,6 @@ def main() -> None:
     bpe_out: dict = {}
     if use_bpe:
         from curw_flo2d_data_manager_spark.operators.bpe import (
-            MAX_STEPS,
             bpe_token_counts,
             load_merges,
         )
@@ -454,7 +428,7 @@ def main() -> None:
 
         # closed-form replay (sequential, exact)
         c_common = sum(
-            _py_pieces(w, vset, maxlen, MAX_STEPS) for w in common_words
+            _pieces(w, vset, maxlen) for w in common_words
         )
         digits_sum_j = sum(len(str(j)) for j in range(1, 51))  # 91
         exp_src_tok = {"s0": 0, "s1": 0, "s2": 0}
@@ -490,7 +464,7 @@ def main() -> None:
                 f"{p}{b}x{j}" for j in range(1, 51)
             )
             exp = sum(
-                _py_pieces(w, vset, maxlen, MAX_STEPS)
+                _pieces(w, vset, maxlen)
                 for w in text.split()
             )
             sample_ok &= got_counts.get(did) == exp
@@ -516,49 +490,44 @@ def main() -> None:
         }
 
     elapsed = t_import + t_pipeline + bpe_out.get("bpe_budget_s", 0.0)
-    print(
-        json.dumps(
-            {
-                "metric": "pipeline_scale",
-                "n_docs": n,
-                "value": round(elapsed, 2),
-                "unit": "sec",
-                "import_strip_s": round(t_import, 2),
-                "fused_downstream_s": round(t_pipeline, 2),
-                "stage_s": {
-                    "project_filter_sig": round(t_proj, 2),
-                    "lsh_cc_keepone": round(t_dedup, 2),
-                    "mixture_pack": round(t_mix_pack, 2),
-                },
-                "docs_per_sec": int(n / elapsed),
-                "filtered": n_filtered,
-                "survivors": n_survivors,
-                "bins": int(n_bins),
-                "corpus_scans": {
-                    "raw": 1,
-                    "clean": 2 if use_bpe else 1,
-                    "tokenize": 1,
-                },
-                **bpe_out,
-                "exact": {
-                    "filtered": n_filtered == exp_filtered,
-                    "survivors": n_survivors == exp_survivors,
-                    "survivor_id_sum": id_sum == exp_id_sum,
-                    "mixture": {k: v[0] for k, v in mix.items()} == exp_src,
-                    "bins": bool(
-                        n_bins == exp_bins
-                        and min_toks == BUDGET
-                        and max_toks == BUDGET
-                    ),
-                },
-                "ok": bool(ok),
-            }
-        )
-    )
+    record = {
+        "metric": "pipeline_scale",
+        "n_docs": n,
+        "value": round(elapsed, 2),
+        "unit": "sec",
+        "import_strip_s": round(t_import, 2),
+        "fused_downstream_s": round(t_pipeline, 2),
+        "stage_s": {
+            "project_filter_sig": round(t_proj, 2),
+            "lsh_cc_keepone": round(t_dedup, 2),
+            "mixture_pack": round(t_mix_pack, 2),
+        },
+        "docs_per_sec": int(n / elapsed),
+        "filtered": n_filtered,
+        "survivors": n_survivors,
+        "bins": int(n_bins),
+        "corpus_scans": {
+            "raw": 1,
+            "clean": 2 if use_bpe else 1,
+            "tokenize": 1,
+        },
+        **bpe_out,
+        "exact": {
+            "filtered": n_filtered == exp_filtered,
+            "survivors": n_survivors == exp_survivors,
+            "survivor_id_sum": id_sum == exp_id_sum,
+            "mixture": {k: v[0] for k, v in mix.items()} == exp_src,
+            "bins": bool(
+                n_bins == exp_bins
+                and min_toks == BUDGET
+                and max_toks == BUDGET
+            ),
+        },
+        "ok": bool(ok),
+    }
     shutil.rmtree(work, ignore_errors=True)
-    if not ok:
-        raise SystemExit("pipeline scale truth MISMATCH")
+    return record
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -25,23 +25,19 @@ python tools/bench_pq_scale.py [n_vectors] (default 1000000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 import numpy as np
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.similarity import (
+    _unit,
     cosine_topk,
     pq_adc_rerank_topk,
     pq_adc_topk,
     pq_assign,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 DIM = 64
 M_SUB = 8          # subspaces of 8 dims
@@ -68,11 +64,8 @@ def train_codebooks(sample: np.ndarray, iters: int = 12, seed: int = 7):
     return books
 
 
-def main() -> None:
-    n_vec = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    spark = get_spark(app_name="bench_pq_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_vectors=1_000_000) -> dict:
+    n_vec = n_vectors
     # per-id random direction (hash noise) so non-partners are nearly
     # orthogonal; every 100th vector perturbs its predecessor slightly
     base_id = (
@@ -88,8 +81,6 @@ def main() -> None:
         ).alias(f"d{d}")
         for d in range(DIM)
     ]
-    from curw_flo2d_data_manager_spark.operators.similarity import _unit
-
     # PQ codes quantize SQUARED L2; ranking by ADC matches the cosine
     # baseline only over L2-NORMALIZED vectors (||q-x||^2 = 2 - 2cos),
     # so normalize up front — the standard cosine-PQ recipe.
@@ -153,35 +144,31 @@ def main() -> None:
         (r["query_id"], r["corpus_id"]) for r in rr if r["rank"] == 2
     }  # rank 1 is the query itself (it is in the corpus)
 
-    print(
-        json.dumps(
-            {
-                "metric": "pq_scale",
-                "n_vectors": n_vec,
-                "n_codes": n_codes,
-                "n_queries": n_q,
-                "m_sub": M_SUB,
-                "ksub": KSUB,
-                "train_sample": len(sample),
-                "train_sec": round(t_train, 3),
-                "assign_sec": round(t_assign, 3),
-                "adc_sec": round(t_adc, 3),
-                "rerank_sec": round(t_rerank, 3),
-                "adc_partner_recall": round(len(adc_hits & exact) / n_q, 4),
-                "rerank_partner_recall": round(len(rr_hits & exact) / n_q, 4),
-                "rerank_partner_at_rank2": round(
-                    len(rr_rank1 & exact) / n_q, 4
-                ),
-                "code_bytes_per_row": 8,
-                "raw_bytes_per_row": DIM * 4,
-                "unit": "sec",
-            }
-        )
-    )
     codes.unpersist()
     queries.unpersist()
     emb.unpersist()
+    return {
+        "metric": "pq_scale",
+        "n_vectors": n_vec,
+        "n_codes": n_codes,
+        "n_queries": n_q,
+        "m_sub": M_SUB,
+        "ksub": KSUB,
+        "train_sample": len(sample),
+        "train_sec": round(t_train, 3),
+        "assign_sec": round(t_assign, 3),
+        "adc_sec": round(t_adc, 3),
+        "rerank_sec": round(t_rerank, 3),
+        "adc_partner_recall": round(len(adc_hits & exact) / n_q, 4),
+        "rerank_partner_recall": round(len(rr_hits & exact) / n_q, 4),
+        "rerank_partner_at_rank2": round(
+            len(rr_rank1 & exact) / n_q, 4
+        ),
+        "code_bytes_per_row": 8,
+        "raw_bytes_per_row": DIM * 4,
+        "unit": "sec",
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main)

@@ -14,30 +14,22 @@ Usage: python tools/bench_raincell_scale.py [steps]
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.plans.raincell import raincell_lines
-from curw_flo2d_data_manager_spark.session import get_spark
 from curw_flo2d_data_manager_spark.sinks.ordered_text import write_ordered_text
 
 N_CELLS = 39_526  # res/grids/flo2d_150_v2m.csv
 STEP_MIN = 5
+CHECKS = ("single_ok",)
 
 
-def main() -> None:
-    steps = int(sys.argv[1]) if len(sys.argv) > 1 else 288
-    spark = get_spark(app_name="bench_raincell_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, steps=288) -> dict:
     start = "2024-01-01 00:00:00"
     end_ts = F.lit(start).cast("timestamp") + F.expr(
         f"INTERVAL {steps * STEP_MIN} MINUTES"
@@ -60,14 +52,13 @@ def main() -> None:
     build_s = time.monotonic() - t0
 
     expected = 1 + steps * (N_CELLS + 1)
-    tmp = tempfile.mkdtemp(prefix="raincell_scale_")
-    out = os.path.join(tmp, "RAINCELL.DAT")
-    t0 = time.monotonic()
-    write_ordered_text(lines, out, sort_cols=["block_rank", "intra_rank"])
-    render_s = time.monotonic() - t0
-    n_lines = sum(1 for _ in open(out))
-    shutil.rmtree(tmp, ignore_errors=True)
-    result = {
+    with tempfile.TemporaryDirectory(prefix="raincell_scale_") as tmp:
+        out = os.path.join(tmp, "RAINCELL.DAT")
+        t0 = time.monotonic()
+        write_ordered_text(lines, out, sort_cols=["block_rank", "intra_rank"])
+        render_s = time.monotonic() - t0
+        n_lines = sum(1 for _ in open(out))
+    return {
         "metric": "raincell_scale_render",
         "steps": steps,
         "cells": N_CELLS,
@@ -77,8 +68,7 @@ def main() -> None:
         "single_lines_per_sec": int(n_lines / render_s),
         "single_ok": n_lines == expected,
     }
-    print(json.dumps(result))
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

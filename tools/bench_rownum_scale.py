@@ -14,27 +14,18 @@ python tools/bench_rownum_scale.py [rows] [naive_rows]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.rownum import global_row_number
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("exact_permutation", "order_inversions == 0")
 
 
-def main() -> None:
-    rows = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000_000
-    naive_rows = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000_000
-
-    spark = get_spark(app_name="bench_rownum_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, rows=50_000_000, naive_rows=5_000_000) -> dict:
     def data(n):
         return spark.range(n).select(
             F.xxhash64("id").alias("k"), F.col("id").alias("uid")
@@ -78,23 +69,19 @@ def main() -> None:
     naive.agg(F.sum("row_num")).collect()
     naive_s = time.time() - t0
 
-    print(
-        json.dumps(
-            {
-                "metric": "rownum_scale",
-                "rows": rows,
-                "exact_permutation": bool(permutation),
-                "order_inversions": int(inversions),
-                "distributed_sec": round(dist_s, 2),
-                "distributed_mrows_per_s": round(rows / dist_s / 1e6, 2),
-                "naive_rows": naive_rows,
-                "naive_single_partition_sec": round(naive_s, 2),
-                "naive_mrows_per_s": round(naive_rows / naive_s / 1e6, 2),
-                "unit": "sec",
-            }
-        )
-    )
+    return {
+        "metric": "rownum_scale",
+        "rows": rows,
+        "exact_permutation": bool(permutation),
+        "order_inversions": int(inversions),
+        "distributed_sec": round(dist_s, 2),
+        "distributed_mrows_per_s": round(rows / dist_s / 1e6, 2),
+        "naive_rows": naive_rows,
+        "naive_single_partition_sec": round(naive_s, 2),
+        "naive_mrows_per_s": round(naive_rows / naive_s / 1e6, 2),
+        "unit": "sec",
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

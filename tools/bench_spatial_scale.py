@@ -13,29 +13,20 @@ python tools/bench_spatial_scale.py [n_left] [n_right]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.spatial import radius_grid_join
-from curw_flo2d_data_manager_spark.session import get_spark
 
 EXTENT = 1000.0
 RADIUS = 1.0
 PLANT_EVERY = 50
+CHECKS = ("planted_exact",)
 
 
-def main() -> None:
-    n_left = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_right = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
-    spark = get_spark(app_name="bench_spatial_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_left=1_000_000, n_right=1_000_000) -> dict:
     def coord(seed_col, salt):
         return (
             (F.abs(F.xxhash64(seed_col, F.lit(salt))) % 1_000_000)
@@ -76,22 +67,17 @@ def main() -> None:
     want_planted = len(
         [i for i in range(0, n_right, PLANT_EVERY) if i < n_left]
     )
-    print(
-        json.dumps(
-            {
-                "metric": "spatial_scale",
-                "n_left": n_left,
-                "n_right": n_right,
-                "n_pairs": agg["n_pairs"],
-                "planted_found": agg["planted_found"],
-                "planted_expected": want_planted,
-                "planted_exact": agg["planted_found"] == want_planted,
-                "sec": round(elapsed, 3),
-            }
-        )
-    )
-    spark.stop()
+    return {
+        "metric": "spatial_scale",
+        "n_left": n_left,
+        "n_right": n_right,
+        "n_pairs": agg["n_pairs"],
+        "planted_found": agg["planted_found"],
+        "planted_expected": want_planted,
+        "planted_exact": agg["planted_found"] == want_planted,
+        "sec": round(elapsed, 3),
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -17,13 +17,9 @@ python tools/bench_sq_scale.py [n_vectors] [n_queries]
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.similarity import (
@@ -31,18 +27,14 @@ from curw_flo2d_data_manager_spark.operators.similarity import (
     sq_assign,
     sq_bounds,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 
 DIM = 64
 K = 10
+CHECKS = ("recall_ok",)
 
 
-def main() -> None:
-    n_vec = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-    spark = get_spark(app_name="bench_sq_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_vectors=1_000_000, n_queries=100) -> dict:
+    n_vec, n_q = n_vectors, n_queries
     dims = [
         ((F.xxhash64(F.col("vec_id") * DIM + d) % 2000) / 1000.0 - 1.0).alias(
             f"d{d}"
@@ -87,23 +79,18 @@ def main() -> None:
     t_adc = time.time() - t0
     recall = hits / n_q
 
-    print(
-        json.dumps(
-            {
-                "metric": "sq_scale",
-                "n_vectors": n_vec,
-                "n_coded": n_coded,
-                "n_queries": n_q,
-                "bounds_sec": round(t_bounds, 3),
-                "assign_sec": round(t_assign, 3),
-                "adc_topk_sec": round(t_adc, 3),
-                "copy_in_topk_recall": round(recall, 4),
-                "recall_ok": recall >= 0.99,
-            }
-        )
-    )
-    spark.stop()
+    return {
+        "metric": "sq_scale",
+        "n_vectors": n_vec,
+        "n_coded": n_coded,
+        "n_queries": n_q,
+        "bounds_sec": round(t_bounds, 3),
+        "assign_sec": round(t_assign, 3),
+        "adc_topk_sec": round(t_adc, 3),
+        "copy_in_topk_recall": round(recall, 4),
+        "recall_ok": recall >= 0.99,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -38,22 +38,18 @@ python tools/bench_stream_neardup_scale.py [docs_per_wave] [waves]
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.dedup import (
     minhash_signature,
     with_shingle_hashes,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
 from curw_flo2d_data_manager_spark.streaming.ingest import corpus_neardup_stream
 
 NUM_HASHES = 32
@@ -65,6 +61,7 @@ BOILER_FRAC = 10   # 1-in-10 docs carry the shared prefix
 PLANT_FRAC = 20    # waves >0 re-send 1-in-20 of wave 0's diverse docs
 
 _PREFIX = " ".join(f"b{i}" for i in range(14))
+CHECKS = ("ok",)
 
 
 def _wave_df(spark, per_wave: int, wave: int):
@@ -146,22 +143,18 @@ def _banded(df):
     ).select("_bid", "_b.band_idx", "_b.band_hash")
 
 
-def main() -> None:
-    per_wave = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    waves = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    spark = get_spark(app_name="bench_stream_neardup_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="stream_neardup_scale_")
-    watch = os.path.join(root, "in")
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(watch)
+def main(spark, docs_per_wave=200_000, waves=4) -> dict:
+    per_wave = docs_per_wave
+    with tempfile.TemporaryDirectory(prefix="stream_neardup_scale_") as root:
+        watch = os.path.join(root, "in")
+        out = os.path.join(root, "out")
+        ckpt = os.path.join(root, "ckpt")
+        os.makedirs(watch)
 
-    per_wave_planted = len(range(1, per_wave, PLANT_FRAC))
-    wave_stats = []
-    expected_admitted = 0
-    expected_id_sum = 0
-    try:
+        per_wave_planted = len(range(1, per_wave, PLANT_FRAC))
+        wave_stats = []
+        expected_admitted = 0
+        expected_id_sum = 0
         for w in range(waves):
             df = _wave_df(spark, per_wave, w)
             # closed form for the DIVERSE population (ids not divisible
@@ -267,29 +260,28 @@ def main() -> None:
         planted_admitted = int(got["planted_n"])
         boiler_total = waves * (per_wave // BOILER_FRAC)
         boiler_est_drops = boiler_total - int(got["boil_n"])
-        print(json.dumps({
-            "metric": "stream_neardup_scale",
-            "docs_per_wave": per_wave,
-            "waves": waves,
-            "planted_per_wave": per_wave_planted,
-            "value": round(sum(s["wall_s"] for s in wave_stats), 2),
-            "unit": "sec",
-            "wave_stats": wave_stats,
-            "admitted": int(got["n"]),
-            "diverse_admitted": int(got["div_n"]),
-            "expected_diverse": expected_admitted,
-            "boiler_admitted": int(got["boil_n"]),
-            "boiler_est_drops": boiler_est_drops,
-            "planted_admitted": planted_admitted,
-            "exact": {"diverse_count": exact_count,
-                      "diverse_id_sum": exact_id_sum,
-                      "planted_all_dropped": planted_admitted == 0},
-            "ok": exact_count and exact_id_sum and planted_admitted == 0
-            and boiler_est_drops <= boiler_total // 1000,
-        }))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return {
+        "metric": "stream_neardup_scale",
+        "docs_per_wave": per_wave,
+        "waves": waves,
+        "planted_per_wave": per_wave_planted,
+        "value": round(sum(s["wall_s"] for s in wave_stats), 2),
+        "unit": "sec",
+        "wave_stats": wave_stats,
+        "admitted": int(got["n"]),
+        "diverse_admitted": int(got["div_n"]),
+        "expected_diverse": expected_admitted,
+        "boiler_admitted": int(got["boil_n"]),
+        "boiler_est_drops": boiler_est_drops,
+        "planted_admitted": planted_admitted,
+        "exact": {"diverse_count": exact_count,
+                  "diverse_id_sum": exact_id_sum,
+                  "planted_all_dropped": planted_admitted == 0},
+        "ok": exact_count and exact_id_sum and planted_admitted == 0
+        and boiler_est_drops <= boiler_total // 1000,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -18,31 +18,26 @@ python tools/bench_text_scale.py [n_docs] (default 100000)
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import run
 from pyspark.sql import functions as F
 
-from curw_flo2d_data_manager_spark.operators.dedup import winnow_pairs
+from curw_flo2d_data_manager_spark.operators.dedup import passage_dedup, winnow_pairs
 from curw_flo2d_data_manager_spark.operators.packing import (
     bin_stats,
     pack_sequences,
 )
-from curw_flo2d_data_manager_spark.session import get_spark
+from curw_flo2d_data_manager_spark.operators.textstats import tfidf_top_terms
+
+CHECKS = ("passage_pair_recall == 1",)
+
 
 def _pair():
     return (F.col("doc_id") / 25).cast("long").cast("string")
 
 
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    spark = get_spark(app_name="bench_text_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def main(spark, n_docs=100_000) -> dict:
     # ~60 synthetic-vocab words per doc; every 25th/25th+1 doc pair
     # embeds the same fixed passage mid-document
     words_expr = F.concat_ws(
@@ -116,8 +111,6 @@ def main() -> None:
     # 8-word windows across the random-vocab body are ~impossible, so
     # the expected dropped-passage count is bounded and the main
     # assertion is throughput + a sane kept fraction.
-    from curw_flo2d_data_manager_spark.operators.dedup import passage_dedup
-
     t0 = time.monotonic()
     p = passage_dedup(docs, "doc_id", "text", passage_words=8)
     prow = p.agg(
@@ -126,39 +119,33 @@ def main() -> None:
     ).first()
     passage_s = time.monotonic() - t0
 
-    from curw_flo2d_data_manager_spark.operators.textstats import tfidf_top_terms
-
     t0 = time.monotonic()
     tf_top = tfidf_top_terms(docs, "doc_id", "text", k=3)
     n_tfidf = tf_top.count()
     tfidf_s = time.monotonic() - t0
 
-    print(
-        json.dumps(
-            {
-                "metric": "text_scale",
-                "docs": n,
-                "winnow_pairs_sec": round(winnow_s, 2),
-                "winnow_pairs_found": n_found,
-                "planted_passage_pairs": n_planted,
-                "passage_pair_recall": round(recall, 4),
-                "pack_sec": round(pack_s, 2),
-                "pack_docs_per_sec": int(n / pack_s),
-                "pack_bins": row["bins"],
-                "pack_mean_utilization": round(row["util"], 4),
-                "passage_dedup_sec": round(passage_s, 2),
-                "passage_dedup_passages": prow["n_passages"],
-                "passage_dedup_kept_frac": round(
-                    prow["kept"] / max(prow["n_passages"], 1), 4
-                ),
-                "tfidf_sec": round(tfidf_s, 2),
-                "tfidf_rows": n_tfidf,
-            }
-        )
-    )
     pairs.unpersist()
     docs.unpersist()
+    return {
+        "metric": "text_scale",
+        "docs": n,
+        "winnow_pairs_sec": round(winnow_s, 2),
+        "winnow_pairs_found": n_found,
+        "planted_passage_pairs": n_planted,
+        "passage_pair_recall": round(recall, 4),
+        "pack_sec": round(pack_s, 2),
+        "pack_docs_per_sec": int(n / pack_s),
+        "pack_bins": row["bins"],
+        "pack_mean_utilization": round(row["util"], 4),
+        "passage_dedup_sec": round(passage_s, 2),
+        "passage_dedup_passages": prow["n_passages"],
+        "passage_dedup_kept_frac": round(
+            prow["kept"] / max(prow["n_passages"], 1), 4
+        ),
+        "tfidf_sec": round(tfidf_s, 2),
+        "tfidf_rows": n_tfidf,
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)

@@ -26,52 +26,25 @@ python tools/bench_triangle_scale.py [n_cliques] [clique_size] [hub_spokes]
 
 from __future__ import annotations
 
-import itertools
-import json
 import math
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from _scale import clique_chain, require, run
 from pyspark.sql import functions as F
 
 from curw_flo2d_data_manager_spark.operators.triangles import triangle_counts
-from curw_flo2d_data_manager_spark.session import get_spark
+
+CHECKS = ("exact",)
 
 
-def main() -> None:
-    n_cliques = int(sys.argv[1]) if len(sys.argv) > 1 else 160_000
-    size = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    hub_spokes = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000
-    assert size >= 3 and n_cliques >= 2
+def main(spark, n_cliques=160_000, clique_size=6, hub_spokes=100_000) -> dict:
+    require(clique_size >= 3, "clique_size must be >= 3")
+    require(n_cliques >= 2, "n_cliques must be >= 2")
+    size = clique_size
 
-    spark = get_spark(app_name="bench_triangle_scale")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    pairs = list(itertools.combinations(range(size), 2))
-    i_arr = F.array(*[F.lit(i) for i, _ in pairs])
-    j_arr = F.array(*[F.lit(j) for _, j in pairs])
-    n_pairs = len(pairs)
-    clique = (F.col("id") / n_pairs).cast("long") * size
-    p = (F.col("id") % n_pairs + 1).cast("int")
-    clique_edges = spark.range(n_cliques * n_pairs).select(
-        (clique + F.element_at(i_arr, p)).alias("src"),
-        (clique + F.element_at(j_arr, p)).alias("dst"),
-    )
-    # bridge: clique i's max node (i*S + S-1) -> clique i+1's min node
-    bridges = spark.range(n_cliques - 1).select(
-        (F.col("id") * size + (size - 1)).alias("src"),
-        ((F.col("id") + 1) * size).alias("dst"),
-    )
+    edges = clique_chain(spark, n_cliques, size, hub_spokes=hub_spokes)
+    n_pairs = math.comb(size, 2)
     n_nodes = n_cliques * size
-    # hub spokes: fresh node ids attached to node 0
-    spokes = spark.range(hub_spokes).select(
-        F.lit(0).cast("long").alias("src"),
-        (F.col("id") + n_nodes).alias("dst"),
-    )
-    edges = clique_edges.unionByName(bridges).unionByName(spokes)
     n_edges = n_cliques * n_pairs + (n_cliques - 1) + hub_spokes
 
     per_node = math.comb(size - 1, 2)
@@ -92,7 +65,7 @@ def main() -> None:
         and agg["nodes_with_triangles"] == n_nodes
         and agg["corner_total"] == expect_total
     )
-    print(json.dumps({
+    return {
         "metric": "triangle_scale",
         "n_cliques": n_cliques,
         "clique_size": size,
@@ -105,10 +78,8 @@ def main() -> None:
         "elapsed_sec": round(elapsed, 2),
         "edges_per_sec": int(n_edges / elapsed),
         "exact": bool(ok),
-    }))
-    if not ok:
-        raise SystemExit(1)
+    }
 
 
 if __name__ == "__main__":
-    main()
+    run(main, CHECKS)
